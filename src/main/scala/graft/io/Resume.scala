@@ -3,7 +3,9 @@ package graft.io
 import graft.core.Triple
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Resumable partitioned materialization with per-partition lineage +
@@ -67,25 +69,32 @@ object Resume {
     }
   }
 
-  /** Write all not-yet-committed repos of `triples` into `table` in ONE
-    * dynamic-partition-overwrite job (plus one small aggregation pass for
-    * the per-partition counters). Returns the commits performed, sorted
-    * by repo (empty = nothing left to do).
+  /** Write all not-yet-committed repos of `triples` into `table`, then
+    * their manifests. Returns the commits performed, sorted by repo
+    * (empty = nothing left to do).
     *
-    * Two Spark jobs total, independent of repo count — the round-1 shape
-    * (a driver loop re-filtering the full dataset per repo) was 3×|repos|
-    * jobs and each filter was a typed lambda Catalyst couldn't prune.
-    * The committed set is excluded with a broadcast anti-join (the set is
-    * bounded by repo count, not corpus size); the remainder is shuffled
-    * once on `repo` so each task writes exactly one partition directory.
+    * One evaluation of the input and one shuffle, independent of repo
+    * count: the committed set is excluded with a broadcast anti-join (it
+    * is bounded by repo count, not corpus size), and the remainder is
+    * hash-repartitioned on `repo` and persisted. The counters come from
+    * one `mapPartitions` over the persisted frame: each repo sits in
+    * exactly one partition (AQE may coalesce a repartition's partitions
+    * but never splits them), so its `rows` and exact distinct `drugSubj`
+    * are partition-local. The dynamic-overwrite write then reads the same
+    * persisted frame. Inside `foreachBatch` this is the persist-before-
+    * reuse Spark's guide asks of a sink that acts on its batch twice.
     *
-    * Crash contract (unchanged): a manifest entry is written atomically
-    * AFTER the data job completes, so a crash mid-write leaves only
-    * orphan data files in uncommitted partitions, which the next run's
-    * dynamic overwrite replaces — never a half-committed manifest.
-    * Commit granularity is per-run rather than round-1's per-repo: at
-    * 10^5 repos an interrupted run re-does at most one run's worth of
-    * partitions; callers wanting finer units chunk the input upstream.
+    * Triples with a null `repo` have no partition to commit to: they fail
+    * the call with an `IllegalArgumentException` before anything is
+    * written.
+    *
+    * Crash contract: a manifest entry is written atomically AFTER the
+    * data job completes, so a crash mid-write leaves only orphan data
+    * files in uncommitted partitions, which the next run's dynamic
+    * overwrite replaces — never a half-committed manifest. Commit
+    * granularity is per-run: at 10^5 repos an interrupted run re-does at
+    * most one run's worth of partitions; callers wanting finer units
+    * chunk the input upstream.
     */
   def writeResumable(
       spark: SparkSession,
@@ -97,43 +106,66 @@ object Resume {
     val doneDf = spark.createDataset(done.toSeq).toDF("repo")
     val remaining = triples.toDF()
       .join(broadcast(doneDf), Seq("repo"), "left_anti")
-
-    // per-partition counters in one aggregation pass (small result:
-    // one row per new repo)
-    val counters = remaining
-      .groupBy(col("repo"))
-      .agg(count(lit(1)).as("rows"), count_distinct(col("drugSubj")).as("subj"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    if (counters.isEmpty) return Seq.empty
-
-    // dynamic partition overwrite as a PER-WRITE option, never session
-    // conf: inside foreachBatch the frame is bound to a cloned
-    // micro-batch session, where a conf set on the caller's session
-    // does not apply — the old conf-juggling version silently fell back
-    // to full-table overwrite there, wiping earlier repos' partitions
-    // (caught by the StreamOpsSpec kg-stream e2e). The write option
-    // takes precedence over session conf in all contexts.
-    remaining
       .repartition(col("repo"))
-      .write
-      .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("repo")
-      .parquet(table)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val counters = repoCounters(
+        remaining.select("repo", "drugSubj").as[(String, String)].mapPartitions(countRepos).collect())
+      if (counters.isEmpty) return Seq.empty
 
-    Files.createDirectories(manifestDir(table))
-    counters.toSeq.map { case (repo, rows, distinctSubj) =>
-      val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
-      val json =
-        s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
-      val tmp = manifestDir(table).resolve(s".${enc(repo)}.json.tmp")
-      Files.write(tmp, json.getBytes("UTF-8"))
-      Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
-        StandardCopyOption.ATOMIC_MOVE)
-      commit
+      // dynamic partition overwrite as a PER-WRITE option, never session
+      // conf: inside foreachBatch the frame is bound to a cloned
+      // micro-batch session, where a conf set on the caller's session
+      // does not apply — the old conf-juggling version silently fell
+      // back to full-table overwrite there, wiping earlier repos'
+      // partitions (caught by the StreamOpsSpec kg-stream e2e). The
+      // write option takes precedence over session conf in all contexts.
+      remaining.write
+        .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("repo")
+        .parquet(table)
+
+      Files.createDirectories(manifestDir(table))
+      counters.map { case (repo, rows, distinctSubj) =>
+        val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
+        val json =
+          s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
+        val tmp = manifestDir(table).resolve(s".${enc(repo)}.json.tmp")
+        Files.write(tmp, json.getBytes("UTF-8"))
+        Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
+          StandardCopyOption.ATOMIC_MOVE)
+        commit
+      }
+    } finally remaining.unpersist()
+  }
+
+  /** `(repo, rows, distinct non-null drugSubj)` for each repo of one
+    * partition, null repo included.
+    */
+  private def countRepos(it: Iterator[(String, String)]): Iterator[(String, Long, Long)] = {
+    val rows = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+    val subjs = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    it.foreach { case (repo, subj) =>
+      rows(repo) += 1
+      val seen = subjs.getOrElseUpdate(repo, mutable.HashSet.empty)
+      if (subj != null) seen += subj
     }
+    rows.iterator.map { case (repo, n) => (repo, n, subjs(repo).size.toLong) }
+  }
+
+  /** Per-partition counters to per-repo counters sorted by repo. Fails
+    * on null repos, and on a repo counted in two partitions (the frame
+    * was not hash-partitioned by repo, so its counters would be split).
+    */
+  private def repoCounters(perPartition: Array[(String, Long, Long)]): Seq[(String, Long, Long)] = {
+    val nullRows = perPartition.collect { case (null, n, _) => n }.sum
+    require(nullRows == 0, s"$nullRows triples have a null repo; every committed triple needs one")
+    val split = perPartition.groupBy(_._1).collect { case (repo, hits) if hits.length > 1 => repo }
+    if (split.nonEmpty)
+      throw new IllegalStateException(
+        s"repos ${split.toSeq.sorted.mkString(", ")} span several partitions; counters would be split")
+    perPartition.toSeq.sortBy(_._1)
   }
 
   /** Read the committed table back. Partition discovery over the whole

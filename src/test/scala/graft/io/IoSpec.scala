@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.core.{FeatureRow, Mention, Triple}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class IoSpec extends AnyFunSuite {
 
@@ -122,6 +123,79 @@ class IoSpec extends AnyFunSuite {
     val c = Resume.writeResumable(spark, trips("repo-a", "repo-b"), table)
     assert(c.map(_.repo) == Seq("repo-b") && c.head.rows == 5)
     assert(Resume.read(spark, table).count() == 10)
+  }
+
+  private def filesUnder(table: String): Seq[(String, Long)] = {
+    val root = java.nio.file.Paths.get(table)
+    if (!Files.exists(root)) Seq.empty
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (root.relativize(p).toString, Files.getLastModifiedTime(p).toMillis)).toVector.sorted
+      finally walk.close()
+    }
+  }
+
+  test("resume: null-repo triples are rejected before any data file or manifest is written") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val trips = spark.createDataset(
+      (1 to 6).map(i => Triple(s"d$i", "int", "o", s"s$i", "e1", "e2", if (i % 3 == 0) null else "repo-a")))
+    val e = intercept[IllegalArgumentException](Resume.writeResumable(spark, trips, table))
+    assert(e.getMessage.contains("2 triples have a null repo"), e.getMessage)
+    assert(filesUnder(table).isEmpty, s"files written before the rejection: ${filesUnder(table)}")
+    assert(Resume.committedRepos(table).isEmpty)
+  }
+
+  test("resume: one commit evaluates its input exactly once") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val fired = spark.sparkContext.longAccumulator("resume-input-rows")
+    val trips = spark.createDataset(
+      Seq("repo-a", "repo-b", "repo-c").flatMap(r =>
+        (1 to 7).map(i => Triple(s"drug$i", "int", "obj", s"$r.s$i", "e1", "e2", r))))
+      .map { t => fired.add(1); t }
+    val commits = Resume.writeResumable(spark, trips, table)
+    assert(commits.map(_.rows).sum == 21)
+    assert(fired.value == 21L, s"upstream map fired ${fired.value} times for 21 rows")
+  }
+
+  test("resume: manifest counters equal a groupBy/count_distinct oracle under AQE on a skewed input") {
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    import s.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val rng = new scala.util.Random(5)
+    // 2000 rows over 50 repos, repo-00 holding 30% of them; one subject in
+    // nine is null, which count_distinct (and the commit counter) skips
+    val trips = s.createDataset((0 until 2000).map { i =>
+      val repo = if (i % 10 < 3) "repo-00" else f"repo-${1 + rng.nextInt(49)}%02d"
+      val subj = if (rng.nextInt(9) == 0) null else s"drug${rng.nextInt(60)}"
+      Triple(subj, "int", "obj", s"s$i", "e1", "e2", repo)
+    })
+    val oracle = trips.groupBy(col("repo"))
+      .agg(count(lit(1)).as("rows"), count_distinct(col("drugSubj")).as("subj"))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(oracle.length == 50 && oracle.exists(o => o._1 == "repo-00" && o._2 == 600))
+    val commits = Resume.writeResumable(s, trips, table)
+    assert(commits.map(c => (c.repo, c.rows, c.distinctSubj)) == oracle)
+    val manifests = s.read.json(java.nio.file.Paths.get(table, "_graft_commits").toString + "/*.json")
+      .select("repo", "rows", "distinct_subj").as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(manifests == oracle)
+  }
+
+  test("resume: empty and all-committed inputs return no commits and write no files") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    assert(Resume.writeResumable(spark, spark.emptyDataset[Triple], table).isEmpty)
+    assert(filesUnder(table).isEmpty, s"empty input wrote ${filesUnder(table)}")
+    val trips = spark.createDataset((1 to 4).map(i => Triple(s"d$i", "int", "o", s"s$i", "e1", "e2", "repo-a")))
+    assert(Resume.writeResumable(spark, trips, table).map(_.repo) == Seq("repo-a"))
+    val before = filesUnder(table)
+    assert(Resume.writeResumable(spark, trips, table).isEmpty)
+    assert(filesUnder(table) == before, "an all-committed input must not touch the table")
   }
 
   test("codemaps: sorted deterministic ids, PAD=0/UNK=1, idx round-trip") {

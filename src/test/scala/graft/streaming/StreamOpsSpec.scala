@@ -794,15 +794,23 @@ class StreamOpsSpec extends AnyFunSuite {
       Files.move(part, Paths.get(srcDir, s"$repo.parquet"))
     }
 
+    // each micro-batch's commit must evaluate its input once: an upstream
+    // map bumps an accumulator, compared against the batch's row count
+    val evaluations = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
+    val sink = (b: org.apache.spark.sql.Dataset[Triple], id: Long) => {
+      val fired = spark.sparkContext.longAccumulator(s"kg-stream-batch-$id")
+      Resume.writeResumable(spark, b.map { t => fired.add(1); t }, table)
+      evaluations.add((id, fired.value.longValue, b.count()))
+      ()
+    }
+
     def start() = {
       val src = spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       StreamOps.scoreStream(spark, src, models)
         .flatMap(_.triples)
         .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Triple], _: Long) =>
-          Resume.writeResumable(spark, b, table); ()
-        }
+        .foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .start()
     }
@@ -832,9 +840,7 @@ class StreamOpsSpec extends AnyFunSuite {
       StreamOps.scoreStream(spark, src, models)
         .flatMap(_.triples)
         .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Triple], _: Long) =>
-          Resume.writeResumable(spark, b, table); ()
-        }
+        .foreachBatch(sink)
         .option("checkpointLocation", s"$base/ckpt2")
         .start()
     }
@@ -842,6 +848,10 @@ class StreamOpsSpec extends AnyFunSuite {
     q3.stop()
     assert(Resume.read(spark, table).count() == expected.size.toLong,
       "full replay must be a no-op: every repo already committed")
+    assert(!evaluations.isEmpty)
+    evaluations.asScala.foreach { case (id, fired, rows) =>
+      assert(fired == rows, s"micro-batch $id: upstream map fired $fired times for $rows rows")
+    }
     models.destroy()
   }
 
