@@ -46,10 +46,12 @@ object XmlParse {
     *
     * @param repo    partition-key column carried through for output layout
     * @param content full XML text of one `<document>`
-    * @return sentences in document order; malformed XML yields Nil (the
-    *         pipeline surfaces these via a parse-error counter —
-    *         Pipeline.parseCounted — it never fails the job: at 10^12
-    *         files some rows WILL be garbage).
+    * @return sentences in document order; malformed XML (null and empty
+    *         content included) yields Nil. The pipeline's ingest does not
+    *         call this: `Pipeline.parse` and `Pipeline.parseCounted` both
+    *         go through [[parseDocEither]] and count each malformed row —
+    *         a bad row never fails the job (at 10^12 files some rows WILL
+    *         be garbage).
     */
   def parseDoc(repo: String, content: String): Seq[ParsedSentence] =
     parseDocEither(repo, content).getOrElse(Vector.empty)

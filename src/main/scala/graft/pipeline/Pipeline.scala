@@ -3,20 +3,11 @@ package graft.pipeline
 import graft.core._
 import graft.ddi.Relations
 import graft.evaluate.Evaluator
-import graft.kg.{Canonicalize, Triples}
+import graft.kg.Canonicalize
 import graft.ner._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Per-sentence analysis result — everything the narrow pass computes. */
-final case class SentenceAnalysis(
-    repo: String,
-    docId: String,
-    sid: String,
-    toks: Seq[TaggedTok],
-    mentions: Seq[Mention]
-)
 
 /** The end-to-end KG-construction pipeline (SURVEY §3 E1 recast).
   *
@@ -37,32 +28,27 @@ object Pipeline {
     docs.withColumn("content_sha", sha2(col("content"), 256))
 
   /** Verify the sha invariant on a materialized docs table; returns the
-    * number of violating rows (0 = intact).
+    * number of violating rows (0 = intact). Null-safe: a row whose
+    * content or content_sha alone is null violates; both null does not.
     */
   def checkSha(docs: DataFrame): Long =
-    docs.filter(sha2(col("content"), 256) =!= col("content_sha")).count()
+    docs.filter(!(sha2(col("content"), 256) <=> col("content_sha"))).count()
 
-  /** Parse the docs table into sentences. Narrow: mapPartitions over
-    * (repo, content); column pruning pushes the 2-column projection into
-    * the parquet/Iceberg scan.
+  /** Parse the docs table into sentences: [[parseCounted]] with the
+    * malformed-doc counter dropped.
     */
-  def parse(spark: SparkSession, docs: DataFrame): Dataset[ParsedSentence] = {
-    import spark.implicits._
-    docs
-      .select(col("repo"), col("content"))
-      .as[(String, String)]
-      .mapPartitions(_.flatMap { case (repo, content) =>
-        XmlParse.parseDoc(repo, content)
-      })
-  }
+  def parse(spark: SparkSession, docs: DataFrame): Dataset[ParsedSentence] =
+    parseCounted(spark, docs)._1
 
-  /** Permissive scan with a corrupt-row counter: malformed XML never
-    * fails the job; each bad document increments the returned
-    * accumulator and contributes zero sentences. The counter is the
-    * north rule's health metric for the ingest stage — read it AFTER an
-    * action; like all Spark accumulators it is at-least-once under task
-    * retries, which is the right semantic for a health signal (never
-    * under-reports).
+  /** Parse the docs table into sentences, counting corrupt rows. Narrow:
+    * mapPartitions over (repo, content); column pruning pushes the
+    * 2-column projection into the parquet/Iceberg scan. Malformed XML
+    * (null and empty content included) never fails the job; each bad
+    * document increments the returned accumulator and contributes zero
+    * sentences. The counter is the north rule's health metric for the
+    * ingest stage — read it AFTER an action; like all Spark accumulators
+    * it is at-least-once under task retries, which is the right semantic
+    * for a health signal (never under-reports).
     */
   def parseCounted(
       spark: SparkSession,
@@ -113,29 +99,34 @@ object Pipeline {
     }
   }
 
-  /** The fused narrow pass: tokenize, score with the broadcast model,
-    * decode mentions. One `flatMap`-shaped stage, zero shuffle.
+  /** The NER half of the pass for one sentence: tokenize, tag, BIO
+    * decode. The only tokenize→tag→decode loop; returns the tokens too,
+    * so [[score]]'s DDI half reuses them.
     */
-  def analyze(
+  private def tagAndDecode(
+      scorer: MentionScorer,
+      s: ParsedSentence
+  ): (Vector[Tok], Vector[Mention]) = {
+    val toks = Tokenize.tokenize(s.text)
+    val tags = scorer.tagSentence(toks)
+    val tagged =
+      toks.indices.map(i => TaggedTok(toks(i).form, toks(i).start, toks(i).end, tags(i)))
+    (toks, Decode.decode(s.sid, tagged))
+  }
+
+  /** Mentions only: the NER half of [[score]] with a broadcast scorer
+    * and no DDI/canon models. One narrow mapPartitions, zero shuffle.
+    */
+  def mentions(
       spark: SparkSession,
       sents: Dataset[ParsedSentence],
       scorer: Broadcast[MentionScorer]
-  ): Dataset[SentenceAnalysis] = {
+  ): Dataset[Mention] = {
     import spark.implicits._
     sents.mapPartitions { it =>
       val sc = scorer.value
-      it.map { s =>
-        val toks = Tokenize.tokenize(s.text)
-        val tags = sc.tagSentence(toks)
-        val tagged = toks.indices.map(i => TaggedTok(toks(i).form, toks(i).start, toks(i).end, tags(i)))
-        SentenceAnalysis(s.repo, s.docId, s.sid, tagged, Decode.decode(s.sid, tagged))
-      }
+      it.flatMap(s => tagAndDecode(sc, s)._2)
     }
-  }
-
-  def mentions(spark: SparkSession, analyzed: Dataset[SentenceAnalysis]): Dataset[Mention] = {
-    import spark.implicits._
-    analyzed.flatMap(_.mentions)
   }
 
   // ---- evaluation (E3 contract) --------------------------------------
@@ -247,11 +238,7 @@ object Pipeline {
     sents.mapPartitions { it =>
       val m = models.value
       it.map { s =>
-        val toks = Tokenize.tokenize(s.text)
-        val tags = m.scorer.tagSentence(toks)
-        val tagged =
-          toks.indices.map(i => TaggedTok(toks(i).form, toks(i).start, toks(i).end, tags(i)))
-        val ms = Decode.decode(s.sid, tagged)
+        val (toks, ms) = tagAndDecode(m.scorer, s)
 
         val byId = s.entities.iterator.map(e => e.entityId -> e).toMap
         lazy val lcForms = Relations.lowerForms(toks) // shared by the sentence's pairs

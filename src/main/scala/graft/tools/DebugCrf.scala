@@ -66,7 +66,7 @@ object DebugCrf {
       }
       val b = spark.sparkContext.broadcast(scorer)
       def f1On(ds: org.apache.spark.sql.Dataset[graft.core.ParsedSentence]) = {
-        val ms = Pipeline.mentions(spark, Pipeline.analyze(spark, ds, b))
+        val ms = Pipeline.mentions(spark, ds, b)
         val rows = Evaluator.evalRows(spark, Pipeline.goldNer(spark, ds), Pipeline.predNer(spark, ms))
         val c = rows.find(_.kind == "CLASS").get
         val n = rows.find(_.kind == "NOCLASS").get

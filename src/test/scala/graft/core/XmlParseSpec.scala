@@ -74,11 +74,16 @@ class XmlParseSpec extends AnyFunSuite {
     val docs = Seq(
       ("r0", doc),
       ("r0", "<document id='x'><sentence"), // truncated — malformed
+      ("r1", null),                         // null content — malformed
+      ("r1", ""),                           // empty content — malformed
       ("r1", doc)
     ).toDF("repo", "content")
     val (sents, bad) = graft.pipeline.Pipeline.parseCounted(spark, docs)
-    assert(sents.count() == 6) // 3 sentences from each good doc
-    assert(bad.value == 1L, s"expected 1 malformed doc, counter says ${bad.value}")
+    val counted = sents.collect().toSeq
+    assert(counted.length == 6) // 3 sentences from each good doc
+    assert(bad.value == 3L, s"expected 3 malformed docs, counter says ${bad.value}")
+    // the default ingest is the same counting parser, minus the counter
+    assert(graft.pipeline.Pipeline.parse(spark, docs).collect().toSeq == counted)
     // and the Either surface distinguishes failure from legitimately-empty
     assert(XmlParse.parseDocEither("r", "not xml").isLeft)
     assert(XmlParse.parseDocEither("r", doc).toOption.get.nonEmpty)

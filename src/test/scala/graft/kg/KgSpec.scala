@@ -1,7 +1,7 @@
 package graft.kg
 
 import graft.TestSpark
-import graft.core.{Relation, Triple}
+import graft.core.Triple
 import org.scalatest.funsuite.AnyFunSuite
 
 class KgSpec extends AnyFunSuite {
@@ -119,7 +119,7 @@ class KgSpec extends AnyFunSuite {
     assert(plain("warfarin") == 50L)
   }
 
-  test("materialize resolves entity ids to canonicalized surfaces") {
+  test("score resolves entity ids to canonicalized surfaces") {
     val spark = TestSpark.spark
     import spark.implicits._
     val sents = spark.createDataset(Seq(
@@ -127,11 +127,21 @@ class KgSpec extends AnyFunSuite {
         Seq(
           graft.core.GoldSpan("s0.e0", 0, 7, "drug", "Warfarin", "0-7"),
           graft.core.GoldSpan("s0.e1", 24, 30, "brand", "Aspirin", "24-30")),
-        Seq.empty)))
-    val rels = spark.createDataset(Seq(Relation("s0", "s0.e0", "s0.e1", "int")))
+        Seq(graft.core.GoldPairRef("s0.p0", "s0.e0", "s0.e1", ddi = true, Some("int"))))))
     val canon = Map("warfarin" -> "warfarin", "aspirin" -> "aspirin")
-    val t = Triples.materialize(spark, sents, rels, canon).collect()
+    val models = spark.sparkContext.broadcast(
+      graft.pipeline.Pipeline.Models(graft.ner.AllOScorer, KgSpec.IntAlways, canon))
+    val t = graft.pipeline.Pipeline.score(spark, sents, models).collect().flatMap(_.triples)
     assert(t.length == 1)
     assert(t.head == Triple("warfarin", "int", "aspirin", "s0", "s0.e0", "s0.e1", "r0"))
+  }
+}
+
+object KgSpec {
+
+  /** DDI stub: "int" always outscores "none", so every pair is a relation. */
+  object IntAlways extends graft.ner.RawScorer {
+    val classes: Array[String] = Array("int", "none")
+    def scoresRaw(feats: Seq[String]): Array[Double] = Array(100.0, 0.0)
   }
 }

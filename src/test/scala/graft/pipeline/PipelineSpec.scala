@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.TestSpark
 import graft.fixtures.DocGen
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end run on the deterministic synthetic corpus (FIXTURES.md §4):
   * the BASELINE.json quality gate — NER and DDI P/R >= 0.95 on the
@@ -56,6 +57,16 @@ class PipelineSpec extends AnyFunSuite {
     val expect = md.digest(row.getString(0).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     assert(row.getString(1) == expect)
+    // null-safe: a null on one side is a violation, null on both is not
+    import spark.implicits._
+    val good = (row.getString(0), row.getString(1))
+    def violations(rows: (String, String)*): Long =
+      Pipeline.checkSha(rows.toDF("content", "content_sha"))
+    assert(violations(good) == 0L)
+    assert(violations((null, good._2)) == 1L, "content nulled after withSha")
+    assert(violations((good._1 + " ", good._2)) == 1L, "tampered content")
+    assert(violations((good._1, null)) == 1L, "missing content_sha")
+    assert(violations((null, null)) == 0L, "null content with null sha is intact")
   }
 
   test("corpus parses: sentences, entities, pairs all present") {
@@ -95,8 +106,37 @@ class PipelineSpec extends AnyFunSuite {
   test("all-O floor: CustomModel-equivalent yields zero mentions (P=R=F1=0)") {
     import spark.implicits._
     val scorerB = spark.sparkContext.broadcast(graft.ner.AllOScorer: graft.ner.MentionScorer)
-    val ms = Pipeline.mentions(spark, Pipeline.analyze(spark, evalSents.limit(50), scorerB))
+    val ms = Pipeline.mentions(spark, evalSents.limit(50), scorerB)
     assert(ms.count() == 0L)
+  }
+
+  test("mentions-only entry equals score's mentions (hybrid and CRF scorers)") {
+    import spark.implicits._
+    def key(m: graft.core.Mention) = (m.sid, m.start, m.end)
+    for (name <- Seq("hybrid", "crf")) {
+      val models = Pipeline.fit(spark, train, name)
+      val scored = Pipeline.score(spark, evalSents, spark.sparkContext.broadcast(models))
+        .flatMap(_.mentions).collect().sortBy(key).toSeq
+      val ms = Pipeline.mentions(spark, evalSents, spark.sparkContext.broadcast(models.scorer))
+        .collect().sortBy(key).toSeq
+      assert(scored.nonEmpty, s"$name: no mentions on the eval split")
+      assert(ms == scored, s"$name: mentions-only entry diverged from score")
+    }
+  }
+
+  test("one tokenize-tag-decode loop: a single Decode.decode( call site in src/main") {
+    // cwd = project base directory, as in DocsSyncSpec
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main", "scala"))
+    val sites =
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+            .filter(_._1.contains("Decode.decode("))
+            .map { case (_, i) => s"$p:${i + 1}" }
+        }.toList
+      finally walk.close()
+    assert(sites.length == 1, s"expected one Decode.decode( call site, found: $sites")
   }
 
   test("quirk docs survive the full path (parse + tokenize + decode)") {
