@@ -1,6 +1,6 @@
 package graft.ddi
 
-import graft.ner.RawScorer
+import graft.ner.{RawScorer, StrIndex}
 
 /** Multiclass averaged perceptron (Collins 2002, "Discriminative
   * Training Methods for HMMs") — the round-3 DDI pair classifier.
@@ -22,14 +22,33 @@ object Perceptron {
       classes: Array[String],
       weights: Map[String, Array[Double]]
   ) extends RawScorer {
+
+    /** [[weights]] interned: feature -> row of one flat array. Derived
+      * once per model instance; broadcasts keep the map format.
+      */
+    @transient private lazy val index = new StrIndex(weights.keysIterator)
+    @transient private lazy val rows: Array[Double] = {
+      val nc = classes.length
+      val w = new Array[Double](index.size * nc)
+      index.keys.indices.foreach(r => System.arraycopy(weights(index.keys(r)), 0, w, r * nc, nc))
+      w
+    }
+
+    /** Sum of the features' weight rows, in feature order; an unseen
+      * feature contributes nothing.
+      */
     def scoresRaw(feats: Seq[String]): Array[Double] = {
-      val s = new Array[Double](classes.length)
-      feats.foreach { f =>
-        weights.get(f) match {
-          case Some(w) =>
-            var i = 0
-            while (i < s.length) { s(i) += w(i); i += 1 }
-          case None => // unseen feature: no weight, no contribution
+      val nc = classes.length
+      val s = new Array[Double](nc)
+      val ix = index
+      val w = rows
+      val it = feats.iterator
+      while (it.hasNext) {
+        val r = ix.get(it.next())
+        if (r >= 0) {
+          val o = r * nc
+          var i = 0
+          while (i < nc) { s(i) += w(o + i); i += 1 }
         }
       }
       s

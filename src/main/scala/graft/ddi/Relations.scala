@@ -1,7 +1,7 @@
 package graft.ddi
 
 import graft.core.{GoldSpan, ParsedSentence, Relation, Tok}
-import graft.ner.{MnbParams, Train}
+import graft.ner.{MnbParams, StrIndex, Train}
 import graft.core.Tokenize
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -33,14 +33,6 @@ object Relations {
       label: String
   )
 
-  /** Count bucket for the inter-entity token distance. */
-  private def distBucket(n: Int): String =
-    if (n == 0) "0" else if (n <= 3) "1-3" else if (n <= 7) "4-7" else "8+"
-
-  /** Deterministic lexical features for one candidate pair. Tokens are
-    * the sentence's reference tokenization; e1/e2 located by first-span
-    * char offsets.
-    */
   private val NegCues = Set("not", "no", "neither", "nor", "without", "lack", "absence")
 
   // Trigger lexicons per DDI class — the standard dependency-free signal
@@ -72,10 +64,51 @@ object Relations {
   private val IntCues = Set(
     "interact", "interacts", "interaction", "interactions", "interfere",
     "interferes", "interference")
-  private val CueClasses =
-    Seq(("A", AdviseCues), ("E", EffectCues), ("M", MechCues), ("I", IntCues))
+  private val CueClasses = Array(AdviseCues, EffectCues, MechCues, IntCues)
   private val CoordForms = Set("and", "or", ",", ";", "/", "(", ")")
 
+  // per-token cue bits: bit c = member of CueClasses(c)
+  private final val NegBit = 1 << 4
+  private final val CoordBit = 1 << 5
+  /** Every cue word, negation cue and coordination form, interned: one
+    * probe gives a token all its bits.
+    */
+  private val CueWords = new StrIndex(CueClasses.iterator.flatten ++ NegCues ++ CoordForms)
+  private val CueWordBits: Array[Int] = CueWords.keys.map { w =>
+    CueClasses.indices.foldLeft(0)((bits, c) => if (CueClasses(c).contains(w)) bits | 1 << c else bits) |
+      (if (NegCues.contains(w)) NegBit else 0) | (if (CoordForms.contains(w)) CoordBit else 0)
+  }
+  private val CueNames = Array("A", "E", "M", "I")
+  private val Buckets = Array("0", "1-3", "4-7", "8+")
+  private def bucket(n: Int): Int = if (n == 0) 0 else if (n <= 3) 1 else if (n <= 7) 2 else 3
+  private val MidCue = CueNames.map(c => s"m_cue$c=1")
+  private val MidCueDist = CueNames.map(c => Buckets.map(d => s"m_cue${c}_d=$d"))
+  private val WinCue = CueNames.map(c => s"w_cue$c=1")
+  private val SentCue = CueNames.map(c => s"s_cue$c=1")
+  private val NDist = Buckets.map("ndist=" + _)
+  private val NEnts = Buckets.map("nents=" + _)
+
+  /** A sentence's lower-cased token forms plus, computed once on first
+    * use, each token's cue bits (trigger classes, negation, coordination)
+    * and their union over the sentence — what [[pairFeatures]] would
+    * otherwise recompute for each of the sentence's pairs.
+    */
+  final class LowerForms(forms: IndexedSeq[String]) extends IndexedSeq[String] {
+    def apply(i: Int): String = forms(i)
+    def length: Int = forms.length
+
+    lazy val cueBits: Array[Int] = forms.iterator.map { w =>
+      val id = CueWords.get(w)
+      if (id < 0) 0 else CueWordBits(id)
+    }.toArray
+
+    lazy val sentenceBits: Int = cueBits.foldLeft(0)(_ | _)
+  }
+
+  /** Deterministic lexical features for one candidate pair, in a fixed
+    * order. Tokens are the sentence's reference tokenization; e1/e2
+    * located by first-span char offsets.
+    */
   def pairFeatures(
       toks: IndexedSeq[Tok],
       e1: GoldSpan,
@@ -87,10 +120,11 @@ object Relations {
   /** One lower-cased form per token — compute ONCE per sentence and
     * share across its candidate pairs (an enumeration sentence yields
     * O(entities²) pairs; re-lowercasing the whole sentence per pair was
-    * measurable on the fused scoring hot path).
+    * measurable on the fused scoring hot path). The result also carries
+    * the sentence's cue bits.
     */
-  def lowerForms(toks: IndexedSeq[Tok]): IndexedSeq[String] =
-    toks.map(_.form.toLowerCase(java.util.Locale.ROOT))
+  def lowerForms(toks: IndexedSeq[Tok]): LowerForms =
+    new LowerForms(toks.map(_.form.toLowerCase(java.util.Locale.ROOT)))
 
   def pairFeatures(
       toks: IndexedSeq[Tok],
@@ -99,10 +133,31 @@ object Relations {
       e2: GoldSpan,
       otherEnts: Seq[GoldSpan]
   ): Seq[String] = {
+    val forms = lc match {
+      case l: LowerForms => l
+      case other         => new LowerForms(other)
+    }
+    val bits = forms.cueBits
     val (lo, hi) = if (e1.start <= e2.start) (e1, e2) else (e2, e1)
-    val midIdx = toks.indices.filter(i => toks(i).start > lo.end && toks(i).end < hi.start)
-    val befIdx = toks.indices.filter(i => toks(i).end < lo.start).takeRight(3)
-    val aftIdx = toks.indices.filter(i => toks(i).start > hi.end).take(3)
+    // one pass for the three windows, each in token order: every token
+    // strictly between the pair (mid), the last 3 ending before it (bef),
+    // the first 3 starting after it (aft)
+    val mid = new Array[Int](toks.length)
+    var nMid = 0
+    val bef = new Array[Int](3)
+    var nBef = 0
+    val aft = new Array[Int](3)
+    var nAft = 0
+    var i = 0
+    while (i < toks.length) {
+      val t = toks(i)
+      if (t.start > lo.end && t.end < hi.start) { mid(nMid) = i; nMid += 1 }
+      if (t.end < lo.start) {
+        if (nBef == 3) { bef(0) = bef(1); bef(1) = bef(2); bef(2) = i } else { bef(nBef) = i; nBef += 1 }
+      }
+      if (t.start > hi.end && nAft < 3) { aft(nAft) = i; nAft += 1 }
+      i += 1
+    }
     // Feature ablations (DebugDdi + the round-3 python twin, devel
     // typed F1, perceptron model): entity-surface lexemes, etype-pair,
     // cue x etype conjunctions, and 4-token outer windows all
@@ -112,40 +167,44 @@ object Relations {
     // structural buckets below. (Under the earlier generative MNB the
     // optimum differed: bigrams overfit and mid needed a 12-token cap.)
     val b = Vector.newBuilder[String]
-    val midl = midIdx.map(lc)
-    midl.foreach(w => b += ("mid=" + w))
+    var midBits = 0
+    i = 0
+    while (i < nMid) { b += ("mid=" + forms(mid(i))); midBits |= bits(mid(i)); i += 1 }
     // mid bigrams: usable under the discriminative perceptron (they
     // overfit the generative MNB — round-1 ablation); likewise the
     // uncapped mid unigrams (the perceptron down-weights noise the MNB
     // bag needed a 12-token cap to survive: devel 0.616 capped vs
     // 0.623 uncapped, 0.630 with bigrams)
-    var bi = 0
-    while (bi < midl.length - 1) {
-      b += ("mbi=" + midl(bi) + "_" + midl(bi + 1)); bi += 1
-    }
-    befIdx.foreach(i => b += ("bef=" + lc(i)))
-    aftIdx.foreach(i => b += ("aft=" + lc(i)))
-    b += ("ndist=" + distBucket(midIdx.length))
+    i = 0
+    while (i < nMid - 1) { b += ("mbi=" + forms(mid(i)) + "_" + forms(mid(i + 1))); i += 1 }
+    var winBits = 0
+    i = 0
+    while (i < nBef) { b += ("bef=" + forms(bef(i))); winBits |= bits(bef(i)); i += 1 }
+    i = 0
+    while (i < nAft) { b += ("aft=" + forms(aft(i))); winBits |= bits(aft(i)); i += 1 }
+    val d = bucket(nMid)
+    b += NDist(d)
     b += ("e1t=" + lo.etype)
     b += ("e2t=" + hi.etype)
     // negation between the entities flips/voids most interaction cues
-    if (midl.exists(NegCues)) b += "neg=1"
+    if ((midBits & NegBit) != 0) b += "neg=1"
     // other annotated entities strictly between the pair — enumeration
     // sentences ("A, B, C and D were given") produce many false pairs
     val nBetween = otherEnts.count(o =>
       o.entityId != lo.entityId && o.entityId != hi.entityId &&
         o.start > lo.end && o.end < hi.start)
-    b += ("nents=" + distBucket(nBetween))
+    b += NEnts(bucket(nBetween))
     // pair order in text often encodes agent vs patient
     if (e1.start > e2.start) b += "inv=1"
     // class trigger cues at three scopes: between the pair (+ distance
     // conjunction), the 3-token outer windows, the whole sentence
-    val wl = (befIdx ++ aftIdx).map(lc)
-    val d = distBucket(midIdx.length)
-    CueClasses.foreach { case (name, cs) =>
-      if (midl.exists(cs)) { b += s"m_cue$name=1"; b += s"m_cue${name}_d=$d" }
-      if (wl.exists(cs)) b += s"w_cue$name=1"
-      if (lc.exists(cs)) b += s"s_cue$name=1"
+    val sentBits = forms.sentenceBits
+    var c = 0
+    while (c < CueNames.length) {
+      if ((midBits & (1 << c)) != 0) { b += MidCue(c); b += MidCueDist(c)(d) }
+      if ((winBits & (1 << c)) != 0) b += WinCue(c)
+      if ((sentBits & (1 << c)) != 0) b += SentCue(c)
+      c += 1
     }
     // same surface on both sides: 1478 none vs 5 positive in train —
     // also enforced as a hard rule at predict time
@@ -153,9 +212,11 @@ object Relations {
         hi.text.toLowerCase(java.util.Locale.ROOT)) b += "samedrug=1"
     // enumeration shape: every mid token is a conjunction/punct or part
     // of an annotated entity (6914 none vs 273 positive in train)
-    if (midIdx.nonEmpty && midIdx.forall(i =>
-        CoordForms.contains(lc(i)) ||
-          otherEnts.exists(o => toks(i).start >= o.start && toks(i).end <= o.end)))
+    if (nMid > 0 && (0 until nMid).forall { k =>
+        val t = toks(mid(k))
+        (bits(mid(k)) & CoordBit) != 0 ||
+          otherEnts.exists(o => t.start >= o.start && t.end <= o.end)
+      })
       b += "coord=1"
     b.result()
   }
@@ -306,17 +367,16 @@ object Relations {
     if (feats.contains("samedrug=1")) return "none"
     val cs = params.classes
     if (cs.isEmpty) return "none"
+    val g = params.gate("none", margins, DefaultMargin)
     val s = params.scoresRaw(feats)
-    val rejIdx = cs.indexOf("none")
     var best = -1
     var i = 0
     while (i < s.length) {
-      if (i != rejIdx && (best < 0 || s(i) > s(best))) best = i
+      if (i != g.reject && (best < 0 || s(i) > s(best))) best = i
       i += 1
     }
-    if (rejIdx < 0) return cs(best)
-    if (best >= 0 && s(best) - s(rejIdx) > margins.getOrElse(cs(best), DefaultMargin))
-      cs(best)
+    if (g.reject < 0) return cs(best)
+    if (best >= 0 && s(best) - s(g.reject) > g.margins(best)) cs(best)
     else "none"
   }
 

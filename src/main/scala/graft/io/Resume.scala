@@ -3,7 +3,7 @@ package graft.io
 import graft.core.Triple
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -73,20 +73,28 @@ object Resume {
     * their manifests. Returns the commits performed, sorted by repo
     * (empty = nothing left to do).
     *
-    * One evaluation of the input and one shuffle, independent of repo
-    * count: the committed set is excluded with a broadcast anti-join (it
-    * is bounded by repo count, not corpus size), and the remainder is
-    * hash-repartitioned on `repo` and persisted. The counters come from
-    * one `mapPartitions` over the persisted frame: each repo sits in
-    * exactly one partition (AQE may coalesce a repartition's partitions
-    * but never splits them), so its `rows` and exact distinct `drugSubj`
-    * are partition-local. The dynamic-overwrite write then reads the same
-    * persisted frame. Inside `foreachBatch` this is the persist-before-
-    * reuse Spark's guide asks of a sink that acts on its batch twice.
+    * One evaluation of the input in one write, independent of repo
+    * count: rows of committed repos are dropped against a broadcast of
+    * the committed set (bounded by repo count, not corpus size; no
+    * broadcast join, so no job of its own), and the remainder is
+    * hash-repartitioned on `repo` into `defaultParallelism` partitions —
+    * an explicit count, so AQE cannot fold the write into one or two
+    * tasks. The write is the only action: Spark runs it as the shuffle-map
+    * job and the result job, with nothing persisted or collected.
     *
-    * Triples with a null `repo` have no partition to commit to: they fail
-    * the call with an `IllegalArgumentException` before anything is
-    * written.
+    * The counters ride on the write. A pass-through `mapPartitions` in
+    * the write's result stage adds each partition's `(repo, rows,
+    * distinct non-null drugSubj)` to an accumulator. Each repo sits in
+    * exactly one partition, so its counts are partition-local, and they
+    * are exactly-once: Spark merges a result task's accumulator updates
+    * once per partition (a failed or duplicate attempt adds nothing),
+    * which would not hold in a shuffle-map stage. A repo counted in two
+    * partitions fails the call with an `IllegalStateException`.
+    *
+    * Triples with a null `repo` have no partition to commit to: the task
+    * holding them (one task, since they hash alike) counts them and fails,
+    * and the call rethrows that `IllegalArgumentException`. The aborted
+    * write removes its staging files and no manifest is written.
     *
     * Crash contract: a manifest entry is written atomically AFTER the
     * data job completes, so a crash mid-write leaves only orphan data
@@ -103,16 +111,12 @@ object Resume {
   ): Seq[Commit] = {
     import spark.implicits._
     val done = committedRepos(table)
-    val doneDf = spark.createDataset(done.toSeq).toDF("repo")
-    val remaining = triples.toDF()
-      .join(broadcast(doneDf), Seq("repo"), "left_anti")
-      .repartition(col("repo"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val doneBc = if (done.isEmpty) None else Some(spark.sparkContext.broadcast(done))
+    val remaining = doneBc
+      .fold(triples)(bc => triples.filter((t: Triple) => t.repo == null || !bc.value.contains(t.repo)))
+      .repartition(spark.sparkContext.defaultParallelism, col("repo"))
+    val counted = spark.sparkContext.collectionAccumulator[(String, Long, Long)]("repo-counters")
     try {
-      val counters = repoCounters(
-        remaining.select("repo", "drugSubj").as[(String, String)].mapPartitions(countRepos).collect())
-      if (counters.isEmpty) return Seq.empty
-
       // dynamic partition overwrite as a PER-WRITE option, never session
       // conf: inside foreachBatch the frame is bound to a cloned
       // micro-batch session, where a conf set on the caller's session
@@ -120,52 +124,86 @@ object Resume {
       // back to full-table overwrite there, wiping earlier repos'
       // partitions (caught by the StreamOpsSpec kg-stream e2e). The
       // write option takes precedence over session conf in all contexts.
-      remaining.write
+      remaining.mapPartitions(countRepos(counted, _))
+        .write
         .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
         .option("partitionOverwriteMode", "dynamic")
+        // an empty write must leave no file behind
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy("repo")
         .parquet(table)
+    } catch {
+      case e: Exception =>
+        throw causes(e).collectFirst {
+          case n: IllegalArgumentException if n.getMessage != null && n.getMessage.contains(NullRepo) =>
+            new IllegalArgumentException(n.getMessage, e)
+        }.getOrElse(e)
+    } finally doneBc.foreach(_.destroy())
+    val counters = repoCounters(counted.value.asScala.toSeq)
+    if (counters.isEmpty) return Seq.empty
 
-      Files.createDirectories(manifestDir(table))
-      counters.map { case (repo, rows, distinctSubj) =>
-        val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
-        val json =
-          s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
-        val tmp = manifestDir(table).resolve(s".${enc(repo)}.json.tmp")
-        Files.write(tmp, json.getBytes("UTF-8"))
-        Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
-          StandardCopyOption.ATOMIC_MOVE)
-        commit
-      }
-    } finally remaining.unpersist()
-  }
-
-  /** `(repo, rows, distinct non-null drugSubj)` for each repo of one
-    * partition, null repo included.
-    */
-  private def countRepos(it: Iterator[(String, String)]): Iterator[(String, Long, Long)] = {
-    val rows = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-    val subjs = mutable.HashMap.empty[String, mutable.HashSet[String]]
-    it.foreach { case (repo, subj) =>
-      rows(repo) += 1
-      val seen = subjs.getOrElseUpdate(repo, mutable.HashSet.empty)
-      if (subj != null) seen += subj
+    Files.createDirectories(manifestDir(table))
+    counters.map { case (repo, rows, distinctSubj) =>
+      val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
+      val json =
+        s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
+      val tmp = manifestDir(table).resolve(s".${enc(repo)}.json.tmp")
+      Files.write(tmp, json.getBytes("UTF-8"))
+      Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
+        StandardCopyOption.ATOMIC_MOVE)
+      commit
     }
-    rows.iterator.map { case (repo, n) => (repo, n, subjs(repo).size.toLong) }
   }
 
-  /** Per-partition counters to per-repo counters sorted by repo. Fails
-    * on null repos, and on a repo counted in two partitions (the frame
-    * was not hash-partitioned by repo, so its counters would be split).
+  private val NullRepo = "triples have a null repo"
+
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32)
+
+  /** Passes one partition's triples through unchanged, then adds its
+    * `(repo, rows, distinct non-null drugSubj)` per repo to `acc`. A null
+    * repo fails the task once the partition's null-repo rows are counted.
     */
-  private def repoCounters(perPartition: Array[(String, Long, Long)]): Seq[(String, Long, Long)] = {
-    val nullRows = perPartition.collect { case (null, n, _) => n }.sum
-    require(nullRows == 0, s"$nullRows triples have a null repo; every committed triple needs one")
+  private def countRepos(
+      acc: CollectionAccumulator[(String, Long, Long)],
+      it: Iterator[Triple]
+  ): Iterator[Triple] = new Iterator[Triple] {
+    private val rows = mutable.HashMap.empty[String, Long]
+    private val subjs = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    private var reported = false
+
+    def hasNext: Boolean = {
+      val more = it.hasNext
+      if (!more && !reported) {
+        reported = true
+        rows.foreach { case (repo, n) => acc.add((repo, n, subjs(repo).size.toLong)) }
+      }
+      more
+    }
+
+    def next(): Triple = {
+      val t = it.next()
+      if (t.repo == null) {
+        val nulls = 1L + it.count(_.repo == null)
+        throw new IllegalArgumentException(s"$nulls $NullRepo; every committed triple needs one")
+      }
+      rows(t.repo) = rows.getOrElse(t.repo, 0L) + 1
+      val seen = subjs.getOrElseUpdate(t.repo, mutable.HashSet.empty)
+      if (t.drugSubj != null) seen += t.drugSubj
+      t
+    }
+  }
+
+  /** Per-partition counters to per-repo counters sorted by repo. Fails on
+    * a repo counted in two partitions (the frame was not hash-partitioned
+    * by repo, so its counters would be split).
+    */
+  private def repoCounters(perPartition: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] = {
     val split = perPartition.groupBy(_._1).collect { case (repo, hits) if hits.length > 1 => repo }
     if (split.nonEmpty)
       throw new IllegalStateException(
         s"repos ${split.toSeq.sorted.mkString(", ")} span several partitions; counters would be split")
-    perPartition.toSeq.sortBy(_._1)
+    perPartition.sortBy(_._1)
   }
 
   /** Read the committed table back. Partition discovery over the whole

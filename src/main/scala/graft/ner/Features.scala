@@ -63,12 +63,6 @@ object Features {
       .map(t => TaggedTok(t.form, t.start, t.end, getTag(t, spans)))
       .toVector
 
-  /** The MNB feature-dict view (ml/src/models/multinomial_nb.py:61-73):
-    * `key=value` features keep the LAST value per key (dict overwrite);
-    * `BoS` expands to formPrev=BoS + suf3Prev=BoS, `EoS` likewise.
-    * Returned in INSERTION order (= extractFeatures' emission order) —
-    * deterministic, but NOT sorted by key.
-    */
   /** Optionally append a gazetteer-membership feature per token
     * (`gaz=B-drug` / `gaz=I-drug` / `gaz=O` from the longest-match BIO
     * tagging) to the W1 parity features — the standard NER gazetteer
@@ -86,6 +80,12 @@ object Features {
       feats.indices.map(i => feats(i) :+ ("gaz=" + tags(i)))
   }
 
+  /** The MNB feature-dict view (ml/src/models/multinomial_nb.py:61-73):
+    * `key=value` features keep the LAST value per key (dict overwrite);
+    * `BoS` expands to formPrev=BoS + suf3Prev=BoS, `EoS` likewise.
+    * Returned in INSERTION order (= extractFeatures' emission order) —
+    * deterministic, but NOT sorted by key.
+    */
   def toDict(features: Seq[String]): Vector[(String, String)] = {
     val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
     features.foreach { f =>

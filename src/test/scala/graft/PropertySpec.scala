@@ -23,10 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PropertySpec extends AnyFunSuite {
 
   /** Run a Prop with a fixed seed (deterministic CI) and 300 cases. */
-  private def check(prop: Prop): Unit = {
+  private def check(prop: Prop, cases: Int = 300): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default
-        .withMinSuccessfulTests(300)
+        .withMinSuccessfulTests(cases)
         .withInitialSeed(Seed(42L)),
       prop)
     assert(res.passed, res.status.toString)
@@ -118,6 +118,33 @@ class PropertySpec extends AnyFunSuite {
       }
       true
     })
+  }
+
+  test("property: the Treebank scanner equals the regex oracle on DocGen and adversarial text") {
+    import graft.core.{TokenizeRegexOracle, XmlParse}
+    import graft.fixtures.DocGen
+    val docGenText: Gen[String] = Gen.choose(0L, 100000L).map { i =>
+      XmlParse.parseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
+    }
+    val pieces = Seq(
+      "«", "»", "“", "”", "‘", "’", "„", "`", "``", "'", "''", "\"", "--", "---", "...", "..", ".",
+      "(", ")", "[", "]", "{", "}", "<", ">", ";", "@", "#", "$", "%", "&", "*", "?", "!", ":", ",",
+      "can't", "CAN'T", "Can't", "cannot", "CANNOT", "CanNot", "'tis", "'TIS", "'Twas", "d'ye", "D'YE",
+      "wanna", "WANNA", "Wanna", "gimme", "GONNA", "gotta", "Lemme", "mor'n", "don't", "WON'T", "it's",
+      "I'M", "we'll", "THEY'RE", "you've", "he'd", "'s", "n't",
+      "café", "naïve", "Behçet", "l'époque", "Ångström", "Müller's", "𝒜", "😀",
+      // case-folding and line-terminator edge cases of the regex semantics
+      "gımme", "'tiſ", "İ", "\r\n", "\u2028", "\u0085", "\u00a0",
+      "warfarin", "Aspirin", "e.g.", "i.v.", "1", "10", "1,000", "1:2", "5%", "a", "X")
+    val sep = Gen.frequency(6 -> Gen.const(" "), 2 -> Gen.const(""), 1 -> Gen.oneOf("  ", "\t", "\n"))
+    val adversarial: Gen[String] = Gen.choose(1, 14).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.oneOf(pieces), sep)).map(_.map { case (p, s) => p + s }.mkString))
+    check(Prop.forAll(Gen.frequency(1 -> docGenText, 3 -> adversarial)) { txt =>
+      val got = Tokenize.tokenize(txt)
+      val want = TokenizeRegexOracle.tokenize(txt)
+      assert(got == want, s"scanner != oracle on [$txt]")
+      true
+    }, cases = 2500)
   }
 
   test("property: decode never throws and only emits types present in the tags") {

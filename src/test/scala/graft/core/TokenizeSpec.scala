@@ -87,4 +87,25 @@ class TokenizeSpec extends AnyFunSuite {
   test("question/exclamation split") {
     assert(forms("Does it interact? Yes!") == Vector("Does", "it", "interact", "?", "Yes", "!"))
   }
+
+  test("a non-BMP character counts two UTF-16 units in the offsets") {
+    // U+1D49C is one code point but two Java chars: tokens after it sit
+    // one unit further right than Python's code-point offsets would
+    val t = Tokenize.tokenize("\uD835\uDC9C inhibits warfarin.")
+    assert(t == Vector(Tok("\uD835\uDC9C", 0, 1), Tok("inhibits", 3, 10),
+      Tok("warfarin", 12, 19), Tok(".", 20, 20)))
+    assert(TokenizeRegexOracle.tokenize("\uD835\uDC9C inhibits warfarin.") == t)
+  }
+
+  test("scanner equals the regex oracle on quotes, contractions and trailing punctuation") {
+    val cases = Seq(
+      "The \"loading dose\" of warfarin", "\"Quoted\" start", "``Already'' quoted", "«guillemets» and „low“",
+      "it's, e.g., fine.", "Don't: CANNOT; 'tis D'ye WANNA go?!", "a -- b --- c", "end...", "x.)\" ",
+      "Müller's 'x' 'a'", "(a) [b] {c} <d>", "*bold* @home #tag $5 50% A&B", "tab\tsep.\t",
+      "line\u2028end.", "gımme ſome 'tiſ", "''start", " ''inner'' ", "don't ", "can't.'", "")
+    cases.foreach { txt =>
+      assert(Tokenize.tokenize(txt) == TokenizeRegexOracle.tokenize(txt), s"on [$txt]")
+      assert(Tokenize.treebankWords(txt) == TokenizeRegexOracle.treebankWords(txt), s"words on [$txt]")
+    }
+  }
 }

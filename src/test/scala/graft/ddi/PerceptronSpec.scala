@@ -161,4 +161,35 @@ class PerceptronSpec extends AnyFunSuite {
       Array(math.log(0.05), math.log(0.05)))
     assert(Relations.decide(mnb, Seq("f=cue"), Map("effect" -> 0.0)) == "effect")
   }
+
+  test("one-pass pair features and interned decide equal the string-key path (eval split)") {
+    import graft.core.Tokenize
+    import graft.fixtures.DocGen
+    import graft.pipeline.Pipeline
+    val spark = graft.TestSpark.spark
+    val p = Relations.fit(spark, Pipeline.parse(spark, DocGen.corpus(spark, 150, seed = 5L)))
+    val eval = Pipeline.parse(spark, DocGen.corpus(spark, 200, seed = 6L)).collect()
+    val margins = Seq(Relations.DefaultMargins, Map("effect" -> 1.0), Map.empty[String, Double])
+    var pairs = 0
+    eval.foreach { s =>
+      val toks = Tokenize.tokenize(s.text)
+      val lc = Relations.lowerForms(toks)
+      val byId = s.entities.map(e => e.entityId -> e).toMap
+      for (pr <- s.pairs; e1 <- byId.get(pr.e1); e2 <- byId.get(pr.e2)) {
+        val feats = Relations.pairFeatures(toks, lc, e1, e2, s.entities)
+        assert(feats == StringKeyDdi.pairFeatures(toks, lc, e1, e2, s.entities), s"features of ${pr.pairId}")
+        // the raw-forms argument (no precomputed cue bits) takes the same path
+        assert(Relations.pairFeatures(toks, toks.map(_.form), e1, e2, s.entities) ==
+          StringKeyDdi.pairFeatures(toks, toks.map(_.form), e1, e2, s.entities))
+        val withOov = feats ++ Seq("mid=zyxorin", "mbi=qq_rr")
+        for (f <- Seq(feats, withOov)) {
+          assert(p.scoresRaw(f).toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+            StringKeyDdi.scoresRaw(p, f).toSeq.map(java.lang.Double.doubleToRawLongBits))
+          margins.foreach(m => assert(Relations.decide(p, f, m) == StringKeyDdi.decide(p, f, m)))
+        }
+        pairs += 1
+      }
+    }
+    assert(pairs > 200, s"only $pairs pairs checked")
+  }
 }

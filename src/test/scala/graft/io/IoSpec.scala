@@ -198,6 +198,39 @@ class IoSpec extends AnyFunSuite {
     assert(filesUnder(table) == before, "an all-committed input must not touch the table")
   }
 
+  test("resume: a commit is one write (at most 2 Spark jobs) and caches nothing") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    def trips(repos: String*) = spark.createDataset(repos.flatMap(r =>
+      (1 to 5).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Seq[Resume.Commit]): (Seq[Resume.Commit], Int) = {
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      (out, jobs.get)
+    }
+    // other suites in this JVM leave frames cached; start from none
+    spark.catalog.clearCache()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a fresh table, then a second call with committed repos to exclude
+      val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b"), table))
+      assert(first.map(_.repo) == Seq("repo-a", "repo-b"))
+      assert(firstJobs <= 2, s"first commit ran $firstJobs jobs")
+      val (second, secondJobs) =
+        jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b", "repo-c"), table))
+      assert(second.map(_.repo) == Seq("repo-c"))
+      assert(secondJobs <= 2, s"commit after a resume ran $secondJobs jobs")
+      assert(spark.sharedState.cacheManager.isEmpty, "writeResumable left a cached frame behind")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("codemaps: sorted deterministic ids, PAD=0/UNK=1, idx round-trip") {
     import spark.implicits._
     val sents = spark.createDataset(Seq(

@@ -118,4 +118,39 @@ class MnbSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("interned scores and tags equal the string-key path bit for bit (eval split + OOV forms)") {
+    import graft.fixtures.DocGen
+    import graft.pipeline.Pipeline
+    val spark = TestSpark.spark
+    val train = Pipeline.parse(spark, DocGen.corpus(spark, 150, seed = 3L))
+    val (gaz, gazN) = Train.buildGazetteer(spark, train)
+    val p = Train.fitMnb(spark, Pipeline.featureRows(spark, train))
+    val eval = Pipeline.parse(spark, DocGen.corpus(spark, 120, seed = 4L)).collect().map(_.text)
+    val oov = "Zyxorin qqq BoS EoS ÉTAT x=y form=a 𝒜 WARFARIN Warfarin"
+    val texts = eval ++ eval.take(20).map(_ + " " + oov) :+ oov
+    val mnb = new MnbScorer(p)
+    val gs = new GazetteerScorer(gaz, gazN)
+    def bits(s: Array[Double]) = s.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    var positions = 0
+    texts.foreach { txt =>
+      val toks = graft.core.Tokenize.tokenize(txt)
+      val feats = Features.extractFeatures(toks)
+      val ids = p.tokenIds(toks)
+      toks.indices.foreach { k =>
+        val want = bits(StringKeyOracle.scoresRaw(p, feats(k)))
+        assert(bits(p.scoreToken(ids, k)) == want, s"token $k of [$txt]")
+        assert(bits(p.scoresRaw(feats(k))) == want)
+        val dict = Features.toDict(feats(k))
+        assert(bits(p.scores(dict)) == bits(StringKeyOracle.scores(p, dict)))
+        positions += 1
+      }
+      assert(mnb.tagSentence(toks) == StringKeyOracle.mnbTags(p, toks), s"mnb tags of [$txt]")
+      assert(gs.tagSentence(toks) == StringKeyOracle.gazTags(gaz, gazN, toks), s"gazetteer tags of [$txt]")
+      for (m <- Seq(0.0, -2.0, HybridScorer.DefaultMargin, Double.PositiveInfinity))
+        assert(new HybridScorer(gs, mnb, m).tagSentence(toks) ==
+          StringKeyOracle.hybridTags(gaz, gazN, p, m, toks), s"hybrid tags (margin $m) of [$txt]")
+    }
+    assert(positions > 2000, s"only $positions token positions checked")
+  }
 }
