@@ -50,11 +50,17 @@ object Canonicalize {
     * @param edges undirected edges (src, dst); self-loops fine
     * @return (node, component) where component = min node id reachable
     */
-  /** Edge-count threshold below which CC runs as driver-side union-find:
-    * an iterative distributed loop on a tiny graph is pure scheduling
-    * overhead (measured 3.6s for 150 nodes — 6 iterations x 3 jobs),
-    * while union-find is O(E a(E)) in microseconds. Both paths produce
-    * identical (node, min-label) output (property-tested).
+  /** Symmetric-edge budget below which CC runs as driver-side
+    * union-find: an iterative distributed loop on a tiny graph is pure
+    * scheduling overhead (measured 3.6s for 150 nodes — 6 iterations x
+    * 3 jobs), while union-find is O(E a(E)) in microseconds. The local
+    * branch is taken when 2 × (raw edge rows) <= the threshold — an
+    * upper bound on the symmetric, deduplicated edge count, known from
+    * one count of the checkpointed input without symmetrizing it; the
+    * union-find then runs on the raw rows (duplicates, self-loops and
+    * both directions included), so the local branch never shuffles.
+    * Both paths produce identical (node, min-label) output
+    * (property-tested).
     */
   val LocalCcThreshold: Long = 1000000L
 
@@ -102,28 +108,22 @@ object Canonicalize {
       localThreshold: Long
   )(implicit enc: org.apache.spark.sql.Encoder[(T, T)]): DataFrame = {
     import spark.implicits._
-    // NOTE: the union's two branches re-plan the upstream edge
-    // subtree, but their shuffles canonicalize identically so
-    // ReuseExchange shares the expensive part; caching edges first
-    // was measured SLOWER at sf0.1 (cache-write overhead > the
-    // residual recompute) — don't "fix" this again.
-    // Materialized under NORMAL confs: small graphs take the
-    // union-find fast path and should not pay the wide-partition tax
-    // the loop needs (measured ~+0.4s on the sf0.1 catalog when the
-    // guard covered this too).
-    // checkpointed BEFORE the branch decision so the (possibly
-    // expensive) upstream edge computation runs exactly once — a lazy
-    // count here was measured to recompute the whole LSH candidate
-    // pipeline twice (sf1 q26: 69s vs 53s). Materialized under NORMAL
-    // confs so the union-find fast path keeps compact partitions.
-    val sym0 = edgesDf
-      .union(edgesDf.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint()
-
-    val nEdges = sym0.count()
-    if (nEdges <= localThreshold) {
-      return localUnionFind[T](spark, sym0.as[(T, T)].collect())
+    // The raw edges are checkpointed BEFORE the branch decision so the
+    // (possibly expensive) upstream edge computation runs exactly once —
+    // a lazy count here was measured to recompute the whole LSH
+    // candidate pipeline twice (sf1 q26: 69s vs 53s). Materialized under
+    // NORMAL confs so the union-find fast path keeps compact partitions.
+    // Union-find takes duplicates, self-loops and either direction as
+    // they come, so the local branch collects the raw rows; only the
+    // distributed loop symmetrizes and deduplicates (2 × rows bounds the
+    // symmetric edge count, so the local branch never handles more than
+    // `localThreshold` symmetric edges).
+    val raw = edgesDf.localCheckpoint()
+    // a row count of the checkpoint's RDD is one job; Dataset.count
+    // plans an aggregate whose shuffle map stage AQE runs as a second
+    val nRows = raw.queryExecution.toRdd.count()
+    if (2 * nRows <= localThreshold) {
+      return localUnionFind[T](spark, raw.as[(T, T)].collect())
     }
 
     // Distributed branch: AQE partition coalescing is DISABLED for the
@@ -134,20 +134,22 @@ object Canonicalize {
     // 53-60s with coalescing vs 47-48s without; the effect bites
     // HARDER the narrower the keys (narrower keys = fewer shuffle
     // bytes = more aggressive under-partitioning). The guard also
-    // covers the edge frame's materialization below — its checkpoint
-    // partitioning caps every iteration's map-side width. first-in
+    // covers the symmetric edge frame's materialization below. first-in
     // saves / last-out restores per session: overlapping CC calls must
     // not restore each other's intermediate "false"; unrelated queries
     // planned while a CC runs see coalescing off — harmless for
     // correctness.
     ccConfEnter(spark)
     try {
-      // re-spread the checkpointed edge frame to full shuffle width:
-      // its (possibly AQE-coalesced) checkpoint partitioning would cap
-      // every iteration's map-side width otherwise; one cheap extra
-      // shuffle of the edge set, paid only on the big-graph branch
-      val sym = sym0
+      // symmetrized, spread to full shuffle width on `src` (the raw
+      // checkpoint's possibly AQE-coalesced partitioning would cap every
+      // iteration's map-side width) and deduplicated in the same
+      // exchange: hash partitioning on src satisfies the distinct's
+      // (src, dst) clustering, so this is one shuffle of the edge set
+      val sym = raw
+        .union(raw.select($"dst".as("src"), $"src".as("dst")))
         .repartition(spark.sessionState.conf.numShufflePartitions, $"src")
+        .distinct()
         .localCheckpoint()
 
       var labels = sym
@@ -199,12 +201,12 @@ object Canonicalize {
       if (!converged)
         throw new IllegalStateException(
           s"connected components did not converge after $maxIter iterations " +
-            s"($nEdges symmetric edges); labels would be incorrect — raise maxIter")
+            s"($nRows edge rows); labels would be incorrect — raise maxIter")
       // operational breadcrumb: iteration count is the O(log diameter)
       // claim made observable (driver-side log, once per CC call)
       lastIterations = iter
       org.slf4j.LoggerFactory.getLogger("graft.kg.Canonicalize")
-        .info(s"connected components converged after $iter iterations ($nEdges symmetric edges)")
+        .info(s"connected components converged after $iter iterations ($nRows edge rows)")
       labels
     } finally ccConfExit(spark)
   }
@@ -243,14 +245,14 @@ object Canonicalize {
   }
 
   /** Small-graph fast path: [[UnionFind.minLabels]] on the collected
-    * symmetric edge set (identical contract to the distributed loop:
+    * raw edge rows (identical contract to the distributed loop:
     * lexicographic min for strings, numeric min for longs).
     */
   private def localUnionFind[T: Ordering](
       spark: SparkSession,
-      sym: Array[(T, T)]
+      edges: Array[(T, T)]
   )(implicit enc: org.apache.spark.sql.Encoder[(T, T)]): DataFrame =
-    spark.createDataset(UnionFind.minLabels(Nil, sym).toSeq)
+    spark.createDataset(UnionFind.minLabels(Nil, edges).toSeq)
       .toDF("node", "comp")
 
   /** Map each distinct surface to its canonical name: build the

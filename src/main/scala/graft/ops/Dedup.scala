@@ -85,8 +85,11 @@ object Dedup {
 
   /** Mega-buckets hit by the first action on the frame returned by the
     * LAST [[lshCandidates]]/[[simhashNearDup]] call of `op`
-    * ("lsh" | "simhash") in this JVM. Exact under stage retries /
-    * speculation / repeated actions (observe-based, see
+    * ("lsh" | "simhash") in this JVM; a default-path
+    * [[nearDupClusters]] call counts as "lsh" and acts inside the call
+    * (its CC checkpoints the edges), so its count is ready on return.
+    * Exact under stage retries / speculation / repeated actions
+    * (observe-based, see
     * [[megaObsRegistry]]). Observed metrics arrive via an async
     * listener, so this waits up to 5 s for them after an action (the
     * budget covers a loaded host's listener-bus lag without stalling a
@@ -620,30 +623,9 @@ object Dedup {
       .toDF("doc_id", "shingle")
   }
 
-  /** Typed md5 band-minimum pass: one row per doc carrying ALL `bands`
-    * band minimums, computed row-locally — the round-8 replacement for
-    * the shingleRows → 8-hash-column projection → groupBy(doc_id) min
-    * aggregation (which shuffled one combined row per doc and paid the
-    * codegen'd md5+conv chain per (shingle, digest)). A document's
-    * shingles all live in its own text, so the minimums never needed an
-    * aggregation at all; this pass removes q15's only Exchange and cuts
-    * its constant ~3× (BenchOne sf0.1 A/B in OPTIMIZATION_r08.md).
-    *
-    * Band-value contract (spec-gated against an independent string
-    * parse replay, and still exactly what the DuckDB oracle computes
-    * with ('0x' || substr(md5(...), pos, 15))::BIGINT): band b = the
-    * 15-hex-char window `1 + 15*(b%2) .. +15` of md5(shingle + "#" +
-    * b/2), parsed base-16 into a 60-bit long — one digest feeds two
-    * bands. The parse here is byte-level (no hex string is built):
-    * window 0 = digest bytes 0..6 big-endian then the high nibble of
-    * byte 7; window 1 = the low nibble of byte 7 then bytes 8..14.
-    * Duplicate shingle occurrences cannot change a minimum, so the
-    * per-doc distinct set is hashed once (same dedup as shingleRows).
-    */
   /** The distinct k-token space-joined windows of one tokenized doc —
-    * the shared typed shingle-set builder behind [[md5BandMins]] and
-    * [[ngramJaccard]] (the row-emitting sibling is [[shingleRows]];
-    * keep the window semantics in ONE place). Caller guards
+    * the typed shingle-set builder behind [[ngramJaccard]] (the
+    * row-emitting sibling is [[shingleRows]]). Caller guards
     * `toks.length >= k`.
     */
   private def distinctShingles(toks: Array[String], k: Int): java.util.HashSet[String] = {
@@ -663,50 +645,110 @@ object Dedup {
     seen
   }
 
+  /** Per-document md5 band minimums, allocation-free per shingle — the
+    * kernel of [[md5BandMins]] (one instance per task: it owns a
+    * `MessageDigest` and scratch buffers and is not thread-safe;
+    * `k >= 1`).
+    *
+    * Band-value contract (spec-gated against the string-building
+    * `Md5BandMinsOracle` in src/test and an independent hex-string
+    * replay, and exactly what the DuckDB oracle computes with
+    * ('0x' || substr(md5(...), pos, 15))::BIGINT): over the word
+    * k-shingles of `text.split(" ", -1)` joined by single spaces, band b
+    * = the minimum of the 15-hex-char window `1 + 15*(b%2) .. +15` of
+    * md5(shingle + "#" + b/2), parsed base-16 into a 60-bit long — one
+    * digest feeds two bands. The parse is byte-level: window 0 = digest
+    * bytes 0..6 big-endian then the high nibble of byte 7; window 1 =
+    * the low nibble of byte 7 then bytes 8..14.
+    *
+    * How it avoids per-shingle objects: the text is encoded to UTF-8
+    * once, and a shingle is then a byte range of that array — the
+    * space-joined tokens i..i+k-1 are exactly the bytes from the start
+    * of token i to the end of token i+k-1, because tokens are split on
+    * the single byte 0x20, which never occurs inside a multi-byte UTF-8
+    * sequence, and a window boundary never splits a surrogate pair (a
+    * lone surrogate encodes to '?' either way). Each range is hashed
+    * with `update(bytes, from, len)`, a precomputed "#" + b/2 suffix and
+    * `digest(out, 0, 16)`. Repeated shingles are hashed again instead
+    * of being deduplicated: a minimum does not change.
+    */
+  private[ops] final class Md5BandKernel(bands: Int, k: Int) {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    private val nDigests = (bands + 1) / 2
+    private val suffixes =
+      Array.tabulate(nDigests)(bi => ("#" + bi).getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    private val d = new Array[Byte](16)
+    // bounds(t) = byte index of the space before token t (-1 for t = 0);
+    // bounds(nTok) = the text's byte length
+    private var bounds = new Array[Int](64)
+
+    /** The `bands` minimums of `text`, or null when it is null or has
+      * fewer than `k` tokens (no shingle: the doc has no signature).
+      */
+    def apply(text: String): Array[Long] = {
+      if (text == null) return null
+      val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var nTok = 1
+      bounds(0) = -1
+      var i = 0
+      while (i < bytes.length) {
+        if (bytes(i) == 0x20) {
+          if (nTok + 1 >= bounds.length) bounds = java.util.Arrays.copyOf(bounds, bounds.length * 2)
+          bounds(nTok) = i
+          nTok += 1
+        }
+        i += 1
+      }
+      bounds(nTok) = bytes.length
+      if (nTok < k) return null
+      val mins = Array.fill(bands)(Long.MaxValue)
+      var w = 0
+      while (w <= nTok - k) {
+        val from = bounds(w) + 1
+        val len = bounds(w + k) - from
+        var bi = 0
+        while (bi < nDigests) {
+          md.update(bytes, from, len)
+          md.update(suffixes(bi))
+          md.digest(d, 0, 16)
+          var v0 = 0L
+          var x = 0
+          while (x < 7) { v0 = (v0 << 8) | (d(x) & 0xffL); x += 1 }
+          v0 = (v0 << 4) | ((d(7) >> 4) & 0xfL)
+          val b0 = 2 * bi
+          if (v0 < mins(b0)) mins(b0) = v0
+          val b1 = b0 + 1
+          if (b1 < bands) {
+            var v1 = d(7) & 0xfL
+            x = 8
+            while (x < 15) { v1 = (v1 << 8) | (d(x) & 0xffL); x += 1 }
+            if (v1 < mins(b1)) mins(b1) = v1
+          }
+          bi += 1
+        }
+        w += 1
+      }
+      mins
+    }
+  }
+
+  /** Typed md5 band-minimum pass: one row per doc carrying ALL `bands`
+    * band minimums ([[Md5BandKernel]]), computed row-locally — a
+    * document's shingles all live in its own text, so the minimums need
+    * no aggregation and q15 plans with zero Exchange (PlanSpec).
+    */
   private def md5BandMins(docs: DataFrame, bands: Int, k: Int): DataFrame = {
+    require(k >= 1, s"shingle width must be >= 1 token, got $k")
     val spark = docs.sparkSession
     import spark.implicits._
     docs
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val nDigests = (bands + 1) / 2
+        val kernel = new Md5BandKernel(bands, k)
         rows.flatMap { case (id, text) =>
-          // null text == no shingles (shingleRows' convention): absent
-          val toks = if (text == null) null else text.split(" ", -1)
-          if (toks == null || toks.length < k) Iterator.empty
-          else {
-            val mins = Array.fill(bands)(Long.MaxValue)
-            val it = distinctShingles(toks, k).iterator()
-            while (it.hasNext) {
-              val sb = new java.lang.StringBuilder(it.next())
-              val baseLen = sb.length
-              var bi = 0
-              while (bi < nDigests) {
-                sb.setLength(baseLen)
-                sb.append('#').append(bi)
-                md.reset()
-                val d = md.digest(
-                  sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                var v0 = 0L
-                var x = 0
-                while (x < 7) { v0 = (v0 << 8) | (d(x) & 0xffL); x += 1 }
-                v0 = (v0 << 4) | ((d(7) >> 4) & 0xfL)
-                val b0 = 2 * bi
-                if (v0 < mins(b0)) mins(b0) = v0
-                val b1 = b0 + 1
-                if (b1 < bands) {
-                  var v1 = d(7) & 0xfL
-                  x = 8
-                  while (x < 15) { v1 = (v1 << 8) | (d(x) & 0xffL); x += 1 }
-                  if (v1 < mins(b1)) mins(b1) = v1
-                }
-                bi += 1
-              }
-            }
-            Iterator.single((id, mins))
-          }
+          val mins = kernel(text)
+          if (mins == null) Iterator.empty else Iterator.single((id, mins))
         }
       }
       .toDF("doc_id", "mins")
@@ -911,7 +953,7 @@ object Dedup {
     * keep" = `cluster_id = doc_id`.
     *
     * Scale posture: the only data-sized shuffles are the LSH bucket
-    * self-join and the CC label propagation (both keyed, both bounded
+    * shuffle and the CC label propagation (both keyed, both bounded
     * by near-dup graph size — a tiny fraction of the corpus); since
     * round 4 the CC runs LONG-KEYED (8-byte shuffle keys instead of the
     * former 19-char zero-padded strings — ~2.4× less key volume), with
@@ -919,28 +961,29 @@ object Dedup {
     * lexicographic min the DuckDB oracle computes over its own
     * zero-padded replay.
     *
-    * Mega-bucket caveat: at the default `minBands = 1` the guard's
-    * degradation preserves components exactly (every member stays
-    * hub-connected); with `minBands >= 2`, identical-doc edges keep
-    * full band support since round 5 (fp-group collapse,
-    * [[lshBucketPairs]]) and only cross-group mega edges can lose
-    * support — watch [[megaBucketCount]]("lsh") when raising
-    * `minBands`.
+    * Edge generation at `minBands = 1` ([[nearDupEdges]]): every
+    * in-bucket pair is an edge (the >= 1 filter is vacuous), and a
+    * bucket's pair set is a CLIQUE — whose connected components are
+    * exactly those of the bucket's min-id STAR. So the CC input is one
+    * constant-width `(hub, member)` row per non-hub bucket member, with
+    * `hub = min(doc_id)` taken by a window over the `(band, sig)`
+    * bucket: one Exchange and a sort on the bucket key, the signature
+    * stream evaluated once, and no row — and no aggregation buffer —
+    * that grows with bucket size (the window buffers a bucket in a
+    * spillable row array). `minBands >= 2` callers (q52's strict bar)
+    * keep the counted-pair path, where band support is semantic.
     *
-    * Round-8 edge generation at `minBands = 1`: every in-bucket pair is
-    * an edge (the >= 1 filter is vacuous), and a bucket's pair set is a
-    * CLIQUE — whose connected components are exactly those of the
-    * bucket's min-id STAR. So the CC input is built as one star edge
-    * per non-hub bucket member instead of the O(bucket²) pair listing:
-    * at sf1 this shrank the q26 edge frame from 7.6M pair rows (plus
-    * their n_shared_bands aggregation) to Σ bucket star rows and the
-    * whole q26/q37 tail with it. Components are provably identical
-    * (clique ↔ star span the same vertex set; the mega-guard's degraded
-    * pair set is itself star-shaped and component-equal — the round-5
-    * property spec), and the O(bucket) output means the quadratic
-    * mega-bucket guard has nothing to guard on this path. `minBands >=
-    * 2` callers (q52's strict bar) keep the counted-pair path, where
-    * band support is semantic.
+    * Mega-bucket caveat: the default path's star is O(bucket) for any
+    * bucket, so it never degrades; it still counts buckets larger than
+    * [[DefaultMaxBucket]] (one count per bucket, on its hub row — a
+    * bucket whose hub doc_id appears in several input rows counts once
+    * per such row) into the same action-scoped observation as
+    * [[lshCandidates]]: read [[megaBucketCount]]("lsh") after the call —
+    * a nonzero count names a corpus that wants
+    * [[nearDupClustersCollapsed]]. With `minBands >= 2` the count comes
+    * from [[lshCandidates]], whose degradation keeps identical-doc edges
+    * at full band support (fp-group collapse, [[lshBucketPairs]]) and
+    * only cross-group mega edges can lose support.
     */
   def nearDupClusters(
       spark: org.apache.spark.sql.SparkSession,
@@ -949,29 +992,45 @@ object Dedup {
       k: Int = 3,
       minBands: Int = 1
   ): DataFrame = {
-    import spark.implicits._
-    val edges =
-      if (minBands <= 1)
-        minhashWith(docs, bands, k, fast = false)
-          .groupBy(col("band"), col("sig"))
-          .agg(collect_list(col("doc_id")).as("members"))
-          .filter(size(col("members")) > 1)
-          .select(col("members"))
-          .as[Seq[Long]]
-          .flatMap { ms =>
-            val hub = ms.min
-            ms.iterator.filter(_ != hub).map(m => (hub, m))
-          }
-      else
-        lshCandidates(docs, bands, k)
-          .filter(col("n_shared_bands") >= minBands)
-          .select(col("doc_a"), col("doc_b"))
-          .as[(Long, Long)]
-    val cc = graft.kg.Canonicalize.connectedComponentsLong(spark, edges)
+    val cc = graft.kg.Canonicalize
+      .connectedComponentsLong(spark, nearDupEdges(docs, bands, k, minBands))
       .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
     docs.select(col("doc_id"))
       .join(cc, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
+  }
+
+  /** The duplicate-graph edges [[nearDupClusters]] runs CC over:
+    * `(hub, member)` bucket stars at `minBands <= 1`, counted LSH pairs
+    * with at least `minBands` shared bands otherwise (package-visible so
+    * plan specs can inspect the edge path, which CC checkpoints away).
+    */
+  private[graft] def nearDupEdges(
+      docs: DataFrame,
+      bands: Int,
+      k: Int,
+      minBands: Int
+  ): org.apache.spark.sql.Dataset[(Long, Long)] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    if (minBands <= 1) {
+      val bucket = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("sig"))
+      minhashWith(docs, bands, k, fast = false)
+        .select(
+          min(col("doc_id")).over(bucket).as("hub"),
+          col("doc_id"),
+          count(col("doc_id")).over(bucket).as("n"))
+        .observe(
+          megaObservation("lsh", None),
+          megaMetric(when(col("doc_id") === col("hub"), col("n")), DefaultMaxBucket))
+        .filter(col("doc_id") =!= col("hub"))
+        .select(col("hub"), col("doc_id"))
+        .as[(Long, Long)]
+    } else
+      lshCandidates(docs, bands, k)
+        .filter(col("n_shared_bands") >= minBands)
+        .select(col("doc_a"), col("doc_b"))
+        .as[(Long, Long)]
   }
 
   /** [[nearDupClusters]] with the exact-dedup PRE-COLLAPSE the

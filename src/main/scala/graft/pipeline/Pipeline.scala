@@ -240,28 +240,32 @@ object Pipeline {
       it.map { s =>
         val (toks, ms) = tagAndDecode(m.scorer, s)
 
-        val byId = s.entities.iterator.map(e => e.entityId -> e).toMap
-        lazy val lcForms = Relations.lowerForms(toks) // shared by the sentence's pairs
-        val rels = s.pairs.flatMap { p =>
-          for {
-            e1 <- byId.get(p.e1)
-            e2 <- byId.get(p.e2)
-            feats = Relations.pairFeatures(toks, lcForms, e1, e2, s.entities)
-            dtype = Relations.decide(m.ddi, feats)
-            if dtype != "none"
-          } yield Relation(s.sid, p.e1, p.e2, dtype)
-        }
-        def canonOf(t: String): String = {
-          val lc = t.toLowerCase(java.util.Locale.ROOT).trim
-          m.canon.getOrElse(lc, lc)
-        }
-        val trips = rels.map { r =>
-          Triple(
-            canonOf(byId(r.e1).text),
-            r.dtype,
-            canonOf(byId(r.e2).text),
-            s.sid, r.e1, r.e2, s.repo
-          )
+        // a sentence without candidate pairs (most of them) needs
+        // neither the entity map nor the lower-cased forms
+        val trips = if (s.pairs.isEmpty) Seq.empty[Triple] else {
+          val byId = s.entities.iterator.map(e => e.entityId -> e).toMap
+          lazy val lcForms = Relations.lowerForms(toks) // shared by the sentence's pairs
+          val rels = s.pairs.flatMap { p =>
+            for {
+              e1 <- byId.get(p.e1)
+              e2 <- byId.get(p.e2)
+              feats = Relations.pairFeatures(toks, lcForms, e1, e2, s.entities)
+              dtype = Relations.decide(m.ddi, feats)
+              if dtype != "none"
+            } yield Relation(s.sid, p.e1, p.e2, dtype)
+          }
+          def canonOf(t: String): String = {
+            val lc = t.toLowerCase(java.util.Locale.ROOT).trim
+            m.canon.getOrElse(lc, lc)
+          }
+          rels.map { r =>
+            Triple(
+              canonOf(byId(r.e1).text),
+              r.dtype,
+              canonOf(byId(r.e2).text),
+              s.sid, r.e1, r.e2, s.repo
+            )
+          }
         }
         SentenceResult(s.repo, s.docId, s.sid, ms, trips)
       }

@@ -89,6 +89,44 @@ class KgSpec extends AnyFunSuite {
     }
   }
 
+  test("CC: raw edges with duplicates, self-loops and both directions — local == distributed, few jobs") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val base = Seq.fill(150)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+    // every edge twice, half of them reversed as well, plus self-loops
+    // (one on an isolated node 500)
+    val raw = base ++ base ++ base.take(75).map(_.swap) ++ Seq((3L, 3L), (500L, 500L))
+    val eLong = spark.createDataset(raw)
+    val eStr = spark.createDataset(raw.map { case (a, b) => (f"$a%019d", f"$b%019d") })
+    def longs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def strs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0).toLong, r.getString(1).toLong)).toSet
+    val want = UnionFind.minLabels(Nil, raw).toSet
+    assert(longs(Canonicalize.connectedComponentsLong(spark, eLong)) == want)
+    assert(longs(Canonicalize.connectedComponentsLong(spark, eLong, localThreshold = 0)) == want)
+    assert(strs(Canonicalize.connectedComponents(spark, eStr)) == want)
+    assert(strs(Canonicalize.connectedComponents(spark, eStr, localThreshold = 0)) == want)
+    assert(want((500L, 500L)) && want.map(_._2).size > 2, s"vacuous fixture: $want")
+
+    // the local branch checkpoints, counts and collects the raw rows: 3
+    // jobs and no shuffle (under AQE a shuffle map stage is a job of its
+    // own, so a symmetrizing distinct or a Dataset.count would add one)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Canonicalize.connectedComponentsLong(spark, eLong)
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      assert(jobs.get <= 3, s"local-branch CC ran ${jobs.get} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("canonicalMap: hyphen/plural/case variants collapse to one canonical") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -18,14 +18,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *      of the degraded pair set equal those of the full O(bucket²)
   *      generation.
   *
+  * Also: the md5 band kernel ([[Dedup.Md5BandKernel]]) equals the
+  * string-building [[Md5BandMinsOracle]] on generated text.
+  *
   * Lives in graft.ops (not PropertySpec) for private[ops] access.
   */
 class DedupPropertySpec extends AnyFunSuite {
 
-  private def check(prop: Prop): Unit = {
+  private def check(prop: Prop, cases: Int = 300): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default
-        .withMinSuccessfulTests(300)
+        .withMinSuccessfulTests(cases)
         .withInitialSeed(Seed(42L)),
       prop)
     assert(res.passed, res.status.toString)
@@ -109,5 +112,47 @@ class DedupPropertySpec extends AnyFunSuite {
       val compsOk = compsOf(degraded) == compsOf(full)
       valid && unique && superset && compsOk
     })
+  }
+
+  test("property: the allocation-free md5 band kernel equals the string-building oracle") {
+    import graft.core.XmlParse
+    import graft.fixtures.DocGen
+    val docGenText: Gen[String] = Gen.choose(0L, 100000L).map { i =>
+      XmlParse.parseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
+    }
+    // "x" * 56 and "é" * 30 are single tokens over 55 UTF-8 bytes, so a
+    // window holding one needs two MD5 blocks; U+D800, U+DC00 and the
+    // high surrogate U+D83D without its pair are lone surrogates, which
+    // encode to '?' in UTF-8
+    val pieces = Seq(
+      "warfarin", "aspirin", "a", "", "#", "#0", "café", "naïve", "Ångström", "ß", "İ",
+      "𝒜", "😀", "😀" * 15, "\ud800", "\udc00", "a\ud83dz", "\ud83d", "x" * 56, "é" * 30,
+      "\t", "\n", "\u00a0")
+    val sep = Gen.frequency(6 -> Gen.const(" "), 2 -> Gen.const("  "), 1 -> Gen.const("   "), 1 -> Gen.const(""))
+    val adversarial: Gen[String] = for {
+      n <- Gen.choose(0, 12)
+      lead <- Gen.oneOf("", " ", "  ")
+      trail <- Gen.oneOf("", " ", "  ")
+      parts <- Gen.listOfN(n, Gen.zip(Gen.oneOf(pieces), sep))
+    } yield lead + parts.map { case (p, s) => p + s }.mkString + trail
+    val gen = for {
+      text <- Gen.frequency(
+        2 -> docGenText, 6 -> adversarial, 1 -> Gen.oneOf("", " ", "  ", "a", "a b", null))
+      bands <- Gen.oneOf(1, 2, 7, 8, 16)
+      k <- Gen.oneOf(1, 3, 5)
+    } yield (text, bands, k)
+    // one kernel per shape, reused across cases as a task reuses it
+    // across rows, so stale scratch state would show
+    val kernels = scala.collection.mutable.Map.empty[(Int, Int), Dedup.Md5BandKernel]
+    check(Prop.forAll(gen) { case (text, bands, k) =>
+      val got = kernels.getOrElseUpdate((bands, k), new Dedup.Md5BandKernel(bands, k))(text)
+      val want = Md5BandMinsOracle.bandMins(text, bands, k)
+      val same =
+        if (want == null) got == null
+        else got != null && got.sameElements(want)
+      assert(same, s"kernel != oracle (bands=$bands, k=$k) on [$text]: " +
+        s"${Option(got).map(_.mkString(","))} vs ${Option(want).map(_.mkString(","))}")
+      true
+    }, cases = 2500)
   }
 }

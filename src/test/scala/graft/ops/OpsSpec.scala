@@ -709,6 +709,27 @@ class OpsSpec extends AnyFunSuite {
     assert(Dedup.megaBucketCount("simhash") == 4L, "all 4 simhash bands counted")
   }
 
+  test("nearDupClusters default path counts mega buckets, one per bucket, through megaBucketCount") {
+    // the window that picks each bucket's hub also sees its size: a
+    // planted bucket above DefaultMaxBucket (identical texts, one bucket
+    // per band) must be counted once per band bucket, not per member
+    val n = Dedup.DefaultMaxBucket + 904L
+    val hot = spark.range(1, n + 1)
+      .select(col("id").as("doc_id"), lit("w1 w2 w3 w4 w5 w6").as("text"))
+    val cold = docs((n + 1, "a b c d e f"), (n + 2, "a b c d e f"), (n + 3, "p q r s t u"))
+    // reset the "lsh" registry entry to a known 0 first
+    Dedup.lshCandidates(cold).collect()
+    assert(Dedup.megaBucketCount("lsh") == 0L)
+    val clusters = Dedup.nearDupClusters(spark, hot.union(cold))
+    assert(Dedup.megaBucketCount("lsh") == 8L, "all 8 band buckets counted as mega, once each")
+    val r = clusters.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(r.size == n + 3 && (1L to n).forall(r(_) == 1L), "the hot bucket is one cluster")
+    assert(r(n + 2) == n + 1 && r(n + 3) == n + 3)
+    // a corpus without mega buckets reads 0 on the same path
+    Dedup.nearDupClusters(spark, cold).collect()
+    assert(Dedup.megaBucketCount("lsh") == 0L)
+  }
+
   test("nearDupClusters star edges == counted-pair edges' components (randomized)") {
     // the round-8 minBands=1 edge generation builds one min-id star per
     // bucket instead of the O(bucket²) pair listing; this replays the

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.TestSpark
 import graft.SparkEntry
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions (SURVEY §4): the scale-critical
@@ -46,6 +47,53 @@ class PlanSpec extends AnyFunSuite {
     // the corpus-wide signature shuffle.
     val plan = planOf(SparkEntry.queries("q15_minhash_sig")(spark, sf))
     assert(!plan.contains("Exchange"), "minhash signatures must not shuffle:\n" + plan)
+  }
+
+  test("nearDupClusters default edge path: window hub, no collect_list, no ObjectHashAggregate") {
+    // the (hub, member) stars come from a window-min over the (band, sig)
+    // bucket: one Exchange, constant-width rows, and the mega-bucket
+    // observation on the same frame — a bucket-wide collect_list row (and
+    // the ObjectHashAggregate that builds it) must not come back
+    import spark.implicits._
+    val d = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v")).toDF("doc_id", "text")
+    val plan = planOf(graft.ops.Dedup.nearDupEdges(d, 8, 3, 1).toDF())
+    assert(!plan.contains("collect_list"), plan)
+    assert(!plan.contains("ObjectHashAggregate"), plan)
+    assert(plan.contains("Window") && plan.contains("CollectMetrics"), plan)
+    assert("Exchange".r.findAllIn(plan).length == 1, plan)
+  }
+
+  test("nearDupClusters evaluates the signature stream once per input row") {
+    // md5 runs where the text is read: a counting UDF on `text` fires
+    // once per row when the hub window and the edge rows share one
+    // evaluation (the final doc_id join prunes the text column)
+    val fired = spark.sparkContext.longAccumulator("neardup-text-rows")
+    val touch = org.apache.spark.sql.functions.udf { (t: String) => fired.add(1); t }
+    // spark.range, not a local Seq: the optimizer folds projections over
+    // local relations on the driver, which would fire the UDF at planning
+    import org.apache.spark.sql.functions.{concat_ws, lit}
+    def word(m: Int) = concat_ws("", lit("w"), (col("id") % m).cast("string"))
+    val d = spark.range(60).select(
+      col("id").as("doc_id"),
+      touch(concat_ws(" ", word(7), word(5), lit("common tail words"))).as("text"))
+    val out = graft.ops.Dedup.nearDupClusters(spark, d).collect()
+    assert(out.length == 60)
+    assert(fired.value == 60L, s"text UDF fired ${fired.value} times for 60 rows")
+  }
+
+  test("nearDupClusters: duplicate doc_id rows give the clusters of the deduplicated input") {
+    val base = "alpha beta gamma delta epsilon zeta eta theta"
+    val rows = Seq(
+      (4L, base), (9L, base), (6L, base + " iota"), (7L, "one two three four five six"),
+      (8L, "one two three four five six"), (3L, "lone words nobody else uses here"), (1L, "x y"))
+    // hubs (4, 7), members (9, 8), a singleton and a sub-k doc, each repeated
+    val dup = rows ++ Seq(rows(0), rows(0), rows(1), rows(4), rows(5), rows(6))
+    def clusters(rs: Seq[(Long, String)]) =
+      graft.ops.Dedup.nearDupClusters(spark, spark.createDataFrame(rs).toDF("doc_id", "text"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val want = clusters(rows)
+    assert(clusters(dup) == want)
+    assert(want.toMap.apply(9L) == 4L && want.toMap.apply(8L) == 7L, s"vacuous fixture: $want")
   }
 
   test("fused scoring pass plans with zero Exchange (no shuffle)") {
