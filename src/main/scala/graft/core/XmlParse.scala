@@ -46,18 +46,11 @@ object XmlParse {
     *
     * @param repo    partition-key column carried through for output layout
     * @param content full XML text of one `<document>`
-    * @return sentences in document order; malformed XML (null and empty
-    *         content included) yields Nil. The pipeline's ingest does not
-    *         call this: `Pipeline.parse` and `Pipeline.parseCounted` both
-    *         go through [[parseDocEither]] and count each malformed row —
-    *         a bad row never fails the job (at 10^12 files some rows WILL
-    *         be garbage).
-    */
-  def parseDoc(repo: String, content: String): Seq[ParsedSentence] =
-    parseDocEither(repo, content).getOrElse(Vector.empty)
-
-  /** [[parseDoc]] with the failure surfaced: Left(error) for malformed
-    * XML instead of a silent Nil, so callers can count corrupt rows.
+    * @return Right(sentences in document order), or Left(error) for
+    *         malformed XML (null and empty content included), so callers
+    *         can count corrupt rows: `Pipeline.parse` and
+    *         `Pipeline.parseCounted` count each one — a bad row never
+    *         fails the job (at 10^12 files some rows WILL be garbage).
     */
   def parseDocEither(repo: String, content: String): Either[String, Seq[ParsedSentence]] = {
     val out = ArrayBuffer.empty[ParsedSentence]

@@ -6,6 +6,7 @@ import graft.core.Tokenize
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import scala.collection.mutable.ArrayBuffer
 
 /** DDI relation extraction over the 4 SemEval-2013 interaction classes
   * {mechanism, effect, advise, int} + implicit "none".
@@ -221,36 +222,62 @@ object Relations {
     b.result()
   }
 
-  /** All labeled pair examples of a corpus (label = pair type, or "none"
-    * for ddi="false"). Tokenization happens here, per sentence, inside
-    * the flatMap — shuffle-free.
+  /** The labeled pair examples of one sentence (label = pair type, or
+    * "none" for ddi="false"). `toks` is evaluated only when the sentence
+    * has pairs.
+    */
+  private def sentenceExamples(
+      s: ParsedSentence,
+      toks: => IndexedSeq[Tok]
+  ): Iterator[PairExample] =
+    if (s.pairs.isEmpty) Iterator.empty
+    else {
+      val t = toks
+      val lc = lowerForms(t) // once per sentence, shared by its pairs
+      val byId = s.entities.map(e => e.entityId -> e).toMap
+      s.pairs.iterator.flatMap { p =>
+        for (e1 <- byId.get(p.e1); e2 <- byId.get(p.e2)) yield PairExample(
+          s.repo,
+          s.sid,
+          p.e1,
+          p.e2,
+          pairFeatures(t, lc, e1, e2, s.entities),
+          // typeless ddi="true" (0 in the reference corpus, legal in
+          // the schema) trains toward "" — the SAME label goldDdi keys
+          // such a pair with, so prediction and gold can actually meet
+          p.dtype.getOrElse(if (p.ddi) "" else "none")
+        )
+      }
+    }
+
+  /** All labeled pair examples of a corpus. Tokenization happens here,
+    * per sentence with pairs, inside the flatMap — shuffle-free.
     */
   def examples(
       spark: SparkSession,
       sents: Dataset[ParsedSentence]
   ): Dataset[PairExample] = {
     import spark.implicits._
-    sents.flatMap { s =>
-      if (s.pairs.isEmpty) Iterator.empty
-      else {
-        val toks = Tokenize.tokenize(s.text)
-        val lc = lowerForms(toks) // once per sentence, shared by its pairs
-        val byId = s.entities.map(e => e.entityId -> e).toMap
-        s.pairs.iterator.flatMap { p =>
-          for (e1 <- byId.get(p.e1); e2 <- byId.get(p.e2)) yield PairExample(
-            s.repo,
-            s.sid,
-            p.e1,
-            p.e2,
-            pairFeatures(toks, lc, e1, e2, s.entities),
-            // typeless ddi="true" (0 in the reference corpus, legal in
-            // the schema) trains toward "" — the SAME label goldDdi keys
-            // such a pair with, so prediction and gold can actually meet
-            p.dtype.getOrElse(if (p.ddi) "" else "none")
-          )
-        }
-      }
-    }
+    sents.flatMap(s => sentenceExamples(s, Tokenize.tokenize(s.text)))
+  }
+
+  /** A training corpus's pair examples in partition order — the input
+    * of the driver-side perceptron [[fit]].
+    */
+  private[graft] final class PairStream extends Train.Partial[PairStream] {
+    private val buf = ArrayBuffer.empty[PairExample]
+
+    def add(s: ParsedSentence, toks: => IndexedSeq[Tok]): Unit = buf ++= sentenceExamples(s, toks)
+
+    def merge(o: PairStream): PairStream = { buf ++= o.buf; this }
+
+    def size: Int = buf.length
+
+    /** Averaged perceptron over the examples sorted by (sid, e1, e2).
+      * The sort is stable, so repeated keys keep partition order.
+      */
+    def fit: Perceptron.PerceptronParams =
+      Perceptron.fit(buf.sortBy(e => (e.sid, e.e1, e.e2)).map(e => (e.feats, e.label)).toIndexedSeq)
   }
 
   /** Fit the DDI classifier: averaged perceptron over pair features
@@ -268,15 +295,9 @@ object Relations {
     * fits partition-local models and averages (measured trade: about
     * −4.6 test F1 at 4 partitions, BASELINE.md).
     */
-  def fit(spark: SparkSession, sents: Dataset[ParsedSentence]): Perceptron.PerceptronParams = {
-    import spark.implicits._
-    val ex = examples(spark, sents)
-      .map(e => (e.sid, e.e1, e.e2, e.feats, e.label))
-      .collect()
-      .sortBy(x => (x._1, x._2, x._3))
-      .map(x => (x._4: Seq[String], x._5))
-    Perceptron.fit(ex.toIndexedSeq)
-  }
+  def fit(spark: SparkSession, sents: Dataset[ParsedSentence]): Perceptron.PerceptronParams =
+    Train.collectMerged(sents.rdd)(() => new PairStream)((p, s) => p.add(s, Tokenize.tokenize(s.text)))
+      .fit
 
   /** The round-2 generative alternative, kept for ablation + the
     * shared-MNB-core (A5) story; [[fit]] replaced it as the default

@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Alias canonicalization (SURVEY J4): connected components over
   * normalized drug surface forms via iterative min-label propagation.
@@ -255,6 +256,15 @@ object Canonicalize {
     spark.createDataset(UnionFind.minLabels(Nil, edges).toSeq)
       .toDF("node", "comp")
 
+  /** One surface's edges in the surface↔variant bipartite graph: its
+    * lower-cased, trimmed form to each `v:`-tagged variant, plus a
+    * self-loop so every surface is a node.
+    */
+  private def surfaceEdges(s: String): Seq[(String, String)] = {
+    val lc = s.toLowerCase(java.util.Locale.ROOT).trim
+    variants(s).map(v => (lc, "v:" + v)) :+ ((lc, lc))
+  }
+
   /** Map each distinct surface to its canonical name: build the
     * surface↔variant bipartite edge set, run CC, then canonical =
     * min surface (not variant) per component — variants that are not
@@ -266,10 +276,7 @@ object Canonicalize {
   ): DataFrame = {
     import spark.implicits._
     val surf = surfaces.distinct().cache()
-    val edges = surf.flatMap { s =>
-      val lc = s.toLowerCase(java.util.Locale.ROOT).trim
-      variants(s).map(v => (lc, "v:" + v)) :+ ((lc, lc))
-    }
+    val edges = surf.flatMap(surfaceEdges)
     val cc = connectedComponents(spark, edges)
     // canonical = lexicographically smallest REAL surface in the component
     val real = cc.filter(!$"node".startsWith("v:"))
@@ -285,5 +292,20 @@ object Canonicalize {
     // `surf`. Do not "fix" this by moving the unpersist after an action.
     surf.unpersist()
     out
+  }
+
+  /** [[canonicalMap]] on the driver, for a surface set that fits there
+    * (a training vocabulary): the same edges through
+    * [[UnionFind.minLabels]], and the same canonical — the smallest real
+    * surface of the component in Spark SQL's string order (UTF-8 bytes,
+    * which `min` uses), not Scala's UTF-16 order.
+    */
+  def canonicalMapLocal(surfaces: Iterable[String]): Map[String, String] = {
+    val real = UnionFind.minLabels(Nil, surfaces.iterator.flatMap(surfaceEdges))
+      .filter { case (node, _) => !node.startsWith("v:") }
+    val canonical = real.groupMapReduce(_._2)(_._1) { (a, b) =>
+      if (UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0) a else b
+    }
+    real.map { case (node, comp) => node -> canonical(comp) }
   }
 }

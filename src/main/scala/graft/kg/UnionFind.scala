@@ -8,8 +8,9 @@ package graft.kg
   * accumulated (Canonicalize's small-graph fast path, the MegaDrill
   * measurement tool, the dedup specs): the find loop and the
   * min-labeling are exactly the kind of code where divergent copies rot.
-  * Driver-side by design — callers are bounded (small graphs, collected
-  * pair sets, spec fixtures); the distributed path stays in
+  * Driver-side by design — callers are bounded (small graphs, training
+  * surface vocabularies, collected pair sets, spec fixtures); the
+  * distributed path stays in
   * [[Canonicalize.connectedComponents]].
   */
 object UnionFind {

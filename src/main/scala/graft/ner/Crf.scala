@@ -317,7 +317,7 @@ object Crf {
   * gazetteer only adds its false positives. Don't retry.
   */
 final class CrfScorer(
-    params: Crf.CrfParams,
+    private[graft] val params: Crf.CrfParams,
     gazFeat: Option[GazetteerScorer] = None
 ) extends MentionScorer {
   def tagSentence(toks: IndexedSeq[graft.core.Tok]): IndexedSeq[String] =

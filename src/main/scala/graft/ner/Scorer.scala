@@ -280,7 +280,7 @@ object MnbParams {
 }
 
 /** Token tagger backed by broadcast MNB parameters. */
-final class MnbScorer(params: MnbParams) extends MentionScorer {
+final class MnbScorer(private[graft] val params: MnbParams) extends MentionScorer {
   def tagSentence(toks: IndexedSeq[Tok]): IndexedSeq[String] =
     if (params.classes.isEmpty) toks.map(_ => "O")
     else {
@@ -308,8 +308,10 @@ final class MnbScorer(params: MnbParams) extends MentionScorer {
   * everything else O. `maxN` bounds the n-gram length (longest surface
   * in the gazetteer). Deterministic by construction.
   */
-final class GazetteerScorer(gaz: Map[String, String], maxN: Int)
-    extends MentionScorer {
+final class GazetteerScorer(
+    private[graft] val gaz: Map[String, String],
+    private[graft] val maxN: Int
+) extends MentionScorer {
 
   /** The surfaces as a word trie: each lower-cased word is interned
     * once, so a token costs one lookup of its lower-cased form and a
@@ -400,8 +402,8 @@ object GazetteerScorer {
   * the engine's headline deterministic scorer.
   */
 final class HybridScorer(
-    gaz: GazetteerScorer,
-    mnb: MnbScorer,
+    private[graft] val gaz: GazetteerScorer,
+    private[graft] val mnb: MnbScorer,
     mnbMargin: Double = HybridScorer.DefaultMargin
 ) extends MentionScorer {
 

@@ -1,108 +1,187 @@
 package graft.ner
 
-import graft.core.{FeatureRow, GoldSpan, ParsedSentence}
+import graft.core.{FeatureRow, GoldSpan, ParsedSentence, Tok}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
-/** Distributed model fitting (SURVEY A4/A5/J3).
+/** Model fitting (SURVEY A4/A5/J3).
   *
-  * Both "models" are closed-form aggregations, so training is exactly one
-  * Catalyst hash aggregation each (partial + final, map-side combine for
-  * free) followed by a small driver collect + broadcast. Determinism:
-  * everything that becomes an index or a tie-break is sorted first —
-  * unlike the reference's Python-set iteration order (nn/codemaps.py:36-60,
-  * SURVEY A4).
+  * The gazetteer and the MNB are closed-form counts, so a fit is one
+  * narrow Spark job: every partition folds its rows into plain-Scala
+  * partial counts ([[Partial]]), one `collect` brings the partials back,
+  * and the driver merges them in partition order and finishes the model.
+  * `Pipeline.fit` runs the same counters for all of its models in one
+  * such job. Determinism: everything that becomes an index or a
+  * tie-break is sorted first — unlike the reference's Python-set
+  * iteration order (nn/codemaps.py:36-60, SURVEY A4).
+  *
+  * Driver-memory bound: the collect ships one count table per partition,
+  * so it is bounded by partitions × training vocabulary, not by corpus
+  * size. Training sets too large for that (or for the DDI pair stream
+  * `ddi.Relations.fit` collects) take [[fitCrfDistributed]] and
+  * `Relations.fitDistributed`.
   */
 object Train {
 
-  /** Fit MNB from (bag-of-features, label) examples: one
-    * groupBy((feature,label)).count(). Features count with multiplicity
-    * (multinomial). `minFreq` prunes features seen fewer than that many
-    * times — the scale knob for web-scale vocabularies (the reference's
-    * crfsuite config uses feature.minfreq=1, i.e. keep all; default
-    * matches).
+  /** Statistics of one training partition. `merge` folds a later
+    * partition's statistics into this one, so order-carrying parts
+    * (the DDI pair stream) stay in partition order.
+    */
+  private[graft] trait Partial[A <: Partial[A]] extends Serializable {
+    def merge(o: A): A
+  }
+
+  /** One Spark job: each partition of `rdd` is folded into a fresh
+    * partial by `add`, the partials are collected through the RDD (no
+    * Dataset encoder, so no extra codegen) and merged in partition order.
+    */
+  private[graft] def collectMerged[T, A <: Partial[A]: ClassTag](rdd: RDD[T])(zero: () => A)(
+      add: (A, T) => Unit): A =
+    rdd
+      .mapPartitions { it =>
+        val a = zero()
+        it.foreach(add(a, _))
+        Iterator.single(a)
+      }
+      .collect()
+      .reduceOption(_ merge _)
+      .getOrElse(zero())
+
+  /** MNB sufficient statistics: example count per class and
+    * (feature, class) occurrence counts. Features count with
+    * multiplicity (multinomial).
+    */
+  private[graft] final class MnbCounts extends Partial[MnbCounts] {
+    private val classN = mutable.HashMap.empty[String, Long]
+    private val featTag = mutable.HashMap.empty[(String, String), Long]
+
+    def add(feats: Iterable[String], label: String): Unit = {
+      classN(label) = classN.getOrElse(label, 0L) + 1L
+      feats.foreach { f =>
+        val k = (f, label)
+        featTag(k) = featTag.getOrElse(k, 0L) + 1L
+      }
+    }
+
+    /** One NER example per token: its dict features and gold tag. */
+    def addTokens(toks: IndexedSeq[Tok], spans: Seq[GoldSpan]): Unit = {
+      val feats = Features.extractFeatures(toks)
+      var i = 0
+      while (i < toks.length) {
+        add(dictFeatures(feats(i)), Features.getTag(toks(i), spans))
+        i += 1
+      }
+    }
+
+    def merge(o: MnbCounts): MnbCounts = {
+      o.classN.foreach { case (c, n) => classN(c) = classN.getOrElse(c, 0L) + n }
+      o.featTag.foreach { case (k, n) => featTag(k) = featTag.getOrElse(k, 0L) + n }
+      this
+    }
+
+    /** Examples counted (tokens, for an NER fit). */
+    def examples: Long = classN.valuesIterator.sum
+
+    /** Distinct features counted, before `minFreq` pruning. */
+    def features: Int = featTag.keysIterator.map(_._1).toSet.size
+
+    /** Laplace-smoothed MNB over the features seen at least `minFreq`
+      * times. All counts are integers summed in doubles below 2^53, so
+      * the result does not depend on merge order.
+      */
+    def params(minFreq: Long): MnbParams = {
+      val classes = classN.keys.toArray.sorted
+      val idx = classes.zipWithIndex.toMap
+      val nTotal = classN.valuesIterator.sum.toDouble
+      val logPrior = classes.map(c => math.log(classN(c) / nTotal))
+
+      val featTotal = mutable.HashMap.empty[String, Long]
+      featTag.foreach { case ((f, _), n) => featTotal(f) = featTotal.getOrElse(f, 0L) + n }
+      def kept(f: String) = featTotal(f) >= minFreq
+
+      // total feature-occurrence mass per class (sum over all features of
+      // count(f,c)) — with one-hot dict features this is (#dict entries)
+      // summed over tokens of class c
+      val totalPerClass = new Array[Double](classes.length)
+      featTag.foreach { case ((f, t), n) => if (kept(f)) totalPerClass(idx(t)) += n.toDouble }
+      val vocabSize = featTotal.valuesIterator.count(_ >= minFreq).toDouble
+      val defaultLog = totalPerClass.map(t => math.log(1.0 / (t + vocabSize)))
+
+      val featLogProb = mutable.HashMap.empty[String, Array[Double]]
+      featTag.foreach { case ((f, t), n) =>
+        if (kept(f)) {
+          val i = idx(t)
+          featLogProb.getOrElseUpdate(f, defaultLog.clone())(i) =
+            math.log((n + 1.0) / (totalPerClass(i) + vocabSize))
+        }
+      }
+      MnbParams(classes, logPrior, featLogProb.toMap, defaultLog)
+    }
+  }
+
+  /** (lower-cased surface, type) counts over gold entities: the
+    * gazetteer's sufficient statistic.
+    */
+  private[graft] final class SurfaceCounts extends Partial[SurfaceCounts] {
+    private val counts = mutable.HashMap.empty[(String, String), Long]
+
+    def add(s: ParsedSentence): Unit = s.entities.foreach { e =>
+      val k = (e.text.toLowerCase(java.util.Locale.ROOT), e.etype)
+      counts(k) = counts.getOrElse(k, 0L) + 1L
+    }
+
+    def merge(o: SurfaceCounts): SurfaceCounts = {
+      o.counts.foreach { case (k, n) => counts(k) = counts.getOrElse(k, 0L) + n }
+      this
+    }
+
+    /** Surface -> majority type, ties broken by (count desc, type asc);
+      * plus the longest surface in words.
+      */
+    def gazetteer: (Map[String, String], Int) = {
+      val gaz = counts.toSeq
+        .groupBy(_._1._1)
+        .map { case (surface, variants) =>
+          surface -> variants.minBy { case ((_, t), c) => (-c, t) }._1._2
+        }
+      val maxN =
+        if (gaz.isEmpty) 1
+        else gaz.keys.map(_.count(_ == ' ') + 1).max
+      (gaz, maxN)
+    }
+  }
+
+  /** The DictVectorizer view of one token's features — one-hot per dict
+    * key, last value per key wins (ml/src/models/multinomial_nb.py:61-73).
+    */
+  private def dictFeatures(features: Seq[String]): Seq[String] =
+    Features.toDict(features).map { case (k, v) => k + "=" + v }
+
+  /** Fit MNB from (bag-of-features, label) examples. `minFreq` prunes
+    * features seen fewer than that many times — the scale knob for
+    * web-scale vocabularies (the reference's crfsuite config uses
+    * feature.minfreq=1, i.e. keep all; default matches).
     */
   def fitMnbRaw(
       spark: SparkSession,
       examples: Dataset[(Seq[String], String)],
       minFreq: Long = 1L
-  ): MnbParams = {
-    import spark.implicits._
+  ): MnbParams =
+    collectMerged(examples.rdd)(() => new MnbCounts)((c, e) => c.add(e._1, e._2)).params(minFreq)
 
-    // two actions (feature counts + class counts) read `examples`; the
-    // checkpoint stops the upstream tokenize/featurize lineage running
-    // twice per fit (tokenization is ~half the pass cost)
-    val ex = examples.localCheckpoint()
-    val pairs = ex
-      .flatMap { case (fs, label) => fs.map(f => (f, label)) }
-      .toDF("feat", "tag")
-
-    val counts = pairs
-      .groupBy($"feat", $"tag")
-      .agg(count(lit(1)).as("c"))
-      .groupBy($"feat")
-      .agg(
-        sum($"c").as("featTotal"),
-        collect_list(struct($"tag", $"c")).as("perTag")
-      )
-      .filter($"featTotal" >= minFreq)
-      .collect()
-
-    val classCounts = ex
-      .map(_._2)
-      .toDF("tag")
-      .groupBy($"tag")
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .sortBy(_._1)
-
-    val classes = classCounts.map(_._1)
-    val idx = classes.zipWithIndex.toMap
-    val nTotal = classCounts.map(_._2).sum.toDouble
-    val logPrior = classCounts.map { case (_, n) => math.log(n / nTotal) }
-
-    // total feature-occurrence mass per class (sum over all features of
-    // count(f,c)) — with one-hot dict features this is (#dict entries)
-    // summed over tokens of class c
-    val totalPerClass = new Array[Double](classes.length)
-    counts.foreach { r =>
-      r.getSeq[org.apache.spark.sql.Row](2).foreach { tc =>
-        totalPerClass(idx(tc.getString(0))) += tc.getLong(1).toDouble
-      }
-    }
-    val vocabSize = counts.length.toDouble
-    val defaultLog = totalPerClass.map(t => math.log(1.0 / (t + vocabSize)))
-
-    val featLogProb = counts.map { r =>
-      val feat = r.getString(0)
-      val lp = defaultLog.clone()
-      r.getSeq[org.apache.spark.sql.Row](2).foreach { tc =>
-        val i = idx(tc.getString(0))
-        lp(i) = math.log((tc.getLong(1) + 1.0) / (totalPerClass(i) + vocabSize))
-      }
-      feat -> lp
-    }.toMap
-
-    MnbParams(classes, logPrior, featLogProb, defaultLog)
-  }
-
-  /** NER token-tagging fit: the DictVectorizer view of each token's
-    * features — one-hot per dict key, last value per key wins
-    * (ml/src/models/multinomial_nb.py:61-73) — then the shared MNB core.
+  /** NER token-tagging fit: each token's dict features, then the shared
+    * MNB core.
     */
   def fitMnb(
       spark: SparkSession,
       rows: Dataset[FeatureRow],
       minFreq: Long = 1L
-  ): MnbParams = {
-    import spark.implicits._
-    fitMnbRaw(
-      spark,
-      rows.map(r => (Features.toDict(r.features).map { case (k, v) => k + "=" + v }, r.tag)),
-      minFreq
-    )
-  }
+  ): MnbParams =
+    collectMerged(rows.rdd)(() => new MnbCounts)((c, r) => c.add(dictFeatures(r.features), r.tag))
+      .params(minFreq)
 
   /** Derive the gazetteer from training gold entities (SURVEY J3):
     * lower-cased surface -> majority type; ties broken by (count desc,
@@ -115,27 +194,8 @@ object Train {
   def buildGazetteer(
       spark: SparkSession,
       sents: Dataset[ParsedSentence]
-  ): (Map[String, String], Int) = {
-    import spark.implicits._
-    val surfaces = sents
-      .flatMap(s => s.entities.map(e => (e.text.toLowerCase(java.util.Locale.ROOT), e.etype)))
-      .toDF("surface", "etype")
-      .groupBy($"surface", $"etype")
-      .agg(count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-
-    val gaz = surfaces
-      .groupBy(_._1)
-      .map { case (surface, variants) =>
-        val best = variants.minBy { case (_, t, c) => (-c, t) }
-        surface -> best._2
-      }
-    val maxN =
-      if (gaz.isEmpty) 1
-      else gaz.keys.map(_.count(_ == ' ') + 1).max
-    (gaz, maxN)
-  }
+  ): (Map[String, String], Int) =
+    collectMerged(sents.rdd)(() => new SurfaceCounts)(_ add _).gazetteer
 
   /** Per-sentence ordered token streams: (sid, [(features, tag)...] in
     * TOKEN order). Ordering must happen at sentence granularity — sids

@@ -11,8 +11,8 @@ import org.apache.spark.sql.expressions.Window
   *   - `bruteForceTopK`: exact cosine top-k via broadcast of the (small)
   *     query set against the full corpus — one narrow pass over the big
   *     side, no shuffle except the final per-query top-k (window on the
-  *     query key). The cosine is pure higher-order-function arithmetic
-  *     (zip_with + aggregate) — whole-stage codegen, no UDF.
+  *     query key). The cosine is a native codegen'd expression
+  *     (`functions.CosineSim`), no UDF.
   *   - `lshBuckets` + `bucketedTopK`: random-hyperplane LSH — sign-bit
   *     sketch of each vector against `nPlanes` deterministic
   *     pseudo-random hyperplanes; neighbors are searched only inside the
@@ -26,20 +26,6 @@ object Similarity {
     * intermediate array (graft.functions.CosineSim).
     */
   def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
-
-  /** Composable-primitives twin of [[cosine]] (zip_with + aggregate —
-    * three passes, one intermediate array per pair). Kept as the
-    * independent oracle for CosineSimSpec's exact-equality check.
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column) =
-      aggregate(
-        zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-    dot(a, b) / sqrt(dot(a, a) * dot(b, b))
-  }
 
   /** Exact top-k neighbors for each query vector.
     *

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * OS processes glued by text files; here the whole NER path is ONE
   * narrow Spark pipeline — scan → parse → tokenize → tag → featurize →
   * score → decode never shuffles (documents are independent), so it
-  * scales linearly with executors. Shuffles exist only where semantics
-  * demand them: model fitting (one hash agg), canonicalization (CC), the
-  * evaluation joins, and the final partitioned write.
+  * scales linearly with executors. Model fitting is one narrow job over
+  * the training set plus a driver-side finish; shuffles exist only where
+  * semantics demand them: canonicalization (CC) of large surface sets,
+  * the evaluation joins, and the final partitioned write.
   */
 object Pipeline {
 
@@ -185,10 +186,45 @@ object Pipeline {
       canon: Map[String, String]
   ) extends Serializable
 
+  /** One training partition's statistics for every model [[fit]]
+    * builds; each sentence is tokenized once.
+    */
+  private final class FitPartial extends Train.Partial[FitPartial] {
+    val surfaces = new Train.SurfaceCounts
+    val mnb = new Train.MnbCounts
+    val pairs = new Relations.PairStream
+    val texts = scala.collection.mutable.HashSet.empty[String]
+    var sentences = 0L
+
+    def add(s: ParsedSentence): Unit = {
+      sentences += 1
+      surfaces.add(s)
+      s.entities.foreach(texts += _.text)
+      val toks = Tokenize.tokenize(s.text)
+      mnb.addTokens(toks, s.entities)
+      pairs.add(s, toks)
+    }
+
+    def merge(o: FitPartial): FitPartial = {
+      surfaces.merge(o.surfaces)
+      mnb.merge(o.mnb)
+      pairs.merge(o.pairs)
+      texts ++= o.texts
+      sentences += o.sentences
+      this
+    }
+  }
+
   /** Fit gazetteer + NER MNB + DDI perceptron + the canonical alias map (from
     * the training surface vocabulary; unseen surfaces fall back to
-    * lower-case identity at score time). Three hash aggregations + one
-    * small CC — all bounded by vocabulary, not corpus size.
+    * lower-case identity at score time). One narrow Spark job: each
+    * partition counts (surface, type) pairs, MNB (feature, tag) and
+    * class counts, the DDI pair examples and the distinct entity
+    * surfaces; the driver merges the partials and finishes each model
+    * with the code its own fit uses (`Train.buildGazetteer`,
+    * `Train.fitMnb`, `Relations.fit`, `Canonicalize.canonicalMapLocal`).
+    * The `crf` scorer's fit stays its own job. Driver memory: see
+    * [[graft.ner.Train]].
     */
   def fit(
       spark: SparkSession,
@@ -196,17 +232,22 @@ object Pipeline {
       scorerName: String = "hybrid",
       mnbMinFreq: Long = 1L
   ): Models = {
-    import spark.implicits._
-    val (gaz, gazN) = Train.buildGazetteer(spark, train)
-    lazy val nerParams = Train.fitMnb(spark, featureRows(spark, train), mnbMinFreq)
+    val t0 = System.nanoTime()
+    val all = Train.collectMerged(train.rdd)(() => new FitPartial)(_ add _)
+    val t1 = System.nanoTime()
+    val (gaz, gazN) = all.surfaces.gazetteer
+    lazy val nerParams = all.mnb.params(mnbMinFreq)
     lazy val crfParams = Train.fitCrf(spark, train)
     val scorer = MentionScorer.resolve(scorerName, gaz, gazN, nerParams, crfParams)
-    val ddiParams = Relations.fit(spark, train)
-    val canon = Canonicalize
-      .canonicalMap(spark, train.flatMap(s => s.entities.map(_.text)))
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
+    val ddiParams = all.pairs.fit
+    val canon = Canonicalize.canonicalMapLocal(all.texts)
+    val t2 = System.nanoTime()
+    org.slf4j.LoggerFactory.getLogger("graft.pipeline.Pipeline").info(
+      f"fit $scorerName: ${(t2 - t0) / 1e9}%.3f s (pass ${(t1 - t0) / 1e9}%.3f s, " +
+        f"finish ${(t2 - t1) / 1e9}%.3f s); ${all.sentences} sentences, " +
+        s"${all.mnb.examples} tokens, ${all.pairs.size} pairs; gazetteer ${gaz.size} entries, " +
+        s"mnb vocabulary ${all.mnb.features}, ddi features ${ddiParams.weights.size}, " +
+        s"canon ${canon.size} entries")
     Models(scorer, ddiParams, canon)
   }
 

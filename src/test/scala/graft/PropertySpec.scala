@@ -121,10 +121,10 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: the Treebank scanner equals the regex oracle on DocGen and adversarial text") {
-    import graft.core.{TokenizeRegexOracle, XmlParse}
+    import graft.core.{ParseDoc, TokenizeRegexOracle}
     import graft.fixtures.DocGen
     val docGenText: Gen[String] = Gen.choose(0L, 100000L).map { i =>
-      XmlParse.parseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
+      ParseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
     }
     val pieces = Seq(
       "«", "»", "“", "”", "‘", "’", "„", "`", "``", "'", "''", "\"", "--", "---", "...", "..", ".",

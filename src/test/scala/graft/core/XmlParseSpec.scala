@@ -21,7 +21,7 @@ class XmlParseSpec extends AnyFunSuite {
 """
 
   test("sentences parsed in document order with ids and texts") {
-    val sents = XmlParse.parseDoc("repo-0", doc)
+    val sents = ParseDoc("repo-0", doc)
     assert(sents.map(_.sid) == Seq("D.d0.s0", "D.d0.s1", "D.d0.s2"))
     assert(sents.head.text == "Warfarin interacts with aspirin.")
     assert(sents.head.docId == "D.d0")
@@ -29,12 +29,12 @@ class XmlParseSpec extends AnyFunSuite {
   }
 
   test("XML entities in attributes are decoded") {
-    val s1 = XmlParse.parseDoc("r", doc)(1)
+    val s1 = ParseDoc("r", doc)(1)
     assert(s1.text == "Beta blockers & \"quotes\" here.")
   }
 
   test("discontinuous charOffset truncated to first span, raw kept") {
-    val e = XmlParse.parseDoc("r", doc)(1).entities.head
+    val e = ParseDoc("r", doc)(1).entities.head
     assert(e.start == 0 && e.end == 3)
     assert(e.rawOffset == "0-3;5-12")
     assert(e.etype == "group")
@@ -42,7 +42,7 @@ class XmlParseSpec extends AnyFunSuite {
   }
 
   test("pairs: ddi flag and type (type only when ddi=true)") {
-    val sents = XmlParse.parseDoc("r", doc)
+    val sents = ParseDoc("r", doc)
     val p0 = sents(0).pairs.head
     assert(p0.ddi && p0.dtype.contains("int"))
     assert(p0.e1 == "D.d0.s0.e0" && p0.e2 == "D.d0.s0.e1")
@@ -51,20 +51,20 @@ class XmlParseSpec extends AnyFunSuite {
   }
 
   test("empty-text sentence parses with no annotations") {
-    val s2 = XmlParse.parseDoc("r", doc)(2)
+    val s2 = ParseDoc("r", doc)(2)
     assert(s2.text == "" && s2.entities.isEmpty && s2.pairs.isEmpty)
   }
 
   test("malformed XML yields empty, not an exception") {
-    assert(XmlParse.parseDoc("r", "<document><sentence").isEmpty)
-    assert(XmlParse.parseDoc("r", "not xml at all").isEmpty)
+    assert(ParseDoc("r", "<document><sentence").isEmpty)
+    assert(ParseDoc("r", "not xml at all").isEmpty)
   }
 
   test("external entities are not resolved (untrusted content)") {
     val evil =
       """<?xml version="1.0"?><!DOCTYPE d [<!ENTITY x SYSTEM "file:///etc/passwd">]>
 <document id="d"><sentence id="s" text="&x;"/></document>"""
-    val parsed = XmlParse.parseDoc("r", evil)
+    val parsed = ParseDoc("r", evil)
     assert(parsed.isEmpty || parsed.head.text.isEmpty)
   }
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.TestSpark
 import graft.ops.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -13,6 +14,20 @@ import scala.util.Random
 class CosineSimSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
+
+  /** Composable-primitives twin of [[Similarity.cosine]] (zip_with +
+    * aggregate — three passes, one intermediate array per pair): the
+    * independent oracle for the exact-equality checks.
+    */
+  private def cosineHof(a: Column, b: Column): Column = {
+    def dot(x: Column, y: Column) =
+      aggregate(
+        zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
+        lit(0.0),
+        (acc, v) => acc + v
+      )
+    dot(a, b) / sqrt(dot(a, a) * dot(b, b))
+  }
 
   private def randomPairs(n: Int, dim: Int) = {
     import spark.implicits._
@@ -28,7 +43,7 @@ class CosineSimSpec extends AnyFunSuite {
     val df = randomPairs(500, 24)
       .select(
         Similarity.cosine(col("a"), col("b")).as("native"),
-        Similarity.cosineHof(col("a"), col("b")).as("hof"))
+        cosineHof(col("a"), col("b")).as("hof"))
     val rows = df.collect()
     assert(rows.length == 500)
     rows.foreach { r =>
@@ -57,7 +72,7 @@ class CosineSimSpec extends AnyFunSuite {
       (Some(Seq[Option[Float]](Some(1f), None)), Some(Seq[Option[Float]](Some(1f), Some(2f))))
     ).toDF("a", "b")
       .select(Similarity.cosine(col("a"), col("b")).as("native"),
-        Similarity.cosineHof(col("a"), col("b")).as("hof"))
+        cosineHof(col("a"), col("b")).as("hof"))
     val rows = df.collect()
     assert(rows(0).isNullAt(0) && rows(0).isNullAt(1), "null input array")
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1), "length mismatch")
@@ -83,7 +98,7 @@ class CosineSimSpec extends AnyFunSuite {
         Seq(1f, 2f), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))
     assert(e.eval(null) == null)
     assertThrows[ArithmeticException] { // SparkArithmeticException (DIVIDE_BY_ZERO)
-      df.select(Similarity.cosineHof(col("a"), col("b"))).collect()
+      df.select(cosineHof(col("a"), col("b"))).collect()
     }
   }
 

@@ -115,10 +115,10 @@ class DedupPropertySpec extends AnyFunSuite {
   }
 
   test("property: the allocation-free md5 band kernel equals the string-building oracle") {
-    import graft.core.XmlParse
+    import graft.core.ParseDoc
     import graft.fixtures.DocGen
     val docGenText: Gen[String] = Gen.choose(0L, 100000L).map { i =>
-      XmlParse.parseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
+      ParseDoc("r", DocGen.docXml(42L, i)).map(_.text).mkString(" ")
     }
     // "x" * 56 and "é" * 30 are single tokens over 55 UTF-8 bytes, so a
     // window holding one needs two MD5 blocks; U+D800, U+DC00 and the
