@@ -1,10 +1,24 @@
 package graft.io
 
 import graft.core.Triple
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.unsafe.types.UTF8String
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.PosixFilePermissions
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -13,13 +27,20 @@ import scala.jdk.CollectionConverters._
   * lineage and counter metrics written alongside each commit").
   *
   * Stand-in for Iceberg commits (no Iceberg jars ship in this sandbox):
-  * the output is a parquet table partitioned by `repo`, plus a commit
+  * the output is a parquet table partitioned by `repo` (one
+  * `repo=<escaped id>/part-*.parquet` file per repo), plus a commit
   * MANIFEST (`_graft_commits/<repo>.json`) written atomically (temp file
   * + move) AFTER the partition's data lands. A partition is committed
   * iff its manifest entry exists, so a crash mid-write leaves at most
-  * orphan data files that the next run overwrites (dynamic partition
-  * overwrite), never a half-committed manifest — exactly Iceberg's
-  * snapshot contract, one partition at a time.
+  * orphan data files that the next run replaces, never a half-committed
+  * manifest — exactly Iceberg's snapshot contract, one partition at a
+  * time.
+  *
+  * The commit writes its files itself (parquet-mr over `java.nio`), and
+  * its manifests already use `java.nio`: the table path must be a
+  * filesystem that the driver and every executor see at the same path (a
+  * local disk in local mode, a shared mount on a cluster). One commit at
+  * a time per table.
   *
   * `resume` anti-joins the committed repo set and processes only the
   * remainder; `resume` after a complete run is a no-op.
@@ -73,137 +94,227 @@ object Resume {
     * their manifests. Returns the commits performed, sorted by repo
     * (empty = nothing left to do).
     *
-    * One evaluation of the input in one write, independent of repo
-    * count: rows of committed repos are dropped against a broadcast of
-    * the committed set (bounded by repo count, not corpus size; no
-    * broadcast join, so no job of its own), and the remainder is
-    * hash-repartitioned on `repo` into `defaultParallelism` partitions —
-    * an explicit count, so AQE cannot fold the write into one or two
-    * tasks. The write is the only action: Spark runs it as the shuffle-map
-    * job and the result job, with nothing persisted or collected.
+    * One evaluation of the input in one result stage. Rows of committed
+    * repos are dropped against a broadcast of the committed set (bounded
+    * by repo count, not corpus size; no broadcast join, so no job of its
+    * own). An input of one partition — every micro-batch of a one-file
+    * stream trigger — already holds each repo in one partition and is
+    * written where it is: one Spark job, no shuffle. A larger input is
+    * hash-repartitioned on `repo` into `defaultParallelism` partitions
+    * first (the shuffle-map job plus the result job). The partition count
+    * comes from the planned input. Planning runs nothing for an input
+    * without a shuffle of its own, such as scored docs; under AQE an
+    * input whose plan holds a shuffle runs that shuffle's map stage while
+    * it is planned.
     *
-    * The counters ride on the write. A pass-through `mapPartitions` in
-    * the write's result stage adds each partition's `(repo, rows,
-    * distinct non-null drugSubj)` to an accumulator. Each repo sits in
-    * exactly one partition, so its counts are partition-local, and they
-    * are exactly-once: Spark merges a result task's accumulator updates
-    * once per partition (a failed or duplicate attempt adds nothing),
-    * which would not hold in a shuffle-map stage. A repo counted in two
-    * partitions fails the call with an `IllegalStateException`.
+    * Each partition is sorted by `repo`, and one `mapPartitions` writes
+    * each repo's rows to its own staged parquet file, one writer open at
+    * a time (snappy; no dictionary for the near-unique `sid`, `e1`, `e2`).
+    * The same pass returns each repo's `(rows, distinct non-null
+    * drugSubj)` with its staged directory, and one `collect` of that
+    * result stage brings them to the driver exactly once per partition
+    * (a failed or duplicate attempt's staged files are never published).
+    * A repo counted in two partitions fails the call with an
+    * `IllegalStateException`.
     *
-    * Triples with a null `repo` have no partition to commit to: the task
-    * holding them (one task, since they hash alike) counts them and fails,
-    * and the call rethrows that `IllegalArgumentException`. The aborted
-    * write removes its staging files and no manifest is written.
+    * The driver then replaces each repo's `repo=<escaped id>` directory
+    * with the staged one (a directory rename), clears the staging
+    * directory `_graft_staging` (invisible to [[read]], like every
+    * underscore-prefixed path) and writes the manifests last.
+    *
+    * Triples with a null or empty `repo` have no partition to commit to
+    * (Spark's partition naming would send `""` to the null partition,
+    * which reads back as null): they are counted, never written, and the
+    * call fails with an `IllegalArgumentException` that gives the count,
+    * leaving no data file and no manifest.
     *
     * Crash contract: a manifest entry is written atomically AFTER the
-    * data job completes, so a crash mid-write leaves only orphan data
-    * files in uncommitted partitions, which the next run's dynamic
-    * overwrite replaces — never a half-committed manifest. Commit
-    * granularity is per-run: at 10^5 repos an interrupted run re-does at
-    * most one run's worth of partitions; callers wanting finer units
-    * chunk the input upstream.
+    * repo's data is in place, so a crash mid-commit leaves only staged
+    * files, which the next commit clears, or orphan data in uncommitted
+    * partitions, which the next commit of that repo replaces — never a
+    * half-committed manifest. Commit granularity is per-run: at 10^5
+    * repos an interrupted run re-does at most one run's worth of
+    * partitions; callers wanting finer units chunk the input upstream.
     */
   def writeResumable(
       spark: SparkSession,
       triples: Dataset[Triple],
       table: String
   ): Seq[Commit] = {
-    import spark.implicits._
     val done = committedRepos(table)
     val doneBc = if (done.isEmpty) None else Some(spark.sparkContext.broadcast(done))
-    val remaining = doneBc
-      .fold(triples)(bc => triples.filter((t: Triple) => t.repo == null || !bc.value.contains(t.repo)))
-      .repartition(spark.sparkContext.defaultParallelism, col("repo"))
-    val counted = spark.sparkContext.collectionAccumulator[(String, Long, Long)]("repo-counters")
-    try {
-      // dynamic partition overwrite as a PER-WRITE option, never session
-      // conf: inside foreachBatch the frame is bound to a cloned
-      // micro-batch session, where a conf set on the caller's session
-      // does not apply — the old conf-juggling version silently fell
-      // back to full-table overwrite there, wiping earlier repos'
-      // partitions (caught by the StreamOpsSpec kg-stream e2e). The
-      // write option takes precedence over session conf in all contexts.
-      remaining.mapPartitions(countRepos(counted, _))
-        .write
-        .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
-        .option("partitionOverwriteMode", "dynamic")
-        // an empty write must leave no file behind
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("repo")
-        .parquet(table)
-    } catch {
-      case e: Exception =>
-        throw causes(e).collectFirst {
-          case n: IllegalArgumentException if n.getMessage != null && n.getMessage.contains(NullRepo) =>
-            new IllegalArgumentException(n.getMessage, e)
-        }.getOrElse(e)
-    } finally doneBc.foreach(_.destroy())
-    val counters = repoCounters(counted.value.asScala.toSeq)
+    val staging = stagingDir(table).resolve(java.util.UUID.randomUUID().toString).toString
+    val counters =
+      try {
+        val remaining = doneBc
+          .fold(triples)(bc => triples.filter((t: Triple) => t.repo == null || !bc.value.contains(t.repo)))
+          .select((DataColumns :+ "repo").map(col): _*)
+        val planned = remaining.sortWithinPartitions("repo").queryExecution.toRdd
+        val rows =
+          if (planned.getNumPartitions <= 1) planned
+          else remaining.repartition(spark.sparkContext.defaultParallelism, col("repo"))
+            .sortWithinPartitions("repo").queryExecution.toRdd
+        mkdir(Paths.get(table))
+        publish(table, rows.mapPartitions(stage(staging, _)).collect().toSeq)
+      } finally {
+        doneBc.foreach(_.destroy())
+        deleteTree(stagingDir(table))
+      }
     if (counters.isEmpty) return Seq.empty
 
     Files.createDirectories(manifestDir(table))
-    counters.map { case (repo, rows, distinctSubj) =>
-      val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
+    counters.map { s =>
+      val commit = Commit(s.repo, s.rows, s.distinctSubj, java.time.Instant.now().toString)
       val json =
         s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
-      val tmp = manifestDir(table).resolve(s".${enc(repo)}.json.tmp")
+      val tmp = manifestDir(table).resolve(s".${enc(s.repo)}.json.tmp")
       Files.write(tmp, json.getBytes("UTF-8"))
-      Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
+      Files.move(tmp, manifestDir(table).resolve(s"${enc(s.repo)}.json"),
         StandardCopyOption.ATOMIC_MOVE)
       commit
     }
   }
 
-  private val NullRepo = "triples have a null repo"
-
-  private def causes(e: Throwable): Iterator[Throwable] =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32)
-
-  /** Passes one partition's triples through unchanged, then adds its
-    * `(repo, rows, distinct non-null drugSubj)` per repo to `acc`. A null
-    * repo fails the task once the partition's null-repo rows are counted.
+  /** One repo of one task attempt: its row count, its distinct non-null
+    * `drugSubj` count and its staged `repo=` directory (null for a null or
+    * empty repo, which is counted and not written).
     */
-  private def countRepos(
-      acc: CollectionAccumulator[(String, Long, Long)],
-      it: Iterator[Triple]
-  ): Iterator[Triple] = new Iterator[Triple] {
-    private val rows = mutable.HashMap.empty[String, Long]
-    private val subjs = mutable.HashMap.empty[String, mutable.HashSet[String]]
-    private var reported = false
+  private final case class Staged(repo: String, rows: Long, distinctSubj: Long, dir: String)
 
-    def hasNext: Boolean = {
-      val more = it.hasNext
-      if (!more && !reported) {
-        reported = true
-        rows.foreach { case (repo, n) => acc.add((repo, n, subjs(repo).size.toLong)) }
-      }
-      more
-    }
+  /** Triple's columns as a committed file holds them; `repo` is the
+    * directory. The commit's rows carry these first, then `repo`.
+    */
+  private val DataColumns = Encoders.product[Triple].schema.fieldNames.toSeq.filterNot(_ == "repo")
+  private val RepoIdx = DataColumns.length
 
-    def next(): Triple = {
-      val t = it.next()
-      if (t.repo == null) {
-        val nulls = 1L + it.count(_.repo == null)
-        throw new IllegalArgumentException(s"$nulls $NullRepo; every committed triple needs one")
-      }
-      rows(t.repo) = rows.getOrElse(t.repo, 0L) + 1
-      val seen = subjs.getOrElseUpdate(t.repo, mutable.HashSet.empty)
-      if (t.drugSubj != null) seen += t.drugSubj
-      t
+  private lazy val FileSchema: MessageType = Types.buildMessage()
+    .addFields(DataColumns.map(c => Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(c)): _*)
+    .named("spark_schema")
+
+  /** Near-unique columns, for which a dictionary page is wasted work
+    * before parquet falls back to plain encoding.
+    */
+  private val PlainColumns = Seq("sid", "e1", "e2")
+
+  private val DirPerms = PosixFilePermissions.fromString("rwxr-xr-x")
+  private val FilePerms = PosixFilePermissions.fromString("rw-r--r--")
+
+  private def stagingDir(table: String) = Paths.get(table, "_graft_staging")
+
+  /** Creates `dir` (and missing parents) and gives it the table's
+    * directory mode, whatever the process umask.
+    */
+  private def mkdir(dir: Path): Path = {
+    if (!Files.isDirectory(dir)) {
+      Files.createDirectories(dir)
+      Files.setPosixFilePermissions(dir, DirPerms)
     }
+    dir
   }
 
-  /** Per-partition counters to per-repo counters sorted by repo. Fails on
-    * a repo counted in two partitions (the frame was not hash-partitioned
-    * by repo, so its counters would be split).
+  private def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.toVector.reverse.foreach(p => Files.deleteIfExists(p))
+    finally walk.close()
+  }
+
+  private def openWriter(file: Path): ParquetWriter[Group] = {
+    val b = ExampleParquetWriter.builder(new LocalOutputFile(file))
+      .withConf(new PlainParquetConfiguration())
+      .withType(FileSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+    PlainColumns.foldLeft(b)((b, c) => b.withDictionaryEncoding(c, false)).build()
+  }
+
+  /** Writes one sorted partition, one staged file per repo under
+    * `staging/<partition>-<task attempt>/repo=<escaped id>/`, and returns
+    * each repo's counters. Null and empty repos sort first; once the
+    * partition holds one, nothing more is written (the commit fails).
     */
-  private def repoCounters(perPartition: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] = {
-    val split = perPartition.groupBy(_._1).collect { case (repo, hits) if hits.length > 1 => repo }
+  private def stage(staging: String, rows: Iterator[InternalRow]): Iterator[Staged] = {
+    val tc = TaskContext.get()
+    val attemptDir = Paths.get(staging, s"${tc.partitionId()}-${tc.taskAttemptId()}")
+    val fileName = f"part-${tc.partitionId()}%05d-${Paths.get(staging).getFileName}.snappy.parquet"
+    val out = mutable.ArrayBuffer.empty[Staged]
+    val subjs = mutable.HashSet.empty[UTF8String]
+    var started, rejected = false
+    var repo: UTF8String = null
+    var n = 0L
+    var dir: Path = null
+    var writer: ParquetWriter[Group] = null
+
+    def finish(): Unit = if (started) {
+      if (writer != null) {
+        writer.close()
+        Files.setPosixFilePermissions(dir.resolve(fileName), FilePerms)
+      }
+      out += Staged(if (repo == null) null else repo.toString, n, subjs.size.toLong,
+        if (writer == null) null else dir.toString)
+      writer = null
+    }
+
+    try rows.foreach { row =>
+      val r = if (row.isNullAt(RepoIdx)) null else row.getUTF8String(RepoIdx)
+      if (!started || r != repo) {
+        finish()
+        started = true
+        repo = if (r == null) null else r.clone()
+        n = 0L
+        subjs.clear()
+        rejected ||= r == null || r.numBytes == 0
+        if (!rejected) {
+          dir = mkdir(attemptDir.resolve(ExternalCatalogUtils.getPartitionPathString("repo", repo.toString)))
+          writer = openWriter(dir.resolve(fileName))
+        }
+      }
+      n += 1
+      if (!row.isNullAt(0)) {
+        val s = row.getUTF8String(0)
+        if (!subjs.contains(s)) subjs += s.clone()
+      }
+      if (writer != null) {
+        val g = new SimpleGroup(FileSchema)
+        var i = 0
+        while (i < RepoIdx) {
+          if (!row.isNullAt(i)) g.add(i, Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
+          i += 1
+        }
+        writer.write(g)
+      }
+    } catch {
+      case e: Throwable =>
+        if (writer != null) scala.util.Try(writer.close())
+        throw e
+    }
+    finish()
+    out.iterator
+  }
+
+  private val NullRepo = "triples have a null repo"
+  private val EmptyRepo = "triples have an empty repo"
+
+  /** Validates the staged repos and moves each into the table; returns
+    * them sorted by repo. Fails, publishing nothing, on null or empty
+    * repos and on a repo staged by two partitions (the input was not
+    * partitioned by repo, so its counters would be split).
+    */
+  private def publish(table: String, staged: Seq[Staged]): Seq[Staged] = {
+    val nulls = staged.filter(_.repo == null).map(_.rows).sum
+    val empties = staged.filter(_.repo == "").map(_.rows).sum
+    if (nulls + empties > 0) {
+      val counts = Seq(nulls -> NullRepo, empties -> EmptyRepo).collect { case (k, m) if k > 0 => s"$k $m" }
+      throw new IllegalArgumentException(s"${counts.mkString(" and ")}; every committed triple needs one")
+    }
+    val split = staged.groupBy(_.repo).collect { case (repo, hits) if hits.length > 1 => repo }
     if (split.nonEmpty)
       throw new IllegalStateException(
         s"repos ${split.toSeq.sorted.mkString(", ")} span several partitions; counters would be split")
-    perPartition.sortBy(_._1)
+    staged.sortBy(_.repo).map { s =>
+      val target = Paths.get(table, ExternalCatalogUtils.getPartitionPathString("repo", s.repo))
+      deleteTree(target)
+      Files.move(Paths.get(s.dir), target)
+      s
+    }
   }
 
   /** Read the committed table back. Partition discovery over the whole

@@ -1310,12 +1310,16 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, k: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // localCheckpoint: the sh subtree feeds BOTH join sides — without
-    // the cut, Catalyst re-plans it per side and the typed shingle
-    // build runs twice per doc (the same single-computation rationale
-    // as Similarity.ivfTopK's checkpoint)
+    // only docs that some pair names are shingled. The sh subtree feeds
+    // BOTH join sides; ending it in its own shuffle makes the two sides'
+    // exchanges the same plan, which Spark runs once and reuses, so each
+    // doc is shingled once with no eager cut (building the frame runs no
+    // job, and a lost block is recomputed from lineage)
+    val ids = pairs.select(col("doc_a").cast("long").as("doc_id"))
+      .union(pairs.select(col("doc_b").cast("long").as("doc_id")))
     val sh = docs
       .select(col("doc_id").cast("long"), col("text"))
+      .join(ids, Seq("doc_id"), "left_semi")
       .as[(Long, String)]
       .map { case (id, text) =>
         // null text == no shingles (empty set, like a sub-k doc)
@@ -1329,7 +1333,7 @@ object Dedup {
         }
       }
       .toDF("doc_id", "sh")
-      .localCheckpoint()
+      .repartition(col("doc_id"))
     pairs
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))

@@ -31,9 +31,13 @@ object Pipeline {
   /** Verify the sha invariant on a materialized docs table; returns the
     * number of violating rows (0 = intact). Null-safe: a row whose
     * content or content_sha alone is null violates; both null does not.
+    * One Spark job: the violating rows are counted on the planned RDD
+    * (`Dataset.count` plans an aggregate whose shuffle-map stage AQE runs
+    * as a job of its own), and the scan reads only the two columns.
     */
   def checkSha(docs: DataFrame): Long =
-    docs.filter(!(sha2(col("content"), 256) <=> col("content_sha"))).count()
+    docs.filter(!(sha2(col("content"), 256) <=> col("content_sha"))).select(lit(1))
+      .queryExecution.toRdd.count()
 
   /** Parse the docs table into sentences: [[parseCounted]] with the
     * malformed-doc counter dropped.

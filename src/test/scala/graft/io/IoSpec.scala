@@ -231,6 +231,112 @@ class IoSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  private def walkAll(root: java.nio.file.Path): Vector[java.nio.file.Path] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.toVector finally walk.close()
+  }
+
+  private def mode(p: java.nio.file.Path): String =
+    java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  test("resume: one part file per Spark-escaped repo dir, no .crc/_temporary/staging, table modes") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val root = java.nio.file.Paths.get(table)
+    val weird = Seq("org/name", "a:b=c", "pct%20enc")
+    val trips = spark.createDataset(
+      weird.flatMap(r => (1 to 3).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
+    assert(Resume.writeResumable(spark, trips, table).map(_.repo) == weird.sorted)
+    val data = walkAll(root).filterNot(p => root.relativize(p).toString.startsWith("_graft_commits"))
+    val parts = data.filter(Files.isRegularFile(_)).map(root.relativize(_).toString)
+    assert(parts.length == weird.length, s"data files: $parts")
+    weird.foreach { r =>
+      val dir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString("repo", r)
+      assert(parts.count(f => f.startsWith(dir + "/") && f.drop(dir.length + 1).matches("""part-.*\.parquet""")) == 1,
+        s"$r: no single part file under $dir in $parts")
+    }
+    assert(Set("repo=org%2Fname", "repo=a%3Ab%3Dc", "repo=pct%2520enc") ==
+      data.filter(p => Files.isDirectory(p) && p.getParent == root).map(_.getFileName.toString).toSet)
+    assert(!walkAll(root).exists { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".crc") || n == "_temporary" || n == "_graft_staging" || n.startsWith(".")
+    }, s"leftovers in ${walkAll(root)}")
+    // the modes the Hadoop-committer write gave the table: 755 dirs, 644 files
+    data.foreach { p =>
+      assert(mode(p) == (if (Files.isDirectory(p)) "rwxr-xr-x" else "rw-r--r--"), s"$p has mode ${mode(p)}")
+    }
+  }
+
+  test("resume: a killed run's staging dir is invisible to read and removed by the next commit") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    def trips(repos: String*) = spark.createDataset(
+      repos.flatMap(r => (1 to 4).map(i => Triple(s"drug$i", "int", "obj", s"$r.s$i", "e1", "e2", r))))
+    Resume.writeResumable(spark, trips("repo-a"), table)
+    // what a commit killed after its write stage leaves: staged repo dirs
+    // (one of them a committed repo) under _graft_staging
+    val staged = java.nio.file.Paths.get(table, "_graft_staging", "killed-run", "0-7")
+    trips("repo-a", "repo-b").toDF().drop("repo").write.parquet(staged.resolve("repo=repo-a").toString)
+    trips("repo-b").toDF().drop("repo").write.parquet(staged.resolve("repo=repo-b").toString)
+    val back = Resume.read(spark, table)
+    assert(back.count() == 4 && back.map(_.repo).distinct().collect().toSeq == Seq("repo-a"),
+      "staged files leaked into the committed snapshot")
+    assert(Resume.writeResumable(spark, trips("repo-a", "repo-b"), table).map(_.repo) == Seq("repo-b"))
+    assert(!Files.exists(java.nio.file.Paths.get(table, "_graft_staging")), "staging dir survived a commit")
+    assert(Resume.read(spark, table).count() == 8)
+  }
+
+  test("resume: empty-string repos are rejected like null ones, with no file written") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    // "" would land in repo=__HIVE_DEFAULT_PARTITION__, which partition
+    // discovery reads back as null: committed by manifest, lost on read
+    val trips = spark.createDataset((1 to 7).map(i =>
+      Triple(s"d$i", "int", "o", s"s$i", "e1", "e2", if (i % 3 == 0) "" else "repo-a")))
+    val e = intercept[IllegalArgumentException](Resume.writeResumable(spark, trips, table))
+    assert(e.getMessage.contains("2 triples have an empty repo"), e.getMessage)
+    assert(filesUnder(table).isEmpty, s"files written before the rejection: ${filesUnder(table)}")
+    assert(Resume.committedRepos(table).isEmpty)
+    val both = spark.createDataset(Seq(null, "", "", "repo-a").zipWithIndex.map { case (r, i) =>
+      Triple("d", "int", "o", s"s$i", "e1", "e2", r) })
+    val e2 = intercept[IllegalArgumentException](Resume.writeResumable(spark, both.coalesce(1), table))
+    assert(e2.getMessage.contains("1 triples have a null repo and 2 triples have an empty repo"), e2.getMessage)
+    assert(filesUnder(table).isEmpty, s"files written before the rejection: ${filesUnder(table)}")
+  }
+
+  test("resume: sid, e1 and e2 are written without a dictionary, the other columns with one") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val trips = spark.createDataset((1 to 50).map(i => Triple(s"d${i % 3}", "int", "o", s"s$i", s"e$i", s"f$i", "repo-a")))
+    Resume.writeResumable(spark, trips, table)
+    val file = walkAll(java.nio.file.Paths.get(table, "repo=repo-a")).filter(_.toString.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(file))
+    val dict = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage).toMap
+      finally reader.close()
+    assert(dict == Map("drugSubj" -> true, "interactionPred" -> true, "drugObj" -> true,
+      "sid" -> false, "e1" -> false, "e2" -> false), dict)
+  }
+
+  test("resume: a one-partition input commits in one Spark job, a larger one in two") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    def trips(repos: String*) = spark.createDataset(repos.flatMap(r =>
+      (1 to 5).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
+    def jobsOf(body: => Seq[Resume.Commit]) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(body)
+    val one = trips("repo-a", "repo-b").coalesce(1)
+    assert(one.rdd.getNumPartitions == 1)
+    val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, one, table))
+    assert(first.map(c => (c.repo, c.rows)) == Seq(("repo-a", 5L), ("repo-b", 5L)))
+    assert(firstJobs == 1, s"one-partition commit ran $firstJobs jobs")
+    val many = trips("repo-c", "repo-d", "repo-e")
+    assert(many.rdd.getNumPartitions > 1)
+    val (second, secondJobs) = jobsOf(Resume.writeResumable(spark, many, table))
+    assert(second.map(_.repo) == Seq("repo-c", "repo-d", "repo-e"))
+    assert(secondJobs == 2, s"multi-partition commit ran $secondJobs jobs")
+    assert(Resume.read(spark, table).count() == 25)
+  }
+
   test("codemaps: sorted deterministic ids, PAD=0/UNK=1, idx round-trip") {
     import spark.implicits._
     val sents = spark.createDataset(Seq(

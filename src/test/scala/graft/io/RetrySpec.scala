@@ -5,10 +5,8 @@ import graft.fixtures.DocGen
 import graft.ner.MentionScorer
 import graft.pipeline.Pipeline
 import org.apache.spark.TaskContext
+import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, SparkPlugin}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
-import org.apache.hadoop.mapreduce.TaskAttemptContext
-import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -20,6 +18,19 @@ object RetrySpec {
   val scoringFailures = new AtomicInteger
   val writeFailures = new AtomicInteger
   @volatile var failWrites = false
+  /** The table the current commit writes. */
+  @volatile var table: String = _
+
+  /** Whether task attempt `tid` staged a parquet file for `table`. */
+  def staged(tid: Long): Boolean = {
+    val root = Paths.get(table, "_graft_staging")
+    Files.isDirectory(root) && {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.exists { p =>
+        p.toString.endsWith(".parquet") && p.iterator().asScala.exists(_.toString.endsWith(s"-$tid"))
+      } finally walk.close()
+    }
+  }
 
   /** Fails the first attempt of partition 0 once it has tagged a sentence. */
   final class FailingScorer(inner: MentionScorer) extends MentionScorer {
@@ -34,19 +45,23 @@ object RetrySpec {
   }
 }
 
-/** Commit protocol of the retry spec's session: while `failWrites` is
-  * set, the first attempt of every write task fails at commit, after its
-  * rows (and the commit counters) have gone through.
+/** Executor plugin of the retry spec's session: while `failWrites` is
+  * set, every first task attempt that staged a commit file fails as it
+  * ends, after its files are written and its counters computed.
   */
-final class FailFirstCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
-    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
-  override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
-    val tc = TaskContext.get()
-    if (RetrySpec.failWrites && tc != null && tc.attemptNumber() == 0) {
-      RetrySpec.writeFailures.incrementAndGet()
-      throw new RuntimeException("injected write failure")
+final class FailStagedWrites extends SparkPlugin {
+  def driverPlugin(): DriverPlugin = null
+  def executorPlugin(): ExecutorPlugin = new ExecutorPlugin {
+    override def onTaskStart(): Unit = {
+      val tc = TaskContext.get()
+      if (RetrySpec.failWrites && tc != null && tc.attemptNumber() == 0)
+        tc.addTaskCompletionListener[Unit] { ctx =>
+          if (RetrySpec.staged(ctx.taskAttemptId())) {
+            RetrySpec.writeFailures.incrementAndGet()
+            throw new RuntimeException("injected write failure")
+          }
+        }
     }
-    super.commitTask(ctx)
   }
 }
 
@@ -67,7 +82,7 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.commitProtocolClass", classOf[FailFirstCommitProtocol].getName)
+      .config("spark.plugins", classOf[FailStagedWrites].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -81,6 +96,7 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Commits without timestamps, manifest bodies without `ts`, table rows. */
   private def commitOnce(m: Pipeline.Models): (Seq[(String, Long, Long)], Seq[String], Seq[String]) = {
     val table = Files.createTempDirectory("kg-retry").toString + "/triples"
+    RetrySpec.table = table
     val triples = Pipeline.score(spark, Pipeline.parse(spark, docs), spark.sparkContext.broadcast(m))
       .flatMap(_.triples)(org.apache.spark.sql.Encoders.product[graft.core.Triple])
     val commits = Resume.writeResumable(spark, triples, table)

@@ -508,6 +508,23 @@ class OpsSpec extends AnyFunSuite {
     assert(got.nonEmpty && got.values.exists(_._3 > 0.0), "vacuous fixture: no dup trigram fired")
   }
 
+  test("ngram jaccard: building the frame runs no job; each paired doc is shingled once") {
+    import org.apache.spark.sql.functions.{col, concat_ws, lit}
+    val fired = spark.sparkContext.longAccumulator("jaccard-text-rows")
+    val touch = org.apache.spark.sql.functions.udf { (t: String) => fired.add(1); t }
+    // spark.range, not a local Seq: the optimizer folds projections over
+    // local relations on the driver
+    val d = spark.range(40).select(col("id").as("doc_id"),
+      touch(concat_ws(" ", lit("a b c"), (col("id") % 4).cast("string"), lit("d e"))).as("text"))
+    val pairs = spark.range(0, 20, 2).select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
+    val (j, jobs) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(Dedup.ngramJaccard(d, pairs))
+    assert(jobs == 0, s"building ngramJaccard ran $jobs jobs")
+    val got = j.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // doc i and i + 1 differ in one token: of 4 + 4 3-grams only "a b c" is shared
+    assert(got == (0L until 20L by 2).map(i => (i, i + 1) -> 0.1429).toMap, got)
+    assert(fired.value == 20L, s"text evaluated ${fired.value} times for 20 paired docs")
+  }
+
   test("ngram jaccard: sorted-merge counts == independent set-algebra replay (randomized)") {
     val rnd = new scala.util.Random(29)
     val vocab = Array("x", "y", "z", "w")

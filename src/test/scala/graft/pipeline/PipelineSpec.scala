@@ -69,6 +69,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(violations((null, null)) == 0L, "null content with null sha is intact")
   }
 
+  test("checkSha is one Spark job") {
+    val n = corpus.count()
+    val tampered = corpus.withColumn("content_sha", org.apache.spark.sql.functions.lit("x"))
+    val (counts, jobs) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(
+      (Pipeline.checkSha(corpus), Pipeline.checkSha(tampered)))
+    assert(counts == ((0L, n)))
+    assert(jobs == 2, s"two checkSha calls ran $jobs jobs")
+  }
+
+
   test("corpus parses: sentences, entities, pairs all present") {
     import spark.implicits._
     assert(sents.count() > 500)
