@@ -95,9 +95,8 @@ object SparkEntry {
     * rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {
-    val (train, ev) = kgCorpus(spark, 80)
-    val (_, _, trips) = Pipeline.run(spark, train, ev, "hybrid")
-    trips.toDF()
+    import spark.implicits._
+    kgScored(spark, "hybrid", 80)._2.flatMap(_.triples).toDF()
   }
 
   // ---- KG pipeline queries (rows-only; gated by tests + evaluator) ----
@@ -106,30 +105,33 @@ object SparkEntry {
     // localCheckpoint (GC-released), not cache: Verify runs ~10 kg
     // queries, each building a fresh corpus — cache entries would pin
     // storage for the whole 47-query session
-    val sents = Pipeline.parse(s, DocGen.corpus(s, n)).localCheckpoint()
-    val train = sents.filter(x => math.abs(x.docId.hashCode) % 4 != 0)
-    val ev = sents.filter(x => math.abs(x.docId.hashCode) % 4 == 0)
-    (train, ev)
+    DocGen.trainEval(Pipeline.parse(s, DocGen.corpus(s, n)).localCheckpoint())
+  }
+
+  /** The corpus's eval sentences, scored by models `scorer` fit on its
+    * train split: (eval, scored).
+    */
+  private def kgScored(s: SparkSession, scorer: String, n: Long = 200) = {
+    val (train, ev) = kgCorpus(s, n)
+    val models = s.sparkContext.broadcast(Pipeline.fit(s, train, scorer))
+    (ev, Pipeline.score(s, ev, models))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -------- KG construction (no SQL equivalent; rows-only) ----------
     "kg_mentions" -> ((s, _) => {
-      val (train, ev) = kgCorpus(s, 200)
-      val (ms, _, _) = Pipeline.run(s, train, ev, "hybrid")
-      ms.toDF().orderBy("sid", "start")
+      import s.implicits._
+      kgScored(s, "hybrid")._2.flatMap(_.mentions).toDF().orderBy("sid", "start")
     }),
     // same pipeline through the CRF scorer (A6 parity path; rows-only —
     // the model's gates are CrfSpec + the DebugCrf F1 rows)
     "kg_mentions_crf" -> ((s, _) => {
-      val (train, ev) = kgCorpus(s, 200)
-      val (ms, _, _) = Pipeline.run(s, train, ev, "crf")
-      ms.toDF().orderBy("sid", "start")
+      import s.implicits._
+      kgScored(s, "crf")._2.flatMap(_.mentions).toDF().orderBy("sid", "start")
     }),
     "kg_triples" -> ((s, _) => {
-      val (train, ev) = kgCorpus(s, 200)
-      val (_, _, trips) = Pipeline.run(s, train, ev, "hybrid")
-      trips.toDF().orderBy("sid")
+      import s.implicits._
+      kgScored(s, "hybrid")._2.flatMap(_.triples).toDF().orderBy("sid")
     }),
     "kg_feature_rows" -> ((s, _) => {
       import s.implicits._
@@ -150,9 +152,8 @@ object SparkEntry {
     }),
     "kg_eval_ner" -> ((s, _) => {
       import s.implicits._
-      val (train, ev) = kgCorpus(s, 200)
-      val (ms, _, _) = Pipeline.run(s, train, ev, "hybrid")
-      s.createDataset(Pipeline.evaluateNER(s, ev, ms)).toDF().orderBy("kind")
+      val (ev, scored) = kgScored(s, "hybrid")
+      s.createDataset(Pipeline.evaluateNER(s, ev, scored.flatMap(_.mentions))).toDF().orderBy("kind")
     }),
     // same eval math over the CRF scorer's mentions: its oracle replays
     // Evaluator in SQL with the pred side swapped to the kg_mentions_crf
@@ -160,15 +161,13 @@ object SparkEntry {
     // hash-verified (a wrong CRF mention dump hash-mismatches this)
     "kg_eval_ner_crf" -> ((s, _) => {
       import s.implicits._
-      val (train, ev) = kgCorpus(s, 200)
-      val (ms, _, _) = Pipeline.run(s, train, ev, "crf")
-      s.createDataset(Pipeline.evaluateNER(s, ev, ms)).toDF().orderBy("kind")
+      val (ev, scored) = kgScored(s, "crf")
+      s.createDataset(Pipeline.evaluateNER(s, ev, scored.flatMap(_.mentions))).toDF().orderBy("kind")
     }),
     "kg_eval_ddi" -> ((s, _) => {
       import s.implicits._
-      val (train, ev) = kgCorpus(s, 200)
-      val (_, rels, _) = Pipeline.run(s, train, ev, "hybrid")
-      s.createDataset(Pipeline.evaluateDDI(s, ev, rels)).toDF().orderBy("kind")
+      val (ev, scored) = kgScored(s, "hybrid")
+      s.createDataset(Pipeline.evaluateDDI(s, ev, scored.flatMap(_.relations))).toDF().orderBy("kind")
     }),
     "kg_canonical_map" -> ((s, _) => {
       import s.implicits._

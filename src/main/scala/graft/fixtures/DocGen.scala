@@ -1,7 +1,7 @@
 package graft.fixtures
 
-import graft.core.DocRow
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{DocRow, ParsedSentence}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -248,5 +248,11 @@ object DocGen {
       }
     val quirks = spark.createDataset(quirkDocs)
     graft.pipeline.Pipeline.withSha(gen.union(quirks).toDF())
+  }
+
+  /** (train, eval) split of parsed sentences: eval iff `|docId.hashCode| % 4 == 0`. */
+  def trainEval(sents: Dataset[ParsedSentence]): (Dataset[ParsedSentence], Dataset[ParsedSentence]) = {
+    def isEval(s: ParsedSentence) = math.abs(s.docId.hashCode) % 4 == 0
+    (sents.filter(s => !isEval(s)), sents.filter(s => isEval(s)))
   }
 }

@@ -66,7 +66,7 @@ object Resume {
     * or control char would otherwise make the manifest CONTENT invalid
     * JSON for any driver that parses it.
     */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'          => "\\\""
     case '\\'         => "\\\\"
     case '\n'         => "\\n"

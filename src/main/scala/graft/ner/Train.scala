@@ -294,10 +294,4 @@ object Train {
       cur.getOrElse(Crf.fit(IndexedSeq.empty))
     } finally streams.unpersist()
   }
-
-  /** Gold spans -> reference-tag oracle (used for round-trip parity and
-    * as the training-label producer).
-    */
-  def goldTags(toks: IndexedSeq[graft.core.Tok], spans: Seq[GoldSpan]): IndexedSeq[String] =
-    toks.map(t => Features.getTag(t, spans))
 }

@@ -858,6 +858,9 @@ object Dedup {
     * [[megaBucketCount]] or a caller-provided `megaObs` handle; each
     * degradation additionally logs a rate-limited executor-side
     * warning.
+    * Precondition, unchecked (a check costs a job): `doc_id` is unique. A
+    * doc_id in two identical rows pairs with itself (support `bands`) and
+    * doubles its other pairs' support (PlanSpec pins this).
     */
   def lshCandidates(
       docs: DataFrame,
@@ -1154,6 +1157,9 @@ object Dedup {
     * `graft.dedup.megaBuckets.simhash.<seq>` observe metric
     * ([[megaBucketCount]] / `megaObs`) and logged as a rate-limited
     * executor-side warning.
+    * Precondition, unchecked (a check costs a job): `doc_id` is unique. A
+    * doc_id in two identical rows adds a `(doc_id, doc_id, 0)` self-pair
+    * (PlanSpec pins this).
     */
   def simhashNearDup(
       docs: DataFrame,

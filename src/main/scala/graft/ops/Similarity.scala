@@ -142,15 +142,11 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * a hash-derived value in [-0.5, 0.5). No RNG state — reproducible
-    * across engines and runs. The typed twin below computes the SAME
-    * value through Spark's own Murmur3 utility (the `hash()` function's
-    * evaluation for two int children is hashInt(plane, 42) chained into
-    * hashInt(dim, ·) — we call the identical library code, no
-    * reimplementation).
+    * across engines and runs. It equals the Column form
+    * `pmod(hash(lit(plane), dim), 1000) / 1000.0 - 0.5` (replayed in
+    * AnnRecallSpec): `hash()` of two ints is hashInt(plane, 42) chained
+    * into hashInt(dim, ·), the Murmur3 library code called here.
     */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (pmod(hash(lit(plane), dim), lit(1000)).cast("double") / 1000.0) - 0.5
-
   private def planeComponentF(plane: Int, dim: Int): Double = {
     val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(
       dim, org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(plane, 42))
@@ -171,11 +167,11 @@ object Similarity {
     * form). Null embedding / null element → every dotp null → every
     * bit's `when` falls to otherwise(0) → bucket 0, replicated
     * explicitly.
+    * `bucket` is always the LAST field: an existing `bucket` column is
+    * dropped and the new one appended (`withColumn` kept its position).
     */
   def lshBuckets(embeddings: DataFrame, nPlanes: Int = 8): DataFrame = {
     import org.apache.spark.sql.types._
-    // withColumn REPLACED an existing `bucket` column; drop it first so
-    // the appended field keeps that contract instead of duplicating
     val base =
       if (embeddings.columns.contains("bucket")) embeddings.drop("bucket") else embeddings
     val schema = base.schema

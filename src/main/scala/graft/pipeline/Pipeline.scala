@@ -6,7 +6,7 @@ import graft.evaluate.Evaluator
 import graft.kg.Canonicalize
 import graft.ner._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end KG-construction pipeline (SURVEY §3 E1 recast).
@@ -22,22 +22,27 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** Attach the per-row content sha256 invariant (BASELINE.json):
-    * computed at ingest, re-checked at every materialization boundary.
+  /** Attach the per-row content sha256 invariant (BASELINE.json),
+    * computed at ingest. [[scoreDocs]] re-checks it on every row it scores,
+    * batch and stream; [[checkSha]] counts the rows that break it.
     */
   def withSha(docs: DataFrame): DataFrame =
     docs.withColumn("content_sha", sha2(col("content"), 256))
 
+  /** The sha invariant of one row, shared by [[checkSha]] and [[scoreDocs]].
+    * Null-safe: a row whose content or content_sha alone is null breaks
+    * it; both null does not.
+    */
+  private val shaIntact: Column = sha2(col("content"), 256) <=> col("content_sha")
+
   /** Verify the sha invariant on a materialized docs table; returns the
-    * number of violating rows (0 = intact). Null-safe: a row whose
-    * content or content_sha alone is null violates; both null does not.
-    * One Spark job: the violating rows are counted on the planned RDD
-    * (`Dataset.count` plans an aggregate whose shuffle-map stage AQE runs
-    * as a job of its own), and the scan reads only the two columns.
+    * number of violating rows (0 = intact). One Spark job: the violating
+    * rows are counted on the planned RDD (`Dataset.count` plans an
+    * aggregate whose shuffle-map stage AQE runs as a job of its own), and
+    * the scan reads only the two columns.
     */
   def checkSha(docs: DataFrame): Long =
-    docs.filter(!(sha2(col("content"), 256) <=> col("content_sha"))).select(lit(1))
-      .queryExecution.toRdd.count()
+    docs.filter(!shaIntact).select(lit(1)).queryExecution.toRdd.count()
 
   /** Parse the docs table into sentences: [[parseCounted]] with the
     * malformed-doc counter dropped.
@@ -266,7 +271,9 @@ object Pipeline {
       sid: String,
       mentions: Seq[Mention],
       triples: Seq[Triple]
-  )
+  ) {
+    def relations: Seq[Relation] = triples.map(t => Relation(t.sid, t.e1, t.e2, t.interactionPred))
+  }
 
   /** The fused scoring pass: ONE narrow mapPartitions computes tokens,
     * features, tags, decoded mentions, DDI relations, and canonicalized
@@ -317,26 +324,31 @@ object Pipeline {
     }
   }
 
-  // ---- full run ---------------------------------------------------------
-
-  /** Fit on `train`, fused-score `eval`. Returns (mentions, relations,
-    * triples).
+  /** The paper's pass over a docs table `(repo, path, content,
+    * content_sha)`, batch or one stream micro-batch: one narrow pass
+    * checks each row's sha invariant, parses and scores it. Its triples
+    * go to [[graft.io.Resume.writeResumable]], the pass's only commit.
+    *
+    * A row that breaks the invariant fails the pass (and so its commit,
+    * as a null repo does) with an `IllegalStateException` naming its
+    * `repo` and `path`; [[checkSha]] stays the counter. Malformed XML is
+    * skipped, as in [[parse]]. A duplicated doc row is scored twice: its
+    * triples are committed twice and counted twice in its manifest `rows`
+    * (`distinct_subj` is unchanged).
     */
-  def run(
+  def scoreDocs(
       spark: SparkSession,
-      train: Dataset[ParsedSentence],
-      eval: Dataset[ParsedSentence],
-      scorerName: String = "hybrid",
-      mnbMinFreq: Long = 1L
-  ): (Dataset[Mention], Dataset[Relation], Dataset[Triple]) = {
+      docs: DataFrame,
+      models: Broadcast[Models]
+  ): Dataset[SentenceResult] = {
     import spark.implicits._
-    val models = spark.sparkContext.broadcast(fit(spark, train, scorerName, mnbMinFreq))
-    // localCheckpoint, not cache: the three returned views share one
-    // materialization, and checkpoint blocks are released when the
-    // frames are garbage-collected — run() has no unpersist point, and
-    // a catalog driver invokes it dozens of times per session
-    val scored = score(spark, eval, models).localCheckpoint()
-    val rels = scored.flatMap(_.triples.map(t => Relation(t.sid, t.e1, t.e2, t.interactionPred)))
-    (scored.flatMap(_.mentions), rels, scored.flatMap(_.triples))
+    val sents = docs
+      .select(col("repo"), col("path"), col("content"), shaIntact)
+      .as[(String, String, String, Boolean)]
+      .mapPartitions(_.flatMap { case (repo, path, content, intact) =>
+        if (!intact) throw new IllegalStateException(s"content_sha mismatch: repo $repo, path $path")
+        XmlParse.parseDocEither(repo, content).getOrElse(Nil)
+      })
+    score(spark, sents, models)
   }
 }

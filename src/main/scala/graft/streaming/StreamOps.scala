@@ -39,21 +39,17 @@ object StreamOps {
         col("total_value")
       )
 
-  /** Streaming KG construction: the SAME fused parse → tokenize → NER
-    * score/decode → DDI classify → triples pass the batch pipeline
-    * runs, applied to a streaming docs source (`readStream` of the
-    * input_hint table shape). The pass is stateless per document (all
-    * models broadcast, zero shuffle — PlanSpec), so it runs in append
-    * mode with no watermark or state store: ingest-time scoring at the
-    * micro-batch cadence. StreamOpsSpec proves stream results ==
-    * batch results on the same documents.
+  /** Streaming KG construction: [[graft.pipeline.Pipeline.scoreDocs]]
+    * over a streaming docs source, sha check included (stateless per row,
+    * so append mode with no watermark). Kept only because `kgbench/`
+    * compiles against it.
     */
   def scoreStream(
       spark: SparkSession,
       docs: DataFrame,
       models: org.apache.spark.broadcast.Broadcast[graft.pipeline.Pipeline.Models]
   ): Dataset[graft.pipeline.Pipeline.SentenceResult] =
-    graft.pipeline.Pipeline.score(spark, graft.pipeline.Pipeline.parse(spark, docs), models)
+    graft.pipeline.Pipeline.scoreDocs(spark, docs, models)
 
   /** Streaming dedup with bounded state: drop events whose `event_id`
     * was already seen WITHIN THE WATERMARK DELAY (`lateSec`). A duplicate

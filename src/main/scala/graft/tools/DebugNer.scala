@@ -14,10 +14,10 @@ object DebugNer {
     import spark.implicits._
 
     val corpus = DocGen.corpus(spark, 300).cache()
-    val sents = Pipeline.parse(spark, corpus).cache()
-    val train = sents.filter(s => math.abs(s.docId.hashCode) % 4 != 0)
-    val evalSents = sents.filter(s => math.abs(s.docId.hashCode) % 4 == 0).cache()
-    val (mentions, _, _) = Pipeline.run(spark, train, evalSents, "hybrid")
+    val (train, ev) = DocGen.trainEval(Pipeline.parse(spark, corpus).cache())
+    val evalSents = ev.cache()
+    val models = spark.sparkContext.broadcast(Pipeline.fit(spark, train, "hybrid"))
+    val mentions = Pipeline.score(spark, evalSents, models).flatMap(_.mentions)
 
     val gold = Pipeline.goldNer(spark, evalSents).collect().toSet
     val pred = Pipeline.predNer(spark, mentions).collect().toSet

@@ -4,12 +4,14 @@ import graft.core.Triple
 import graft.fixtures.DocGen
 import graft.io.Resume
 import graft.pipeline.Pipeline
-import graft.streaming.StreamOps
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming KG pipeline on the REAL standalone cluster
-  * (driven by tools/stream_cluster.sh): file source → scoreStream →
+  * (driven by tools/stream_cluster.sh): file source →
+  * [[Pipeline.scoreDocs]], which checks each row's content sha →
   * foreachBatch + [[Resume.writeResumable]] manifest sink. The harness
   * SIGKILLs the driver mid-stream and re-submits; the checkpoint plus
   * the manifest contract must deliver exactly-once per repo — the same
@@ -48,42 +50,23 @@ object StreamCluster {
         val nDocs = nDocsS.toLong
         val corpus = DocGen.corpus(spark, nDocs, seed = 42L).cache()
         val models = mkModels(spark)
-        val expected = Pipeline.score(spark, Pipeline.parse(spark, corpus), models)
+        val expected = Pipeline.scoreDocs(spark, corpus, models)
           .flatMap(_.triples).groupBy(col("repo")).count()
           .as[(String, Long)].collect().sortBy(_._1)
         val repos = expected.map(_._1)
         // one file per repo: each micro-batch is one repo's commit unit
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+        Files.createDirectories(Paths.get(srcDir))
         repos.foreach { r =>
-          val tmp = java.nio.file.Files.createTempDirectory("prep").toString
-          corpus.filter(col("repo") === r).coalesce(1).write.mode("overwrite").parquet(tmp)
-          val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-          val moved = // close the stream: it holds a directory fd
-            try {
-              val part = listing.iterator()
-              var done = false
-              while (part.hasNext && !done) {
-                val p = part.next()
-                if (p.toString.endsWith(".parquet")) {
-                  java.nio.file.Files.move(p,
-                    java.nio.file.Paths.get(srcDir, java.net.URLEncoder.encode(r, "UTF-8") + ".parquet"))
-                  done = true
-                }
-              }
-              done
-            } finally listing.close()
-          require(moved, s"no parquet part written for repo $r")
+          val tmp = Files.createTempDirectory("prep")
+          corpus.filter(col("repo") === r).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val listing = Files.list(tmp) // close it: it holds a directory fd
+          val part = try listing.iterator().asScala.find(_.toString.endsWith(".parquet")) finally listing.close()
+          require(part.isDefined, s"no parquet part written for repo $r")
+          Files.move(part.get, Paths.get(srcDir, java.net.URLEncoder.encode(r, "UTF-8") + ".parquet"))
         }
         val total = expected.map(_._2).sum
-        // repo ids are arbitrary strings — escape them like Resume does
-        def jsonStr(x: String): String = "\"" + x.flatMap {
-          case '"'          => "\\\""
-          case '\\'         => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c            => c.toString
-        } + "\""
-        val body = expected.map { case (r, n) => s"${jsonStr(r)}:$n" }.mkString("{", ",", "}")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(expectedJson),
+        val body = expected.map { case (r, n) => s"${Resume.jsonStr(r)}:$n" }.mkString("{", ",", "}")
+        Files.writeString(Paths.get(expectedJson),
           s"""{"total":$total,"per_repo":$body}""")
         println(s"""{"prep_repos":${repos.length},"expected_triples":$total}""")
 
@@ -99,7 +82,7 @@ object StreamCluster {
         val schema = DocGen.corpus(spark, 1).schema
         val src = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        val q = StreamOps.scoreStream(spark, src, models)
+        val q = Pipeline.scoreDocs(spark, src, models)
           .flatMap(_.triples)
           .writeStream
           .foreachBatch { (b: Dataset[Triple], id: Long) =>

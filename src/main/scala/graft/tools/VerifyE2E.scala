@@ -31,10 +31,12 @@ object VerifyE2E {
     val corpus = DocGen.corpus(spark, nDocs).cache()
     println(s"sha-invariant violations: ${Pipeline.checkSha(corpus)}")
 
-    val sents = Pipeline.parse(spark, corpus).cache()
-    val train = sents.filter(s => math.abs(s.docId.hashCode) % 4 != 0)
-    val evalSents = sents.filter(s => math.abs(s.docId.hashCode) % 4 == 0).cache()
-    val (mentions, rels, trips) = Pipeline.run(spark, train, evalSents, "hybrid")
+    val (train, ev) = DocGen.trainEval(Pipeline.parse(spark, corpus).cache())
+    val evalSents = ev.cache()
+    val models = spark.sparkContext.broadcast(Pipeline.fit(spark, train, "hybrid"))
+    val scored = Pipeline.score(spark, evalSents, models).cache()
+    val (mentions, rels, trips) =
+      (scored.flatMap(_.mentions), scored.flatMap(_.relations), scored.flatMap(_.triples))
 
     // gold dir: one XML file per eval doc (reference evaluator reads a dir)
     val goldDir = outDir.resolve("gold")

@@ -97,7 +97,7 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def commitOnce(m: Pipeline.Models): (Seq[(String, Long, Long)], Seq[String], Seq[String]) = {
     val table = Files.createTempDirectory("kg-retry").toString + "/triples"
     RetrySpec.table = table
-    val triples = Pipeline.score(spark, Pipeline.parse(spark, docs), spark.sparkContext.broadcast(m))
+    val triples = Pipeline.scoreDocs(spark, docs, spark.sparkContext.broadcast(m))
       .flatMap(_.triples)(org.apache.spark.sql.Encoders.product[graft.core.Triple])
     val commits = Resume.writeResumable(spark, triples, table)
     val dir = Paths.get(table, "_graft_commits")

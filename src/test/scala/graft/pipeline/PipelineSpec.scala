@@ -16,9 +16,12 @@ class PipelineSpec extends AnyFunSuite {
 
   private lazy val corpus = DocGen.corpus(spark, 300).cache()
   private lazy val sents = Pipeline.parse(spark, corpus).cache()
-  private lazy val train = sents.filter(s => math.abs(s.docId.hashCode) % 4 != 0)
-  private lazy val evalSents = sents.filter(s => math.abs(s.docId.hashCode) % 4 == 0).cache()
-  private lazy val run = Pipeline.run(spark, train, evalSents, "hybrid")
+  private lazy val (train, evalSents) = {
+    val (t, e) = DocGen.trainEval(sents)
+    (t, e.cache())
+  }
+  private lazy val scored = Pipeline.score(spark, evalSents,
+    spark.sparkContext.broadcast(Pipeline.fit(spark, train, "hybrid"))).cache()
 
   test("featureRowsIndexed: idx is emission order even for quote tokens (start = -1)") {
     import spark.implicits._
@@ -88,25 +91,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("NER on synthetic corpus: typed P and R >= 0.95 (BASELINE gate)") {
-    val (mentions, _, _) = run
-    val rows = Pipeline.evaluateNER(spark, evalSents, mentions)
+    import spark.implicits._
+    val rows = Pipeline.evaluateNER(spark, evalSents, scored.flatMap(_.mentions))
     val cls = rows.find(_.kind == "CLASS").get
     assert(cls.p >= 0.95, s"NER precision ${cls.p} < 0.95\n${graft.evaluate.Evaluator.statsTable(rows)}")
     assert(cls.r >= 0.95, s"NER recall ${cls.r} < 0.95\n${graft.evaluate.Evaluator.statsTable(rows)}")
   }
 
   test("DDI on synthetic corpus: typed P and R >= 0.95 (BASELINE gate)") {
-    val (_, rels, _) = run
-    val rows = Pipeline.evaluateDDI(spark, evalSents, rels)
+    import spark.implicits._
+    val rows = Pipeline.evaluateDDI(spark, evalSents, scored.flatMap(_.relations))
     val cls = rows.find(_.kind == "CLASS").get
     assert(cls.p >= 0.95, s"DDI precision ${cls.p} < 0.95\n${graft.evaluate.Evaluator.statsTable(rows)}")
     assert(cls.r >= 0.95, s"DDI recall ${cls.r} < 0.95\n${graft.evaluate.Evaluator.statsTable(rows)}")
   }
 
   test("triples: canonical subjects/objects, evaluator-parity keys intact") {
-    val (_, rels, trips) = run
-    val t = trips.cache()
-    assert(t.count() == rels.count()) // every relation becomes one triple
+    import spark.implicits._
+    val t = scored.flatMap(_.triples).cache()
+    assert(t.count() == scored.flatMap(_.relations).count()) // every relation becomes one triple
     val interactionClasses = Set("mechanism", "effect", "advise", "int")
     assert(t.collect().forall(x => interactionClasses.contains(x.interactionPred)))
     // canonicalization lowercases and resolves variants

@@ -96,14 +96,46 @@ class PlanSpec extends AnyFunSuite {
     assert(want.toMap.apply(9L) == 4L && want.toMap.apply(8L) == 7L, s"vacuous fixture: $want")
   }
 
+  private val nearDupText = "alpha beta gamma delta epsilon zeta eta theta"
+
+  /** `rows`, and `rows` with doc 1 repeated as a second, identical row. */
+  private def repeatedId(rows: (Long, String)*) = (rows, rows :+ rows.head)
+
+  test("lshCandidates: a repeated doc_id row self-pairs and doubles its pairs' band support") {
+    def pairs(rs: Seq[(Long, String)]) =
+      graft.ops.Dedup.lshCandidates(spark.createDataFrame(rs).toDF("doc_id", "text"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val (rows, dup) = repeatedId((1L, nearDupText), (2L, nearDupText + " iota"),
+      (3L, "one two three four five six seven"), (4L, "one two three four five six seven eight"))
+    val want = pairs(rows)
+    assert(want.contains((1L, 2L)) && want.contains((3L, 4L)), s"vacuous fixture: $want")
+    val doubled = want.map { case ((a, b), n) => (a, b) -> (if (a == 1L || b == 1L) 2 * n else n) }
+    // 8 bands, each bucketing both copies of doc 1 together
+    assert(pairs(dup) == doubled + ((1L, 1L) -> 8L))
+  }
+
+  test("simhashNearDup: a repeated doc_id row adds a hamming-0 self-pair") {
+    def pairs(rs: Seq[(Long, String)]) =
+      graft.ops.Dedup.simhashNearDup(spark.createDataFrame(rs).toDF("doc_id", "text"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // doc 2 is doc 1's tokens reversed: the same simhash
+    val (rows, dup) = repeatedId((1L, nearDupText), (2L, nearDupText.split(" ").reverse.mkString(" ")),
+      (3L, "one two three four five six seven"))
+    val want = pairs(rows)
+    assert(want == Set((1L, 2L, 0)), s"vacuous fixture: $want")
+    assert(pairs(dup) == want + ((1L, 1L, 0)))
+  }
+
   test("fused scoring pass plans with zero Exchange (no shuffle)") {
     import spark.implicits._
     val corpus = graft.fixtures.DocGen.corpus(spark, 20)
     val sents = Pipeline.parse(spark, corpus)
     val models = spark.sparkContext.broadcast(
       Pipeline.fit(spark, sents, "gazetteer"))
-    val plan = planOf(Pipeline.score(spark, sents, models).toDF())
-    assert(!plan.contains("Exchange"), "scoring pass should not shuffle:\n" + plan)
+    for (scored <- Seq(Pipeline.score(spark, sents, models), Pipeline.scoreDocs(spark, corpus, models))) {
+      val plan = planOf(scored.toDF())
+      assert(!plan.contains("Exchange"), "scoring pass should not shuffle:\n" + plan)
+    }
   }
 
   test("q16: observe() guard metric adds no shuffle — exactly 2 Exchanges") {

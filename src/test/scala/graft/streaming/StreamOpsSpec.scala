@@ -5,6 +5,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
+object StreamOpsSpec {
+  /** A docs-table row with its ingest-time sha, as a MemoryStream element. */
+  final case class ShaDoc(repo: String, path: String, commit: String, lang: String,
+      content: String, content_sha: String)
+}
+
 class StreamOpsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -37,7 +43,6 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("scoreStream: streaming KG pass equals the batch pipeline on the same docs") {
     import spark.implicits._
-    import graft.core.DocRow
     import graft.pipeline.Pipeline
     implicit val sqlCtx = spark.sqlContext
     val corpus = graft.fixtures.DocGen.corpus(spark, 30)
@@ -47,9 +52,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val batch = Pipeline.score(spark, train, models).collect()
       .map(r => r.sid -> (r.mentions.toList, r.triples.toList)).toMap
 
-    val docRows = corpus
-      .select("repo", "path", "commit", "lang", "content").as[DocRow].collect()
-    val mem = MemoryStream[DocRow]
+    val docRows = corpus.as[StreamOpsSpec.ShaDoc].collect()
+    val mem = MemoryStream[StreamOpsSpec.ShaDoc]
     mem.addData(docRows.take(15).toSeq)
     val q = StreamOps.scoreStream(spark, mem.toDF(), models)
       .writeStream.format("memory").queryName("kg_stream")
@@ -779,7 +783,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val models = spark.sparkContext.broadcast(
       Pipeline.fit(spark, Pipeline.parse(spark, corpus), "hybrid"))
     // ground truth: the batch pipeline's triples over the same corpus
-    val expected = Pipeline.score(spark, Pipeline.parse(spark, corpus), models)
+    val expected = Pipeline.scoreDocs(spark, corpus, models)
       .flatMap(_.triples).collect().sortBy(_.toString).toSeq
     val repos = corpus.select("repo").distinct().as[String].collect().sorted
     assert(repos.length >= 3 && expected.nonEmpty, "fixture must span repos and yield triples")

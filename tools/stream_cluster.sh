@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Streaming KG pipeline with CRASH RECOVERY on the real standalone
-# cluster: file source -> scoreStream -> resumable manifest sink,
-# SIGKILL the driver mid-stream, re-submit, and verify the final table
-# exactly matches the batch pipeline's ground truth (exactly-once per
-# repo via checkpoint + manifests).
+# cluster: file source -> Pipeline.scoreDocs (a content_sha mismatch fails
+# the batch) -> resumable manifest sink, SIGKILL the driver mid-stream,
+# re-submit, and verify the final table exactly matches the batch ground
+# truth (exactly-once per repo via checkpoint + manifests).
 #
 # Usage: tools/stream_cluster.sh [nDocs]
 set -euo pipefail
