@@ -858,9 +858,8 @@ object Dedup {
     * [[megaBucketCount]] or a caller-provided `megaObs` handle; each
     * degradation additionally logs a rate-limited executor-side
     * warning.
-    * Precondition, unchecked (a check costs a job): `doc_id` is unique. A
-    * doc_id in two identical rows pairs with itself (support `bands`) and
-    * doubles its other pairs' support (PlanSpec pins this).
+    * A `doc_id` in several identical rows counts once: bucket members
+    * are a set, and no doc pairs with itself (PlanSpec pins both).
     */
   def lshCandidates(
       docs: DataFrame,
@@ -875,7 +874,7 @@ object Dedup {
     val obs = megaObservation("lsh", megaObs)
     minhashWithFp(docs, bands, k, fast)
       .groupBy(col("band"), col("sig"))
-      .agg(collect_list(struct(col("doc_id"), col("fp"))).as("members"))
+      .agg(collect_set(struct(col("doc_id"), col("fp"))).as("members"))
       .filter(size(col("members")) > 1)
       .observe(obs, megaMetric(size(col("members")), maxBucket))
       .select(col("members"))
@@ -924,16 +923,16 @@ object Dedup {
         val rep = ms.head._1 // ms preserves s's doc_id order: head = min
         ms.iterator.drop(1).map(m => (rep, m._1))
       }
-      val star = s.iterator.filter(_._2 != hubFp).map { case (b, _) => (hub, b) }
+      val star = s.iterator.filter(m => m._2 != hubFp && m._1 != hub).map { case (b, _) => (hub, b) }
       collapse ++ star
     } else {
       // primitive-array while-loop iterator, not a for-comprehension —
       // same rationale as [[simhashBucketPairs]]'s normal path (the
       // comprehension paid closure dispatch + tuple reads per pair).
-      val n = s.length
-      val ids = new Array[Long](n)
-      var t = 0
-      s.foreach { m => ids(t) = m._1; t += 1 }
+      // A doc_id listed twice (same id, two fingerprints) is kept once.
+      val ids = new Array[Long](s.length)
+      var n = 0
+      s.foreach { m => if (n == 0 || ids(n - 1) != m._1) { ids(n) = m._1; n += 1 } }
       new scala.collection.AbstractIterator[(Long, Long)] {
         private var i = 0
         private var j = 1
@@ -1157,9 +1156,8 @@ object Dedup {
     * `graft.dedup.megaBuckets.simhash.<seq>` observe metric
     * ([[megaBucketCount]] / `megaObs`) and logged as a rate-limited
     * executor-side warning.
-    * Precondition, unchecked (a check costs a job): `doc_id` is unique. A
-    * doc_id in two identical rows adds a `(doc_id, doc_id, 0)` self-pair
-    * (PlanSpec pins this).
+    * A `doc_id` in several identical rows counts once: bucket members
+    * are a set, and no doc pairs with itself (PlanSpec pins both).
     */
   def simhashNearDup(
       docs: DataFrame,
@@ -1189,7 +1187,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.key").as("key"))
     banded
       .groupBy(col("band"), col("key"))
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("members"))
+      .agg(collect_set(struct(col("doc_id"), col("simhash"))).as("members"))
       .filter(size(col("members")) > 1)
       .observe(obs, megaMetric(size(col("members")), maxBucket))
       .select(col("members"))
@@ -1246,7 +1244,7 @@ object Dedup {
       val (hub, hubSh) = s.head
       val star = s.iterator.drop(1).flatMap { case (b, bSh) =>
         val h = java.lang.Long.bitCount(hubSh ^ bSh)
-        if (h <= maxHamming) Iterator((hub, b, h)) else Iterator.empty
+        if (h <= maxHamming && b != hub) Iterator((hub, b, h)) else Iterator.empty
       }
       val groups = s.groupBy(_._2)
       val collapse = groups.valuesIterator.flatMap { ms =>
@@ -1260,7 +1258,7 @@ object Dedup {
             i <- reps.indices.iterator
             j <- (i + 1 until reps.length).iterator
             h = java.lang.Long.bitCount(reps(i)._2 ^ reps(j)._2)
-            if h <= maxHamming
+            if h <= maxHamming && reps(i)._1 != reps(j)._1
           } yield (reps(i)._1, reps(j)._1, h)
         else Iterator.empty
       star ++ collapse ++ repPairs
@@ -1283,7 +1281,7 @@ object Dedup {
           nxt = null
           while (nxt == null && i < n - 1) {
             val h = java.lang.Long.bitCount(shs(i) ^ shs(j))
-            if (h <= maxHamming) nxt = (ids(i), ids(j), h)
+            if (h <= maxHamming && ids(i) != ids(j)) nxt = (ids(i), ids(j), h)
             j += 1
             if (j >= n) { i += 1; j = i + 1 }
           }

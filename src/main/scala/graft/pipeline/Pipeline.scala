@@ -335,6 +335,19 @@ object Pipeline {
     * skipped, as in [[parse]]. A duplicated doc row is scored twice: its
     * triples are committed twice and counted twice in its manifest `rows`
     * (`distinct_subj` is unchanged).
+    *
+    * On a streaming `docs`, it also sets the session's
+    * `spark.sql.streaming.checkpointFileManagerClass` to
+    * [[graft.io.LocalCheckpointFileManager]] unless that key is already
+    * set (an explicit value wins). Spark picks the manager when the caller
+    * calls `start()`, so the setting holds for every later query of the
+    * session. The manager extends Spark's internal
+    * `FileContextBasedCheckpointFileManager` with its
+    * `CheckpointFileManager.RenameHelperMethods`: on a local checkpoint
+    * path it writes the offset, commit, source and state-store files over
+    * `java.nio` (no `.crc` sibling, no forked `chmod`); any other path
+    * goes to Spark's default unchanged. Durability equals the default's
+    * over `LocalFileSystem`: neither calls `fsync`.
     */
   def scoreDocs(
       spark: SparkSession,
@@ -342,6 +355,7 @@ object Pipeline {
       models: Broadcast[Models]
   ): Dataset[SentenceResult] = {
     import spark.implicits._
+    if (docs.isStreaming) installCheckpointManager(spark)
     val sents = docs
       .select(col("repo"), col("path"), col("content"), shaIntact)
       .as[(String, String, String, Boolean)]
@@ -351,4 +365,11 @@ object Pipeline {
       })
     score(spark, sents, models)
   }
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  private def installCheckpointManager(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+      spark.conf.set(CheckpointManagerKey, classOf[graft.io.LocalCheckpointFileManager].getName)
 }

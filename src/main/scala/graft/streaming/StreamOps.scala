@@ -9,16 +9,16 @@ import java.sql.Timestamp
   *
   * The reference is batch-only (SURVEY §2.7), but a production ingest of
   * a 10^12-file corpus arrives as a stream; these are the streaming
-  * twins of the batch operators:
-  *   - `windowedCounts`: event-time tumbling window + watermark (late
-  *     data dropped after `late`), the streaming A1;
-  *   - `sessionizeStream`: gap-based sessions via
-  *     `flatMapGroupsWithState` with event-time timeout — the streaming
-  *     twin of ops.Events.sessionize, emitting a session row once its
-  *     gap elapses.
+  * twins of the batch operators: the KG pass (`scoreStream`), windowed
+  * counts, sessions, enrichment, and exact, near-dup, ANN, incremental,
+  * paragraph and span dedup, decontamination, the filter policy and the
+  * token-budget mix.
   *
-  * Both run on any streaming source (`readStream`); specs drive them
-  * with MemoryStream.
+  * Every operator runs on any streaming source (`readStream`); specs
+  * drive them with MemoryStream or a parquet file source. A stream whose
+  * input passes through `scoreStream` (that is, `Pipeline.scoreDocs`)
+  * checkpoints through [[graft.io.LocalCheckpointFileManager]], and so
+  * does every later query of its session, stateful ones included.
   */
 object StreamOps {
 
@@ -41,8 +41,13 @@ object StreamOps {
 
   /** Streaming KG construction: [[graft.pipeline.Pipeline.scoreDocs]]
     * over a streaming docs source, sha check included (stateless per row,
-    * so append mode with no watermark). Kept only because `kgbench/`
-    * compiles against it.
+    * so append mode with no watermark). Like `scoreDocs`, it sets the
+    * session's checkpoint manager to [[graft.io.LocalCheckpointFileManager]]
+    * unless `spark.sql.streaming.checkpointFileManagerClass` is set: local
+    * checkpoint files are written over `java.nio`, other paths go to
+    * Spark's default, and durability equals the default's over
+    * `LocalFileSystem` (no `fsync` on either). Kept only because
+    * `kgbench/` compiles against it.
     */
   def scoreStream(
       spark: SparkSession,

@@ -4,7 +4,7 @@ import graft.core.Triple
 import graft.fixtures.DocGen
 import graft.io.Resume
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -17,6 +17,8 @@ import scala.jdk.CollectionConverters._
   * the manifest contract must deliver exactly-once per repo — the same
   * scenario StreamOpsSpec proves locally, here on real executors
   * (where the round-3 foreachBatch overwrite bug only manifested).
+  * StreamClusterSpec runs the same `run` mode in a `local[2]` child JVM,
+  * SIGKILLs it after 3 batches and reruns it.
   *
   * Modes:
   *   prep <srcDir> <expectedJson> <nDocs>  — write ONE parquet file per
@@ -26,12 +28,28 @@ import scala.jdk.CollectionConverters._
   */
 object StreamCluster {
 
-  private def mkModels(spark: SparkSession) = {
+  /** The models both modes score with: a hybrid fit on 500 DocGen docs (seed 7). */
+  private[graft] def mkModels(spark: SparkSession) = {
     val train = Pipeline.parse(spark, DocGen.corpus(spark, 500, seed = 7L)).cache()
     train.count()
     val m = spark.sparkContext.broadcast(Pipeline.fit(spark, train, "hybrid"))
     train.unpersist()
     m
+  }
+
+  /** Writes `corpus` as ONE parquet file per repo into `srcDir`, so that
+    * each micro-batch of a one-file trigger is one repo's commit unit.
+    */
+  private[graft] def writeRepoFiles(corpus: DataFrame, repos: Seq[String], srcDir: String): Unit = {
+    Files.createDirectories(Paths.get(srcDir))
+    repos.foreach { r =>
+      val tmp = Files.createTempDirectory("prep")
+      corpus.filter(col("repo") === r).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val listing = Files.list(tmp) // close it: it holds a directory fd
+      val part = try listing.iterator().asScala.find(_.toString.endsWith(".parquet")) finally listing.close()
+      require(part.isDefined, s"no parquet part written for repo $r")
+      Files.move(part.get, Paths.get(srcDir, java.net.URLEncoder.encode(r, "UTF-8") + ".parquet"))
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -54,16 +72,7 @@ object StreamCluster {
           .flatMap(_.triples).groupBy(col("repo")).count()
           .as[(String, Long)].collect().sortBy(_._1)
         val repos = expected.map(_._1)
-        // one file per repo: each micro-batch is one repo's commit unit
-        Files.createDirectories(Paths.get(srcDir))
-        repos.foreach { r =>
-          val tmp = Files.createTempDirectory("prep")
-          corpus.filter(col("repo") === r).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val listing = Files.list(tmp) // close it: it holds a directory fd
-          val part = try listing.iterator().asScala.find(_.toString.endsWith(".parquet")) finally listing.close()
-          require(part.isDefined, s"no parquet part written for repo $r")
-          Files.move(part.get, Paths.get(srcDir, java.net.URLEncoder.encode(r, "UTF-8") + ".parquet"))
-        }
+        writeRepoFiles(corpus, repos.toSeq, srcDir)
         val total = expected.map(_._2).sum
         val body = expected.map { case (r, n) => s"${Resume.jsonStr(r)}:$n" }.mkString("{", ",", "}")
         Files.writeString(Paths.get(expectedJson),

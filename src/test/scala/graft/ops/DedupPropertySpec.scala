@@ -114,6 +114,25 @@ class DedupPropertySpec extends AnyFunSuite {
     })
   }
 
+  test("property: a doc_id listed twice in a bucket never pairs with itself") {
+    // bucket members are a set of (doc_id, value): a doc_id arrives twice
+    // only with two values, which the generator plants on purpose
+    val gen = for {
+      ms <- membersGen
+      again <- Gen.someOf(ms)
+      hs <- Gen.listOfN(again.size, hashPool)
+      maxBucket <- Gen.choose(1, 30)
+      maxHamming <- Gen.choose(0, 4)
+    } yield ((ms ++ again.map(_._1).zip(hs)).distinct, maxBucket, maxHamming)
+
+    check(Prop.forAll(gen) { case (ms, maxBucket, maxHamming) =>
+      val lsh = Dedup.lshBucketPairs(ms, maxBucket).toList
+      val sim = Dedup.simhashBucketPairs(ms, maxBucket, maxHamming).toList
+      lsh.forall { case (a, b) => a < b } && sim.forall { case (a, b, _) => a < b } &&
+        (ms.size > maxBucket || lsh.distinct.size == lsh.size)
+    })
+  }
+
   test("property: the allocation-free md5 band kernel equals the string-building oracle") {
     import graft.core.ParseDoc
     import graft.fixtures.DocGen

@@ -101,29 +101,31 @@ class PlanSpec extends AnyFunSuite {
   /** `rows`, and `rows` with doc 1 repeated as a second, identical row. */
   private def repeatedId(rows: (Long, String)*) = (rows, rows :+ rows.head)
 
-  test("lshCandidates: a repeated doc_id row self-pairs and doubles its pairs' band support") {
-    def pairs(rs: Seq[(Long, String)]) =
-      graft.ops.Dedup.lshCandidates(spark.createDataFrame(rs).toDF("doc_id", "text"))
+  test("lshCandidates: a repeated doc_id row changes no pair") {
+    def pairs(rs: Seq[(Long, String)], maxBucket: Int = graft.ops.Dedup.DefaultMaxBucket) =
+      graft.ops.Dedup.lshCandidates(spark.createDataFrame(rs).toDF("doc_id", "text"), maxBucket = maxBucket)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val (rows, dup) = repeatedId((1L, nearDupText), (2L, nearDupText + " iota"),
       (3L, "one two three four five six seven"), (4L, "one two three four five six seven eight"))
     val want = pairs(rows)
     assert(want.contains((1L, 2L)) && want.contains((3L, 4L)), s"vacuous fixture: $want")
-    val doubled = want.map { case ((a, b), n) => (a, b) -> (if (a == 1L || b == 1L) 2 * n else n) }
-    // 8 bands, each bucketing both copies of doc 1 together
-    assert(pairs(dup) == doubled + ((1L, 1L) -> 8L))
+    // no (1, 1) self-pair, and doc 1's pairs keep their band support,
+    // also where every bucket takes the mega-bucket path
+    assert(pairs(dup) == want)
+    assert(pairs(dup, maxBucket = 1) == pairs(rows, maxBucket = 1))
   }
 
-  test("simhashNearDup: a repeated doc_id row adds a hamming-0 self-pair") {
-    def pairs(rs: Seq[(Long, String)]) =
-      graft.ops.Dedup.simhashNearDup(spark.createDataFrame(rs).toDF("doc_id", "text"))
+  test("simhashNearDup: a repeated doc_id row changes no pair") {
+    def pairs(rs: Seq[(Long, String)], maxBucket: Int = graft.ops.Dedup.DefaultMaxBucket) =
+      graft.ops.Dedup.simhashNearDup(spark.createDataFrame(rs).toDF("doc_id", "text"), maxBucket = maxBucket)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // doc 2 is doc 1's tokens reversed: the same simhash
     val (rows, dup) = repeatedId((1L, nearDupText), (2L, nearDupText.split(" ").reverse.mkString(" ")),
       (3L, "one two three four five six seven"))
     val want = pairs(rows)
     assert(want == Set((1L, 2L, 0)), s"vacuous fixture: $want")
-    assert(pairs(dup) == want + ((1L, 1L, 0)))
+    assert(pairs(dup) == want, "no (1, 1, 0) self-pair")
+    assert(pairs(dup, maxBucket = 1) == pairs(rows, maxBucket = 1), "no self-pair on the mega-bucket path")
   }
 
   test("fused scoring pass plans with zero Exchange (no shuffle)") {
