@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -18,7 +19,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Only paths whose filesystem is Hadoop's local one take the fast path;
   * every other path goes to the default manager unchanged. Durability
   * equals the default's over `LocalFileSystem`: neither calls `fsync`.
-  * Installed by [[graft.pipeline.Pipeline.scoreDocs]] on a streaming input.
   */
 final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileContextBasedCheckpointFileManager(path, hadoopConf) {
@@ -74,4 +74,17 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   /** Reads local files raw: a stale `.crc` is never checked. */
   override def open(p: Path): FSDataInputStream =
     if (local(p).isDefined) raw.open(p) else super.open(p)
+}
+
+object LocalCheckpointFileManager {
+
+  private val Key = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Makes this class `spark`'s checkpoint manager, for every later query
+    * of the session, unless the key is set in the session or the Hadoop
+    * conf. `Pipeline.scoreDocs` and `StreamOps` call it on a stream.
+    */
+  def install(spark: SparkSession): Unit =
+    if (spark.conf.getOption(Key).isEmpty && spark.sparkContext.hadoopConfiguration.get(Key) == null)
+      spark.conf.set(Key, classOf[LocalCheckpointFileManager].getName)
 }

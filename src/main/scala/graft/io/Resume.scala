@@ -28,7 +28,8 @@ import scala.jdk.CollectionConverters._
   *
   * Stand-in for Iceberg commits (no Iceberg jars ship in this sandbox):
   * the output is a parquet table partitioned by `repo` (one
-  * `repo=<escaped id>/part-*.parquet` file per repo), plus a commit
+  * `repo=<escaped id>/part-*.parquet` file per input partition that held
+  * the repo), plus a commit
   * MANIFEST (`_graft_commits/<repo>.json`) written atomically (temp file
   * + move) AFTER the partition's data lands. A partition is committed
   * iff its manifest entry exists, so a crash mid-write leaves at most
@@ -94,33 +95,32 @@ object Resume {
     * their manifests. Returns the commits performed, sorted by repo
     * (empty = nothing left to do).
     *
-    * One evaluation of the input in one result stage. Rows of committed
-    * repos are dropped against a broadcast of the committed set (bounded
-    * by repo count, not corpus size; no broadcast join, so no job of its
-    * own). An input of one partition — every micro-batch of a one-file
-    * stream trigger — already holds each repo in one partition and is
-    * written where it is: one Spark job, no shuffle. A larger input is
-    * hash-repartitioned on `repo` into `defaultParallelism` partitions
-    * first (the shuffle-map job plus the result job). The partition count
-    * comes from the planned input. Planning runs nothing for an input
-    * without a shuffle of its own, such as scored docs; under AQE an
-    * input whose plan holds a shuffle runs that shuffle's map stage while
-    * it is planned.
+    * One path for any input: one Spark job with no shuffle evaluates the
+    * planned input once (planning runs nothing for an input without a
+    * shuffle of its own, such as scored docs; under AQE an input whose
+    * plan holds a shuffle runs that shuffle's map stage while planned).
+    * Rows of committed repos are dropped against a broadcast of the
+    * committed set (bounded by repo count; no broadcast join, no job).
+    * Each partition is sorted by `repo`, and its task writes each repo it
+    * holds to a staged parquet file, one writer open at a time (snappy; no
+    * dictionary for the near-unique `sid`, `e1`, `e2`), and returns that
+    * repo's rows, distinct non-null `drugSubj` strings and staged
+    * directory. One `collect` brings them to the driver exactly once per
+    * partition (a failed or duplicate attempt's files are never
+    * published), so a hot repo is written by every task that holds it.
     *
-    * Each partition is sorted by `repo`, and one `mapPartitions` writes
-    * each repo's rows to its own staged parquet file, one writer open at
-    * a time (snappy; no dictionary for the near-unique `sid`, `e1`, `e2`).
-    * The same pass returns each repo's `(rows, distinct non-null
-    * drugSubj)` with its staged directory, and one `collect` of that
-    * result stage brings them to the driver exactly once per partition
-    * (a failed or duplicate attempt's staged files are never published).
-    * A repo counted in two partitions fails the call with an
-    * `IllegalStateException`.
-    *
-    * The driver then replaces each repo's `repo=<escaped id>` directory
-    * with the staged one (a directory rename), clears the staging
-    * directory `_graft_staging` (invisible to [[read]], like every
-    * underscore-prefixed path) and writes the manifests last.
+    * The driver merges each repo exactly (rows summed, subject sets
+    * united) and moves all its staged files into a fresh `repo=<escaped
+    * id>` directory: one `part-<partition>-<commit uuid>.snappy.parquet`
+    * per input partition that held the repo, so one for a one-partition
+    * micro-batch. Bounds: at most (input partitions × the repos each one
+    * holds) files, and at most one subject string sent per (task, repo,
+    * distinct subject), never more than the rows. Manifests are written
+    * last. The staging directory `_graft_staging` is invisible to
+    * [[read]] and cleared, best-effort, when the call ends: after a failed
+    * job, sibling tasks may still be staging files, so a cleanup error
+    * never fails the call (it is added to the job's exception as
+    * suppressed), and what is left waits for the next commit.
     *
     * Triples with a null or empty `repo` have no partition to commit to
     * (Spark's partition naming would send `""` to the null partition,
@@ -144,42 +144,38 @@ object Resume {
     val done = committedRepos(table)
     val doneBc = if (done.isEmpty) None else Some(spark.sparkContext.broadcast(done))
     val staging = stagingDir(table).resolve(java.util.UUID.randomUUID().toString).toString
-    val counters =
+    def cleanup() = scala.util.Try { doneBc.foreach(_.destroy()); deleteTree(stagingDir(table)) }
+    val commits =
       try {
-        val remaining = doneBc
+        val rows = doneBc
           .fold(triples)(bc => triples.filter((t: Triple) => t.repo == null || !bc.value.contains(t.repo)))
           .select((DataColumns :+ "repo").map(col): _*)
-        val planned = remaining.sortWithinPartitions("repo").queryExecution.toRdd
-        val rows =
-          if (planned.getNumPartitions <= 1) planned
-          else remaining.repartition(spark.sparkContext.defaultParallelism, col("repo"))
-            .sortWithinPartitions("repo").queryExecution.toRdd
+          .sortWithinPartitions("repo").queryExecution.toRdd
         mkdir(Paths.get(table))
         publish(table, rows.mapPartitions(stage(staging, _)).collect().toSeq)
-      } finally {
-        doneBc.foreach(_.destroy())
-        deleteTree(stagingDir(table))
+      } catch {
+        case e: Throwable => cleanup().failed.foreach(e.addSuppressed); throw e
       }
-    if (counters.isEmpty) return Seq.empty
+    cleanup()
+    if (commits.isEmpty) return Seq.empty
 
     Files.createDirectories(manifestDir(table))
-    counters.map { s =>
-      val commit = Commit(s.repo, s.rows, s.distinctSubj, java.time.Instant.now().toString)
+    commits.map { commit =>
       val json =
         s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
-      val tmp = manifestDir(table).resolve(s".${enc(s.repo)}.json.tmp")
+      val tmp = manifestDir(table).resolve(s".${enc(commit.repo)}.json.tmp")
       Files.write(tmp, json.getBytes("UTF-8"))
-      Files.move(tmp, manifestDir(table).resolve(s"${enc(s.repo)}.json"),
+      Files.move(tmp, manifestDir(table).resolve(s"${enc(commit.repo)}.json"),
         StandardCopyOption.ATOMIC_MOVE)
       commit
     }
   }
 
   /** One repo of one task attempt: its row count, its distinct non-null
-    * `drugSubj` count and its staged `repo=` directory (null for a null or
-    * empty repo, which is counted and not written).
+    * `drugSubj` strings and its staged `repo=` directory (null for a null
+    * or empty repo, which is counted and not written).
     */
-  private final case class Staged(repo: String, rows: Long, distinctSubj: Long, dir: String)
+  private final case class Staged(repo: String, rows: Long, subjs: Array[String], dir: String)
 
   /** Triple's columns as a committed file holds them; `repo` is the
     * directory. The commit's rows carry these first, then `repo`.
@@ -228,7 +224,7 @@ object Resume {
 
   /** Writes one sorted partition, one staged file per repo under
     * `staging/<partition>-<task attempt>/repo=<escaped id>/`, and returns
-    * each repo's counters. Null and empty repos sort first; once the
+    * each repo's rows and distinct subjects. Null and empty repos sort first; once the
     * partition holds one, nothing more is written (the commit fails).
     */
   private def stage(staging: String, rows: Iterator[InternalRow]): Iterator[Staged] = {
@@ -248,7 +244,7 @@ object Resume {
         writer.close()
         Files.setPosixFilePermissions(dir.resolve(fileName), FilePerms)
       }
-      out += Staged(if (repo == null) null else repo.toString, n, subjs.size.toLong,
+      out += Staged(if (repo == null) null else repo.toString, n, subjs.iterator.map(_.toString).toArray,
         if (writer == null) null else dir.toString)
       writer = null
     }
@@ -293,27 +289,29 @@ object Resume {
   private val NullRepo = "triples have a null repo"
   private val EmptyRepo = "triples have an empty repo"
 
-  /** Validates the staged repos and moves each into the table; returns
-    * them sorted by repo. Fails, publishing nothing, on null or empty
-    * repos and on a repo staged by two partitions (the input was not
-    * partitioned by repo, so its counters would be split).
+  /** Validates the staged repos, merges each repo's staged files and
+    * counters, and moves its files into a fresh `repo=` directory; returns
+    * the commits sorted by repo. Fails, publishing nothing, on null or
+    * empty repos.
     */
-  private def publish(table: String, staged: Seq[Staged]): Seq[Staged] = {
+  private def publish(table: String, staged: Seq[Staged]): Seq[Commit] = {
     val nulls = staged.filter(_.repo == null).map(_.rows).sum
     val empties = staged.filter(_.repo == "").map(_.rows).sum
     if (nulls + empties > 0) {
       val counts = Seq(nulls -> NullRepo, empties -> EmptyRepo).collect { case (k, m) if k > 0 => s"$k $m" }
       throw new IllegalArgumentException(s"${counts.mkString(" and ")}; every committed triple needs one")
     }
-    val split = staged.groupBy(_.repo).collect { case (repo, hits) if hits.length > 1 => repo }
-    if (split.nonEmpty)
-      throw new IllegalStateException(
-        s"repos ${split.toSeq.sorted.mkString(", ")} span several partitions; counters would be split")
-    staged.sortBy(_.repo).map { s =>
-      val target = Paths.get(table, ExternalCatalogUtils.getPartitionPathString("repo", s.repo))
+    staged.groupBy(_.repo).toSeq.sortBy(_._1).map { case (repo, parts) =>
+      val target = Paths.get(table, ExternalCatalogUtils.getPartitionPathString("repo", repo))
       deleteTree(target)
-      Files.move(Paths.get(s.dir), target)
-      s
+      Files.move(Paths.get(parts.head.dir), target)
+      parts.tail.foreach { p =>
+        val files = Files.list(Paths.get(p.dir))
+        try files.iterator().asScala.toVector.foreach(f => Files.move(f, target.resolve(f.getFileName)))
+        finally files.close()
+      }
+      Commit(repo, parts.map(_.rows).sum, parts.flatMap(_.subjs).distinct.length.toLong,
+        java.time.Instant.now().toString)
     }
   }
 

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * score → decode never shuffles (documents are independent), so it
   * scales linearly with executors. Model fitting is one narrow job over
   * the training set plus a driver-side finish; shuffles exist only where
-  * semantics demand them: canonicalization (CC) of large surface sets,
-  * the evaluation joins, and the final partitioned write.
+  * semantics demand them: canonicalization (CC) of large surface sets and
+  * the evaluation joins; the commit writes in the scoring tasks.
   */
 object Pipeline {
 
@@ -336,18 +336,9 @@ object Pipeline {
     * triples are committed twice and counted twice in its manifest `rows`
     * (`distinct_subj` is unchanged).
     *
-    * On a streaming `docs`, it also sets the session's
-    * `spark.sql.streaming.checkpointFileManagerClass` to
-    * [[graft.io.LocalCheckpointFileManager]] unless that key is already
-    * set (an explicit value wins). Spark picks the manager when the caller
-    * calls `start()`, so the setting holds for every later query of the
-    * session. The manager extends Spark's internal
-    * `FileContextBasedCheckpointFileManager` with its
-    * `CheckpointFileManager.RenameHelperMethods`: on a local checkpoint
-    * path it writes the offset, commit, source and state-store files over
-    * `java.nio` (no `.crc` sibling, no forked `chmod`); any other path
-    * goes to Spark's default unchanged. Durability equals the default's
-    * over `LocalFileSystem`: neither calls `fsync`.
+    * On a streaming `docs`, it also installs
+    * [[graft.io.LocalCheckpointFileManager]] as the session's checkpoint
+    * manager unless one is set.
     */
   def scoreDocs(
       spark: SparkSession,
@@ -355,7 +346,7 @@ object Pipeline {
       models: Broadcast[Models]
   ): Dataset[SentenceResult] = {
     import spark.implicits._
-    if (docs.isStreaming) installCheckpointManager(spark)
+    if (docs.isStreaming) graft.io.LocalCheckpointFileManager.install(spark)
     val sents = docs
       .select(col("repo"), col("path"), col("content"), shaIntact)
       .as[(String, String, String, Boolean)]
@@ -365,11 +356,4 @@ object Pipeline {
       })
     score(spark, sents, models)
   }
-
-  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  private def installCheckpointManager(spark: SparkSession): Unit =
-    if (spark.conf.getOption(CheckpointManagerKey).isEmpty &&
-        spark.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
-      spark.conf.set(CheckpointManagerKey, classOf[graft.io.LocalCheckpointFileManager].getName)
 }

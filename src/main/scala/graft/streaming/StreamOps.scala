@@ -15,20 +15,26 @@ import java.sql.Timestamp
   * token-budget mix.
   *
   * Every operator runs on any streaming source (`readStream`); specs
-  * drive them with MemoryStream or a parquet file source. A stream whose
-  * input passes through `scoreStream` (that is, `Pipeline.scoreDocs`)
-  * checkpoints through [[graft.io.LocalCheckpointFileManager]], and so
-  * does every later query of its session, stateful ones included.
+  * drive them with MemoryStream or a parquet file source. Given a stream,
+  * each operator installs [[graft.io.LocalCheckpointFileManager]] on its
+  * session unless a checkpoint manager is set: local checkpoint files are
+  * written over `java.nio`, with no `.crc` siblings and no forked `chmod`.
   */
 object StreamOps {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
+
+  /** `in`, with the checkpoint manager installed on its session if it streams. */
+  private def managed[T](in: Dataset[T]): Dataset[T] = {
+    if (in.isStreaming) graft.io.LocalCheckpointFileManager.install(in.sparkSession)
+    in
+  }
   final case class SessionOut(user_id: Long, n_events: Long, start: Timestamp, end: Timestamp)
   final case class SessionState(n: Long, start: Long, last: Long)
 
   /** Tumbling event-time window counts with a watermark. */
   def windowedCounts(events: DataFrame, windowSec: Int = 600, lateSec: Int = 300): DataFrame =
-    events
+    managed(events)
       .withWatermark("ts", s"$lateSec seconds")
       .groupBy(window(col("ts"), s"$windowSec seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
@@ -41,13 +47,8 @@ object StreamOps {
 
   /** Streaming KG construction: [[graft.pipeline.Pipeline.scoreDocs]]
     * over a streaming docs source, sha check included (stateless per row,
-    * so append mode with no watermark). Like `scoreDocs`, it sets the
-    * session's checkpoint manager to [[graft.io.LocalCheckpointFileManager]]
-    * unless `spark.sql.streaming.checkpointFileManagerClass` is set: local
-    * checkpoint files are written over `java.nio`, other paths go to
-    * Spark's default, and durability equals the default's over
-    * `LocalFileSystem` (no `fsync` on either). Kept only because
-    * `kgbench/` compiles against it.
+    * so append mode with no watermark). Kept only because `kgbench/`
+    * compiles against it.
     */
   def scoreStream(
       spark: SparkSession,
@@ -66,7 +67,7 @@ object StreamOps {
     * required, is the batch `Dedup.exact` pass over the sink table.
     */
   def dedupStream(events: DataFrame, lateSec: Int = 600): DataFrame =
-    events
+    managed(events)
       .withWatermark("ts", s"$lateSec seconds")
       .dropDuplicatesWithinWatermark("event_id")
 
@@ -80,7 +81,7 @@ object StreamOps {
     * Input needs `text` and an event-time `ts` column.
     */
   def nearDupStream(docs: DataFrame, lateSec: Int = 600, bits: Int = 60): DataFrame =
-    docs
+    managed(docs)
       .withColumn("simhash", graft.ops.TextOps.simhashExpr(col("text"), bits))
       .withWatermark("ts", s"$lateSec seconds")
       .dropDuplicatesWithinWatermark("simhash")
@@ -94,7 +95,7 @@ object StreamOps {
     * source changes; a broadcast pins one snapshot per batch.
     */
   def enrichStream(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
+    managed(stream).join(broadcast(dim), Seq(key), "left")
 
   final case class EmbRow(vec_id: Long, embedding: Seq[Float])
   final case class BucketRing(vecs: Seq[Seq[Float]])
@@ -129,7 +130,7 @@ object StreamOps {
   ): Dataset[EmbRow] = {
     import spark.implicits._
     val cos = cosF _
-    graft.ops.Similarity.lshBuckets(emb.toDF(), nPlanes)
+    graft.ops.Similarity.lshBuckets(managed(emb).toDF(), nPlanes)
       .as[(Long, Seq[Float], Long)]
       .groupByKey(_._3)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -196,7 +197,7 @@ object StreamOps {
     import spark.implicits._
     require(centroids.nonEmpty, "ivfDedupStream needs a non-empty centroid snapshot")
     val cents = centroids.sortBy(_._1).toArray
-    val keyed = emb
+    val keyed = managed(emb)
       .map { r =>
         var bestCell = cents(0)._1
         var bestCos = Double.NegativeInfinity
@@ -307,7 +308,7 @@ object StreamOps {
       .select(col("dup_key")).as[String]
       .groupByKey(identity)
       .mapValues(_ => true)
-    docs
+    managed(docs)
       .select(
         col("doc_id").cast("long"),
         md5(to_binary(col("text"), lit("utf-8"))).as("dup_key"))
@@ -360,7 +361,7 @@ object StreamOps {
       sep: String = "\n\n",
       initialDigests: Option[DataFrame] = None): Dataset[ParaDedupOut] = {
     import spark.implicits._
-    val paras = docs
+    val paras = managed(docs)
       .select(
         col("doc_id").cast("long"),
         posexplode(split(col("text"), java.util.regex.Pattern.quote(sep), -1))
@@ -425,7 +426,7 @@ object StreamOps {
       initialDigests: Option[DataFrame] = None): Dataset[DupSpanOut] = {
     import spark.implicits._
     require(k >= 2, s"window width must be >= 2 tokens, got $k")
-    val occ = graft.ops.Dedup.windowOcc(docs.select(col("doc_id").cast("long"), col("text")), k)
+    val occ = graft.ops.Dedup.windowOcc(managed(docs).select(col("doc_id").cast("long"), col("text")), k)
       .as[(Long, Int, Array[Byte])]
       .groupByKey(_._3)
     val fn = (_: Array[Byte], it: Iterator[(Long, Int, Array[Byte])],
@@ -490,7 +491,7 @@ object StreamOps {
       k: Int = 5
   ): Dataset[DecontOut] = {
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+    managed(docs).select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val toks = text.split(" ", -1)
         var hits = Set.empty[String]
@@ -527,7 +528,7 @@ object StreamOps {
       k: Int = 5
   ): Dataset[PolicyOut] = {
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
+    managed(docs).select(col("doc_id").cast("long"), col("lang"), col("text"))
       .as[(Long, String, String)]
       .map { case (id, lang, text) =>
         val toks = text.split(" ", -1)
@@ -582,7 +583,7 @@ object StreamOps {
       defaultBudget: Long
   ): Dataset[MixOut] = {
     import spark.implicits._
-    docs
+    managed(docs)
       .select(col("doc_id").cast("long"), col("lang"), col("text"))
       .as[(Long, String, String)]
       .groupByKey(_._2)
@@ -615,7 +616,7 @@ object StreamOps {
       gapSec: Long = 1800L
   ): Dataset[SessionOut] = {
     import spark.implicits._
-    events
+    managed(events)
       .withWatermark("ts", s"$gapSec seconds")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(

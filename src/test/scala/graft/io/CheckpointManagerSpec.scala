@@ -237,4 +237,32 @@ class CheckpointManagerSpec extends AnyFunSuite {
     val ids = spark.read.parquet(outDir).select("event_id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == Seq(1L, 2L, 3L), s"dedup state must survive both restarts, got ${ids.toSeq}")
   }
+
+  test("dedupStream installs the manager in a session that never ran scoreDocs: its checkpoint holds no .crc") {
+    val s = spark.newSession()
+    assert(s.conf.getOption(Key).isEmpty && spark.sparkContext.hadoopConfiguration.get(Key) == null,
+      "vacuous fixture: the fresh session has a manager set")
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    def ts(min: Long) = new Timestamp(86400000L + 60000L * min)
+    val base = Files.createTempDirectory("cfmops").toString
+    val (ckpt, outDir) = (s"$base/checkpoint", s"$base/out")
+    val mem = MemoryStream[StreamOps.Event]
+    mem.addData(StreamOps.Event(1, ts(0), 1, "click", 1.0), StreamOps.Event(2, ts(0), 2, "view", 2.0))
+    def run(): Unit = {
+      val q = StreamOps.dedupStream(mem.toDF())
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).option("path", outDir)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
+    assert(s.conf.getOption(Key).contains(Engine))
+    mem.addData(StreamOps.Event(1, ts(1), 1, "click", 1.0), StreamOps.Event(3, ts(1), 3, "view", 3.0))
+    run()
+    assert(names(Paths.get(ckpt, "state")).exists(_.endsWith(".delta")), s"vacuous fixture: ${names(Paths.get(ckpt))}")
+    assert(crcs(ckpt).isEmpty, s"the default manager's .crc files: ${crcs(ckpt)}")
+    val ids = s.read.parquet(outDir).select("event_id").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == Seq(1L, 2L, 3L), ids.toSeq)
+  }
 }

@@ -186,6 +186,42 @@ class IoSpec extends AnyFunSuite {
     assert(manifests == oracle)
   }
 
+  test("resume: a hot repo is written by every task that holds it, in one job, and merges exactly") {
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit, spark_partition_id}
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    // 3000 rows in 6 partitions with no shuffle; 90% in repo "hot", and
+    // subjects shared across partitions, so per-task distinct counts
+    // would over-count when summed
+    val trips = spark.range(0, 3000, 1, 6).map { i =>
+      val repo = if (i % 10 == 9) s"cold-${i / 10 % 4}" else "hot"
+      val subj = if (i % 13 == 0) null else s"drug${i * 7919 % 50}"
+      Triple(subj, "int", "obj", s"s$i", "e1", "e2", repo)
+    }
+    assert(trips.rdd.getNumPartitions >= 4)
+    val oracle = trips.groupBy(col("repo"))
+      .agg(count(lit(1)).as("rows"), count_distinct(col("drugSubj")).as("subj"))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(oracle.find(_._1 == "hot").exists(_._2 == 2700), s"fixture: $oracle")
+    val perTask = trips.filter(col("repo") === "hot").groupBy(spark_partition_id())
+      .agg(count_distinct(col("drugSubj"))).as[(Int, Long)].collect()
+    assert(perTask.length > 1 && perTask.map(_._2).sum > oracle.find(_._1 == "hot").get._3,
+      s"vacuous fixture: per-task subject sets do not overlap: ${perTask.toSeq}")
+
+    val (commits, jobs) = jobsOf(Resume.writeResumable(spark, trips, table))
+    assert(jobs == 1, s"the commit ran $jobs jobs")
+    assert(commits.map(c => (c.repo, c.rows, c.distinctSubj)) == oracle)
+    val manifests = spark.read.json(java.nio.file.Paths.get(table, "_graft_commits").toString + "/*.json")
+      .select("repo", "rows", "distinct_subj").as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(manifests == oracle)
+    val hotFiles = walkAll(java.nio.file.Paths.get(table, "repo=hot")).map(_.getFileName.toString)
+      .filter(_.matches("""part-\d+-.*\.parquet"""))
+    assert(hotFiles.map(_.split('-')(1)).distinct.length == perTask.length,
+      s"the hot repo was not written by each of its ${perTask.length} tasks: $hotFiles")
+    assert(Resume.read(spark, table).collect().map(_.toString).sorted.toSeq ==
+      trips.collect().map(_.toString).sorted.toSeq)
+  }
+
   test("resume: empty and all-committed inputs return no commits and write no files") {
     import spark.implicits._
     val table = Files.createTempDirectory("kg").toString + "/triples"
@@ -198,37 +234,31 @@ class IoSpec extends AnyFunSuite {
     assert(filesUnder(table) == before, "an all-committed input must not touch the table")
   }
 
-  test("resume: a commit is one write (at most 2 Spark jobs) and caches nothing") {
+  private def jobsOf(body: => Seq[Resume.Commit]) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(body)
+
+  test("resume: a commit is one Spark job for any partition count, after a resume too, and caches nothing") {
     import spark.implicits._
     val table = Files.createTempDirectory("kg").toString + "/triples"
     def trips(repos: String*) = spark.createDataset(repos.flatMap(r =>
       (1 to 5).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Seq[Resume.Commit]): (Seq[Resume.Commit], Int) = {
-      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
-      jobs.set(0)
-      val out = body
-      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
-      (out, jobs.get)
-    }
     // other suites in this JVM leave frames cached; start from none
     spark.catalog.clearCache()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a fresh table, then a second call with committed repos to exclude
-      val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b"), table))
-      assert(first.map(_.repo) == Seq("repo-a", "repo-b"))
-      assert(firstJobs <= 2, s"first commit ran $firstJobs jobs")
-      val (second, secondJobs) =
-        jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b", "repo-c"), table))
-      assert(second.map(_.repo) == Seq("repo-c"))
-      assert(secondJobs <= 2, s"commit after a resume ran $secondJobs jobs")
-      assert(spark.sharedState.cacheManager.isEmpty, "writeResumable left a cached frame behind")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val one = trips("repo-a", "repo-b").coalesce(1)
+    assert(one.rdd.getNumPartitions == 1)
+    val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, one, table))
+    assert(first.map(c => (c.repo, c.rows)) == Seq(("repo-a", 5L), ("repo-b", 5L)))
+    assert(firstJobs == 1, s"one-partition commit ran $firstJobs jobs")
+    val many = trips("repo-c", "repo-d", "repo-e")
+    assert(many.rdd.getNumPartitions > 1)
+    val (second, secondJobs) = jobsOf(Resume.writeResumable(spark, many, table))
+    assert(second.map(_.repo) == Seq("repo-c", "repo-d", "repo-e"))
+    assert(secondJobs == 1, s"multi-partition commit ran $secondJobs jobs")
+    // committed repos to exclude, in a multi-partition input
+    val (third, thirdJobs) = jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-e", "repo-f"), table))
+    assert(third.map(_.repo) == Seq("repo-f"))
+    assert(thirdJobs == 1, s"commit after a resume ran $thirdJobs jobs")
+    assert(Resume.read(spark, table).count() == 30)
+    assert(spark.sharedState.cacheManager.isEmpty, "writeResumable left a cached frame behind")
   }
 
   private def walkAll(root: java.nio.file.Path): Vector[java.nio.file.Path] = {
@@ -239,21 +269,28 @@ class IoSpec extends AnyFunSuite {
   private def mode(p: java.nio.file.Path): String =
     java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
-  test("resume: one part file per Spark-escaped repo dir, no .crc/_temporary/staging, table modes") {
+  test("resume: one part file per input partition holding the repo, Spark-escaped dirs, no .crc/_temporary/staging, table modes") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count_distinct, spark_partition_id}
     val table = Files.createTempDirectory("kg").toString + "/triples"
     val root = java.nio.file.Paths.get(table)
     val weird = Seq("org/name", "a:b=c", "pct%20enc")
-    val trips = spark.createDataset(
-      weird.flatMap(r => (1 to 3).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
+    // 9 rows over 4 partitions with no shuffle: the first two repos span two
+    val trips = spark.range(0, 9, 1, 4).map { i =>
+      val r = weird((i / 3).toInt)
+      Triple(s"d${i % 3}", "int", "o", s"$r.s$i", "e1", "e2", r)
+    }
+    val holders = trips.withColumn("pid", spark_partition_id()).groupBy("repo").agg(count_distinct(col("pid")))
+      .as[(String, Long)].collect().toMap
+    assert(holders.values.exists(_ > 1), s"vacuous fixture: no repo spans input partitions: $holders")
     assert(Resume.writeResumable(spark, trips, table).map(_.repo) == weird.sorted)
     val data = walkAll(root).filterNot(p => root.relativize(p).toString.startsWith("_graft_commits"))
     val parts = data.filter(Files.isRegularFile(_)).map(root.relativize(_).toString)
-    assert(parts.length == weird.length, s"data files: $parts")
+    assert(parts.length == holders.values.sum, s"data files: $parts")
     weird.foreach { r =>
       val dir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString("repo", r)
-      assert(parts.count(f => f.startsWith(dir + "/") && f.drop(dir.length + 1).matches("""part-.*\.parquet""")) == 1,
-        s"$r: no single part file under $dir in $parts")
+      assert(parts.count(f => f.startsWith(dir + "/") && f.drop(dir.length + 1).matches("""part-.*\.parquet""")) == holders(r),
+        s"$r: not ${holders(r)} part files under $dir in $parts")
     }
     assert(Set("repo=org%2Fname", "repo=a%3Ab%3Dc", "repo=pct%2520enc") ==
       data.filter(p => Files.isDirectory(p) && p.getParent == root).map(_.getFileName.toString).toSet)
@@ -316,25 +353,6 @@ class IoSpec extends AnyFunSuite {
       finally reader.close()
     assert(dict == Map("drugSubj" -> true, "interactionPred" -> true, "drugObj" -> true,
       "sid" -> false, "e1" -> false, "e2" -> false), dict)
-  }
-
-  test("resume: a one-partition input commits in one Spark job, a larger one in two") {
-    import spark.implicits._
-    val table = Files.createTempDirectory("kg").toString + "/triples"
-    def trips(repos: String*) = spark.createDataset(repos.flatMap(r =>
-      (1 to 5).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
-    def jobsOf(body: => Seq[Resume.Commit]) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(body)
-    val one = trips("repo-a", "repo-b").coalesce(1)
-    assert(one.rdd.getNumPartitions == 1)
-    val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, one, table))
-    assert(first.map(c => (c.repo, c.rows)) == Seq(("repo-a", 5L), ("repo-b", 5L)))
-    assert(firstJobs == 1, s"one-partition commit ran $firstJobs jobs")
-    val many = trips("repo-c", "repo-d", "repo-e")
-    assert(many.rdd.getNumPartitions > 1)
-    val (second, secondJobs) = jobsOf(Resume.writeResumable(spark, many, table))
-    assert(second.map(_.repo) == Seq("repo-c", "repo-d", "repo-e"))
-    assert(secondJobs == 2, s"multi-partition commit ran $secondJobs jobs")
-    assert(Resume.read(spark, table).count() == 25)
   }
 
   test("codemaps: sorted deterministic ids, PAD=0/UNK=1, idx round-trip") {

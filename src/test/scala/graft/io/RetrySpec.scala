@@ -69,8 +69,9 @@ final class FailStagedWrites extends SparkPlugin {
   * `local[4,3]` session (each task may run up to 3 times), so it runs in
   * its own forked JVM (build.sbt `Test / testGrouping`). One injected
   * first-attempt failure in the scoring map, then first-attempt failures
-  * in the write stage, must leave the commits, the manifest bodies and
-  * the committed table equal to the no-failure run.
+  * in the write stage, must leave the commits, the manifest bodies, the
+  * committed table and its part files per repo equal to the no-failure
+  * run, whose repos span several tasks.
   */
 class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -93,8 +94,10 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val models = Pipeline.fit(spark, Pipeline.parse(spark, DocGen.corpus(spark, 120, seed = 7L)))
   private lazy val docs = DocGen.corpus(spark, 240, seed = 11L, nRepos = 5).cache()
 
-  /** Commits without timestamps, manifest bodies without `ts`, table rows. */
-  private def commitOnce(m: Pipeline.Models): (Seq[(String, Long, Long)], Seq[String], Seq[String]) = {
+  /** Commits without timestamps, manifest bodies without `ts`, table rows,
+    * and the part-file count of each `repo=` directory.
+    */
+  private def commitOnce(m: Pipeline.Models): (Seq[(String, Long, Long)], Seq[String], Seq[String], Map[String, Int]) = {
     val table = Files.createTempDirectory("kg-retry").toString + "/triples"
     RetrySpec.table = table
     val triples = Pipeline.scoreDocs(spark, docs, spark.sparkContext.broadcast(m))
@@ -105,12 +108,17 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(p => new String(Files.readAllBytes(p), "UTF-8").replaceAll(""","ts":"[^"]*"""", ""))
       .sorted
     val rows = Resume.read(spark, table).collect().map(_.toString).sorted.toSeq
-    (commits.map(c => (c.repo, c.rows, c.distinctSubj)), manifests, rows)
+    val parts = Files.list(Paths.get(table)).iterator().asScala.filter(_.getFileName.toString.startsWith("repo="))
+      .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala.count(_.toString.endsWith(".parquet")))
+      .toMap
+    (commits.map(c => (c.repo, c.rows, c.distinctSubj)), manifests, rows, parts)
   }
 
   test("commits, manifests and table survive first-attempt failures in scoring and in the write") {
     val clean = commitOnce(models)
     assert(clean._1.length == 5 && clean._1.forall(_._2 > 0), s"vacuous baseline: ${clean._1}")
+    // a repo staged by several tasks: the failures below exercise the merge
+    assert(clean._4.values.exists(_ > 1), s"no repo has more than one part file: ${clean._4}")
     assert(RetrySpec.scoringFailures.get == 0 && RetrySpec.writeFailures.get == 0)
 
     val scoringRetried = commitOnce(models.copy(scorer = new RetrySpec.FailingScorer(models.scorer)))

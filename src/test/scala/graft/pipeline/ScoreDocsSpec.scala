@@ -65,7 +65,10 @@ class ScoreDocsSpec extends AnyFunSuite {
   test("a tampered content or content_sha row fails a batch commit and publishes nothing") {
     for (column <- Seq("content", "content_sha")) {
       val table = newTable()
-      val e = intercept[Exception](Resume.writeResumable(spark, triplesOf(tampered(column)), table))
+      // several tasks stage files in the failing job
+      val trips = triplesOf(tampered(column))
+      assert(trips.rdd.getNumPartitions >= 4, s"${trips.rdd.getNumPartitions} partitions")
+      val e = intercept[Exception](Resume.writeResumable(spark, trips, table))
       val msg = messages(e)
       assert(msg.contains(s"content_sha mismatch: repo ${victim.getString(0)}, path ${victim.getString(1)}"),
         s"$column: $msg")
