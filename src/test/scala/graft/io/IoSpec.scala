@@ -236,6 +236,24 @@ class IoSpec extends AnyFunSuite {
 
   private def jobsOf(body: => Seq[Resume.Commit]) = org.apache.spark.graft.ListenerDrain.jobsOf(spark.sparkContext)(body)
 
+  test("resume: a commit is one write (at most 2 Spark jobs) and caches nothing") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    def trips(repos: String*) = spark.createDataset(repos.flatMap(r =>
+      (1 to 5).map(i => Triple(s"d$i", "int", "o", s"$r.s$i", "e1", "e2", r))))
+    // other suites in this JVM leave frames cached; start from none
+    spark.catalog.clearCache()
+    // a fresh table, then a second call with committed repos to exclude
+    val (first, firstJobs) = jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b"), table))
+    assert(first.map(_.repo) == Seq("repo-a", "repo-b"))
+    assert(firstJobs <= 2, s"first commit ran $firstJobs jobs")
+    val (second, secondJobs) =
+      jobsOf(Resume.writeResumable(spark, trips("repo-a", "repo-b", "repo-c"), table))
+    assert(second.map(_.repo) == Seq("repo-c"))
+    assert(secondJobs <= 2, s"commit after a resume ran $secondJobs jobs")
+    assert(spark.sharedState.cacheManager.isEmpty, "writeResumable left a cached frame behind")
+  }
+
   test("resume: a commit is one Spark job for any partition count, after a resume too, and caches nothing") {
     import spark.implicits._
     val table = Files.createTempDirectory("kg").toString + "/triples"
