@@ -47,10 +47,13 @@ object XmlParse {
     * @param repo    partition-key column carried through for output layout
     * @param content full XML text of one `<document>`
     * @return Right(sentences in document order), or Left(error) for
-    *         malformed XML (null and empty content included), so callers
-    *         can count corrupt rows: `Pipeline.parse` and
-    *         `Pipeline.parseCounted` count each one — a bad row never
-    *         fails the job (at 10^12 files some rows WILL be garbage).
+    *         malformed XML (null and empty content included), so a bad
+    *         row never fails the job (at 10^12 files some rows WILL be
+    *         garbage). Only `Pipeline.parseCounted` returns a count of
+    *         them, in an at-least-once accumulator: `Pipeline.parse`
+    *         drops it, and `Pipeline.scoreDocs` skips bad rows without
+    *         counting them. An exact count waits on the funnel of
+    *         ROADMAP direction 1.
     */
   def parseDocEither(repo: String, content: String): Either[String, Seq[ParsedSentence]] = {
     val out = ArrayBuffer.empty[ParsedSentence]

@@ -1,6 +1,6 @@
 package graft.core
 
-/** Core data model for the KG-construction pipeline (SURVEY.md §1).
+/* Core data model for the KG-construction pipeline (SURVEY.md §1).
   *
   * One case class per relation the reference pipeline passes between
   * stages (reference: /root/reference, snapshot 2025-05-23):

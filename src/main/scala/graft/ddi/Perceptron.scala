@@ -63,8 +63,8 @@ object Perceptron {
     * empty = all 1.0, behavior unchanged. The averaged weights are
     * w_final = w - acc/t with t advancing once per example across all
     * epochs (Collins' lazy-average trick).
-    */
-  /** `init` warm-starts the raw weights (iterative parameter mixing,
+    *
+    * `init` warm-starts the raw weights (iterative parameter mixing,
     * McDonald et al. 2010 — the averaging accumulator starts fresh, so
     * the returned average is over THIS fit's trajectory from the init
     * point; a feature never updated here keeps its init weight).

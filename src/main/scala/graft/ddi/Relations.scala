@@ -312,8 +312,8 @@ object Relations {
     * parameter averaging (the distributed-CRF strategy, McDonald et
     * al. 2010). Each partition sorts its local slice — deterministic
     * given a deterministic partitioner.
-    */
-  /** `rounds > 1` = iterative parameter mixing (McDonald et al. 2010):
+    *
+    * `rounds > 1` = iterative parameter mixing (McDonald et al. 2010):
     * each round warm-starts every partition's perceptron from the
     * previous round's average and runs `epochs / rounds` local epochs,
     * so total update work matches the single-shot arm. `rounds = 1` is

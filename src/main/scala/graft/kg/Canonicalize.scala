@@ -46,11 +46,6 @@ object Canonicalize {
     Seq(lc, base, squashed, noHyphen, depluraled).filter(_.nonEmpty).distinct
   }
 
-  /** Connected components by min-label propagation.
-    *
-    * @param edges undirected edges (src, dst); self-loops fine
-    * @return (node, component) where component = min node id reachable
-    */
   /** Symmetric-edge budget below which CC runs as driver-side
     * union-find: an iterative distributed loop on a tiny graph is pure
     * scheduling overhead (measured 3.6s for 150 nodes — 6 iterations x
@@ -73,6 +68,11 @@ object Canonicalize {
     */
   @volatile private[kg] var lastIterations: Int = -1
 
+  /** Connected components by min-label propagation.
+    *
+    * @param edges undirected edges (src, dst); self-loops fine
+    * @return (node, component) where component = min node id reachable
+    */
   def connectedComponents(
       spark: SparkSession,
       edges: Dataset[(String, String)],

@@ -249,8 +249,8 @@ object Train {
     * seeded by RDD id, so the result is reproducible for a fixed program
     * (same session, same job order) but NOT across different call
     * orderings — the driver-side fitCrf is the fully-deterministic path.
-    */
-  /** `rounds > 1` = iterative parameter mixing (McDonald et al. 2010,
+    *
+    * `rounds > 1` = iterative parameter mixing (McDonald et al. 2010,
     * the full recipe, not just one-shot averaging): each round warm-
     * starts every partition's l2sgd from the previous round's averaged
     * weights and runs `epochs / rounds` local epochs, so total epoch

@@ -36,18 +36,15 @@ object Dedup {
     * de-duplicated under task retries and speculative attempts, and the
     * handle captures the FIRST action on the returned frame only (a
     * second action cannot inflate it). The registry keeps the latest
-    * handle per op name for [[megaBucketCount]]; a caller that needs its
-    * own counter (two concurrent calls of the same op) passes its own
-    * `Observation` via the `megaObs` parameter and reads that handle
-    * directly.
+    * handle per op name for [[megaBucketCount]], so two concurrent calls
+    * of the same op share one count: the later call's.
     */
   private val megaObsRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Observation]()
   private val megaObsSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def megaObservation(op: String, provided: Option[org.apache.spark.sql.Observation]) = {
-    val obs = provided.getOrElse(
-      org.apache.spark.sql.Observation(
-        s"graft.dedup.megaBuckets.$op.${megaObsSeq.incrementAndGet()}"))
+  private def megaObservation(op: String) = {
+    val obs = org.apache.spark.sql.Observation(
+      s"graft.dedup.megaBuckets.$op.${megaObsSeq.incrementAndGet()}")
     megaObsRegistry.put(op, obs)
     obs
   }
@@ -97,8 +94,8 @@ object Dedup {
     * therefore means EITHER "first action completed, no degradation"
     * OR "no action has completed yet" (e.g. the frame was only
     * planned/explained) — call it only after acting on the returned
-    * frame. Latest-call-wins per op name — concurrent callers should
-    * pass their own `megaObs` handle and read `obs.get` instead.
+    * frame. Latest-call-wins per op name: concurrent calls of one op
+    * read the later call's count.
     */
   def megaBucketCount(op: String): Long = megaBucketCountOption(op).getOrElse(0L)
 
@@ -213,6 +210,29 @@ object Dedup {
         col("doc_id"), col("n_shared_bands"),
         when(col("n_shared_bands") >= minBands, 1).otherwise(0).as("near_dup"))
 
+  /** (doc_id, position) packed into one long for keeper-election mins:
+    * min(struct(...)) silently degrades to SortAggregate (struct is not
+    * a mutable-buffer type; PlanSpec locks the hash form), while a long
+    * min stays in a HashAggregate buffer with map-side combine, and the
+    * packing preserves lexicographic (doc_id, pos) order. Capacity is
+    * guarded LOUDLY (assert_true), not silently wrapped: doc_id < 2^43
+    * (8.8e12 — an order above the 10^12-row design point) and pos <
+    * 2^20 (1M positions per doc).
+    */
+  private def packedPos(docId: Column, pos: Column, op: String): Column =
+    // widen BEFORE shifting: shiftleft preserves its input type, so an
+    // IntegerType doc_id column would wrap at 32 bits for ids >= 2^11
+    // while the (long-widened) guard below still passed — a silently
+    // wrong keeper election instead of the loud failure this guard is
+    // for
+    shiftleft(docId.cast("long"), 20) + pos +
+      coalesce(
+        assert_true(
+          docId >= 0 && docId < (1L << 43) && pos < (1 << 20),
+          lit(s"$op keeper key overflow: doc_id/position out of packed range"))
+          .cast("long"),
+        lit(0L))
+
   /** Paragraph-granularity dedup (the RefinedWeb/Dolma "repeated
     * boilerplate" scrub): documents are split on `sep`, every paragraph
     * is deduplicated ACROSS the whole corpus (survivor = the globally
@@ -240,29 +260,6 @@ object Dedup {
     * bound as rewriting the corpus, which any paragraph-rewriting op
     * pays by definition.
     */
-  /** (doc_id, position) packed into one long for keeper-election mins:
-    * min(struct(...)) silently degrades to SortAggregate (struct is not
-    * a mutable-buffer type; PlanSpec locks the hash form), while a long
-    * min stays in a HashAggregate buffer with map-side combine, and the
-    * packing preserves lexicographic (doc_id, pos) order. Capacity is
-    * guarded LOUDLY (assert_true), not silently wrapped: doc_id < 2^43
-    * (8.8e12 — an order above the 10^12-row design point) and pos <
-    * 2^20 (1M positions per doc).
-    */
-  private def packedPos(docId: Column, pos: Column, op: String): Column =
-    // widen BEFORE shifting: shiftleft preserves its input type, so an
-    // IntegerType doc_id column would wrap at 32 bits for ids >= 2^11
-    // while the (long-widened) guard below still passed — a silently
-    // wrong keeper election instead of the loud failure this guard is
-    // for
-    shiftleft(docId.cast("long"), 20) + pos +
-      coalesce(
-        assert_true(
-          docId >= 0 && docId < (1L << 43) && pos < (1 << 20),
-          lit(s"$op keeper key overflow: doc_id/position out of packed range"))
-          .cast("long"),
-        lit(0L))
-
   def paragraphDedup(docs: DataFrame, sep: String = "\n\n"): DataFrame = {
     def packed(docId: Column, paraIdx: Column): Column =
       packedPos(docId, paraIdx, "paragraphDedup")
@@ -594,12 +591,6 @@ object Dedup {
     )
   }
 
-  /** MinHash signatures: one row per (doc_id, band) with the band's
-    * min-hash over shingles. Hash = md5(shingle + "#" + band) kept as a
-    * string so the DuckDB oracle computes the identical value; the
-    * hot-path variant would swap in xxhash64 (codegen, 8 bytes) — same
-    * operator shape.
-    */
   /** One (doc_id, shingle) row per distinct word k-gram, built in a
     * typed flatMap — an order of magnitude faster than the equivalent
     * higher-order-function expression (per-element `slice` allocates;
@@ -756,6 +747,12 @@ object Dedup {
         col("doc_id") +: (0 until bands).map(b => col("mins").getItem(b).as(s"sig$b")): _*)
   }
 
+  /** MinHash signatures: one row per (doc_id, band) with the band's
+    * min-hash over shingles. Hash = md5(shingle + "#" + band) kept as a
+    * string so the DuckDB oracle computes the identical value; the
+    * hot-path variant would swap in xxhash64 (codegen, 8 bytes) — same
+    * operator shape.
+    */
   def minhashSignatures(docs: DataFrame, bands: Int = 8, k: Int = 3): DataFrame =
     minhashWith(docs, bands, k, fast = false)
 
@@ -855,7 +852,7 @@ object Dedup {
     * shuffle stage. Mega buckets are counted by an action-scoped
     * `Dataset.observe` metric on the bucket frame (Spark-UI name
     * `graft.dedup.megaBuckets.lsh.<seq>`), read via
-    * [[megaBucketCount]] or a caller-provided `megaObs` handle; each
+    * [[megaBucketCount]]; each
     * degradation additionally logs a rate-limited executor-side
     * warning.
     * A `doc_id` in several identical rows counts once: bucket members
@@ -866,12 +863,11 @@ object Dedup {
       bands: Int = 8,
       k: Int = 3,
       fast: Boolean = false,
-      maxBucket: Int = DefaultMaxBucket,
-      megaObs: Option[org.apache.spark.sql.Observation] = None
+      maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val obs = megaObservation("lsh", megaObs)
+    val obs = megaObservation("lsh")
     minhashWithFp(docs, bands, k, fast)
       .groupBy(col("band"), col("sig"))
       .agg(collect_set(struct(col("doc_id"), col("fp"))).as("members"))
@@ -1023,7 +1019,7 @@ object Dedup {
           col("doc_id"),
           count(col("doc_id")).over(bucket).as("n"))
         .observe(
-          megaObservation("lsh", None),
+          megaObservation("lsh"),
           megaMetric(when(col("doc_id") === col("hub"), col("n")), DefaultMaxBucket))
         .filter(col("doc_id") =!= col("hub"))
         .select(col("hub"), col("doc_id"))
@@ -1154,7 +1150,7 @@ object Dedup {
     * EXACTLY whenever the bucket's distinct simhash values fit
     * maxBucket, which is every observed mega bucket), counted by the
     * `graft.dedup.megaBuckets.simhash.<seq>` observe metric
-    * ([[megaBucketCount]] / `megaObs`) and logged as a rate-limited
+    * ([[megaBucketCount]]) and logged as a rate-limited
     * executor-side warning.
     * A `doc_id` in several identical rows counts once: bucket members
     * are a set, and no doc pairs with itself (PlanSpec pins both).
@@ -1163,8 +1159,7 @@ object Dedup {
       docs: DataFrame,
       maxHamming: Int = 3,
       bits: Int = 60,
-      maxBucket: Int = DefaultMaxBucket,
-      megaObs: Option[org.apache.spark.sql.Observation] = None
+      maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
     val bands = maxHamming + 1
     require(bits % bands == 0, s"bits=$bits must split into ${bands} equal bands")
@@ -1174,7 +1169,7 @@ object Dedup {
     // earlier banded self-join planned it once per side)
     val spark = docs.sparkSession
     import spark.implicits._
-    val obs = megaObservation("simhash", megaObs)
+    val obs = megaObservation("simhash")
     val sh = TextOps.simhash(docs, bits)
     val banded = sh.select(
       col("doc_id"),

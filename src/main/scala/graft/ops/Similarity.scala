@@ -77,8 +77,8 @@ object Similarity {
     * at corpus scale would precompute the tiny centroid table
     * driver-side and broadcast it (the dim count isn't statically
     * known here, which is why this one stays pure-lazy).
-    */
-  /** Round-8 shape: the per-element offset depends only on
+    *
+    * Round-8 shape: the per-element offset depends only on
     * (vec_id % nClusters, dim) — nClusters × dim distinct md5 values
     * for the whole corpus — so the former `transform` HOF (interpreted,
     * one md5+conv string chain per ELEMENT per row: 64 per vector,
@@ -231,15 +231,6 @@ object Similarity {
   // recall at the same candidate budget.
   // ------------------------------------------------------------------
 
-  /** Deterministic coarse centroids: the `nCells` corpus vectors with
-    * the smallest murmur3(vec_id) — a reproducible pseudo-random sample
-    * (no RNG state; stable across runs — Spark-specific murmur3, so NOT
-    * reproducible by other engines, which is fine: kg_ann_ivf has no
-    * DuckDB twin and its gate is AnnRecallSpec). `orderBy.limit`
-    * executes as TakeOrdered (per-partition top-k + driver merge), not a
-    * global sort, so this stays O(n log k) with no shuffle at corpus
-    * scale; the result is driver-side and tiny (nCells ≤ ~4k).
-    */
   /** Scale-aware cell count, balanced rule: total work for an
     * all-queries self-search is assignment n·nCells plus candidates
     * n·nProbe·(n/nCells); both terms meet at nCells ≈ √(nProbe·n), the
@@ -252,6 +243,15 @@ object Similarity {
   def ivfAutoCells(n: Long, nProbe: Int = 2): Int =
     math.max(16L, math.ceil(math.sqrt(nProbe.toDouble * n)).toLong).toInt
 
+  /** Deterministic coarse centroids: the `nCells` corpus vectors with
+    * the smallest murmur3(vec_id) — a reproducible pseudo-random sample
+    * (no RNG state; stable across runs — Spark-specific murmur3, so NOT
+    * reproducible by other engines, which is fine: kg_ann_ivf has no
+    * DuckDB twin and its gate is AnnRecallSpec). `orderBy.limit`
+    * executes as TakeOrdered (per-partition top-k + driver merge), not a
+    * global sort, so this stays O(n log k) with no shuffle at corpus
+    * scale; the result is driver-side and tiny (nCells ≤ ~4k).
+    */
   def ivfCentroids(embeddings: DataFrame, nCells: Int): Seq[(Int, Seq[Float])] =
     embeddings
       // float32 centroids regardless of input width (clusterBoost emits
@@ -480,9 +480,6 @@ object Similarity {
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
-  /** Corpus side of the IVF index: each vector labeled with its single
-    * nearest cell.
-    */
   /** Probe side of the IVF search (query_id, q_emb, cell) — shared by
     * the DebugIvf cost decomposition, [[incrementalAnnDedup]] and its
     * dump twin (so the dumped probes are BY CONSTRUCTION the ones the
@@ -498,6 +495,9 @@ object Similarity {
         explode(col("cells")).as("probe"))
       .select(col("query_id"), col("q_emb"), col("probe.cell").as("cell"))
 
+  /** Corpus side of the IVF index: each vector labeled with its single
+    * nearest cell.
+    */
   def ivfAssign(embeddings: DataFrame, centroids: Seq[(Int, Seq[Float])]): DataFrame =
     // empty centroid sample ⇒ empty corpus: emit a typed null cell
     // (zero rows flow anyway). element_at over the empty literal is
@@ -657,27 +657,6 @@ object Similarity {
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("vec_id")))
   }
 
-  /** ANN top-k restricted to same-bucket candidates (the scale path for
-    * corpora without tight cluster structure).
-    * Recall < 1 by construction; `multiProbe = true` additionally probes
-    * every bucket at Hamming distance 1 from the query's (flip each of
-    * the `nPlanes` sign bits) — the standard multi-probe LSH recall
-    * lever: candidate budget grows ×(nPlanes+1) on the QUERY side only,
-    * the corpus keeps exactly one bucket per vector, so no pair can be
-    * scored twice and the join stays keyed on the bucket.
-    *
-    * DEGENERACY CAVEAT (measured, round-6 sf1 ledger): on TIGHTLY
-    * CLUSTERED data, sign-bit buckets are angularly atomic — a random
-    * hyperplane through the origin cuts a cluster only if it passes
-    * within the cluster's angular radius, so adding planes stops
-    * splitting buckets once bucket ≈ cluster, and the per-bucket
-    * self-join degenerates to Θ(Σ cluster²) (kg_ann_clustered: 192 s on
-    * 20k clusterBoost vectors — costlier than the exact verifier). For
-    * clustered corpora use [[ivfTopK]] / [[ivfNearDupClusters]]: IVF
-    * cells are seeded by sampled corpus points, so they subdivide tight
-    * clusters and per-query work stays nProbe · n / nCells by
-    * construction.
-    */
   /** Incremental (delta-vs-history) EMBEDDING dedup — completes the
     * incremental trio ([[graft.ops.Dedup.incrementalDedup]] = exact
     * digests, [[graft.ops.Dedup.incrementalNearDup]] = minhash bands,
@@ -756,6 +735,27 @@ object Similarity {
         ivfAssign(history.localCheckpoint(), centroids)
           .select(lit("hist").as("role"), col("vec_id"), col("cell")))
 
+  /** ANN top-k restricted to same-bucket candidates (the scale path for
+    * corpora without tight cluster structure).
+    * Recall < 1 by construction; `multiProbe = true` additionally probes
+    * every bucket at Hamming distance 1 from the query's (flip each of
+    * the `nPlanes` sign bits) — the standard multi-probe LSH recall
+    * lever: candidate budget grows ×(nPlanes+1) on the QUERY side only,
+    * the corpus keeps exactly one bucket per vector, so no pair can be
+    * scored twice and the join stays keyed on the bucket.
+    *
+    * DEGENERACY CAVEAT (measured, round-6 sf1 ledger): on TIGHTLY
+    * CLUSTERED data, sign-bit buckets are angularly atomic — a random
+    * hyperplane through the origin cuts a cluster only if it passes
+    * within the cluster's angular radius, so adding planes stops
+    * splitting buckets once bucket ≈ cluster, and the per-bucket
+    * self-join degenerates to Θ(Σ cluster²) (kg_ann_clustered: 192 s on
+    * 20k clusterBoost vectors — costlier than the exact verifier). For
+    * clustered corpora use [[ivfTopK]] / [[ivfNearDupClusters]]: IVF
+    * cells are seeded by sampled corpus points, so they subdivide tight
+    * clusters and per-query work stays nProbe · n / nCells by
+    * construction.
+    */
   def bucketedTopK(
       embeddings: DataFrame, k: Int, nPlanes: Int = 8, multiProbe: Boolean = false): DataFrame = {
     // localCheckpoint, not cache: released on GC instead of pinned in

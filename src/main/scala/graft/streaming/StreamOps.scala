@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -19,6 +19,13 @@ import java.sql.Timestamp
   * each operator installs [[graft.io.LocalCheckpointFileManager]] on its
   * session unless a checkpoint manager is set: local checkpoint files are
   * written over `java.nio`, with no `.crc` siblings and no forked `chmod`.
+  *
+  * The stateful dedup operators share their state rules, each written
+  * once: the embedding rings of `annDedupStream` and `ivfDedupStream`
+  * admit through `admit` (folded per key by `ringDedup`), IVF cells come
+  * from `nearestCell` for live and history rows alike, and the digest
+  * stores of `incrementalDedupStream`, `paragraphDedupStream` and
+  * `dupSpansStream` keep one boolean per key through `admitOnce`.
   */
 object StreamOps {
 
@@ -129,24 +136,10 @@ object StreamOps {
       maxPerBucket: Int = 64
   ): Dataset[EmbRow] = {
     import spark.implicits._
-    val cos = cosF _
-    graft.ops.Similarity.lshBuckets(managed(emb).toDF(), nPlanes)
+    val keyed = graft.ops.Similarity.lshBuckets(managed(emb).toDF(), nPlanes)
       .as[(Long, Seq[Float], Long)]
       .groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, it: Iterator[(Long, Seq[Float], Long)], state: GroupState[BucketRing]) => {
-          var ring = state.getOption.getOrElse(BucketRing(Nil))
-          val out = Seq.newBuilder[EmbRow]
-          it.toSeq.sortBy(_._1).foreach { case (id, vec, _) =>
-            val dup = ring.vecs.exists(v => cos(v, vec) >= threshold)
-            if (!dup) {
-              out += EmbRow(id, vec)
-              ring = BucketRing((ring.vecs :+ vec).takeRight(maxPerBucket))
-            }
-          }
-          state.update(ring)
-          out.result().iterator
-        })
+    ringDedup(keyed, threshold, maxPerBucket, None)
   }
 
   /** Plain-Scala cosine for the streaming dedup rings (state-side code
@@ -160,6 +153,89 @@ object StreamOps {
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
+  /** The ring admission rule: `rows` go in `vec_id` order; a row whose
+    * cosine to some ring vector is >= `threshold` is suppressed, any
+    * other is emitted and appended, keeping the last `max` vectors.
+    * Returns the new ring and the emitted rows.
+    */
+  private def admit(
+      ring: Seq[Seq[Float]],
+      rows: Iterator[(Long, Seq[Float])],
+      threshold: Double,
+      max: Int): (Seq[Seq[Float]], Seq[EmbRow]) = {
+    var r = ring
+    val out = Seq.newBuilder[EmbRow]
+    rows.toSeq.sortBy(_._1).foreach { case (id, vec) =>
+      if (!r.exists(v => cosF(v, vec) >= threshold)) {
+        out += EmbRow(id, vec)
+        r = (r :+ vec).takeRight(max)
+      }
+    }
+    (r, out.result())
+  }
+
+  /** One ring of admitted vectors per key, each micro-batch's rows of a
+    * key folded through `admit`; `init` preloads rings.
+    */
+  private def ringDedup[K](
+      keyed: KeyValueGroupedDataset[K, (Long, Seq[Float], K)],
+      threshold: Double,
+      max: Int,
+      init: Option[KeyValueGroupedDataset[K, BucketRing]]): Dataset[EmbRow] = {
+    implicit val ringEnc: Encoder[BucketRing] = Encoders.product[BucketRing]
+    implicit val rowEnc: Encoder[EmbRow] = Encoders.product[EmbRow]
+    foldState(keyed, init) { (_, it, state) =>
+      val (ring, out) = admit(
+        state.getOption.fold(Seq.empty[Seq[Float]])(_.vecs), it.map(t => (t._1, t._2)), threshold, max)
+      state.update(BucketRing(ring))
+      out.iterator
+    }
+  }
+
+  /** The IVF cell of `vec`: centroids are scanned in id order and a cell
+    * is kept only on a strict `>`, so the highest cosine wins and a tie
+    * goes to the LOWEST cell id. `cents` is sorted by id.
+    */
+  private def nearestCell(cents: Array[(Int, Seq[Float])], vec: Seq[Float]): Int = {
+    var bestCell = cents(0)._1
+    var bestCos = Double.NegativeInfinity
+    cents.foreach { case (cid, cvec) =>
+      val s = cosF(cvec, vec)
+      if (s > bestCos) { bestCos = s; bestCell = cid }
+    }
+    bestCell
+  }
+
+  /** An append-mode, no-timeout `flatMapGroupsWithState` over `keyed`,
+    * with its state preloaded from `init` when one is given.
+    */
+  private def foldState[K, V, S: Encoder, U: Encoder](
+      keyed: KeyValueGroupedDataset[K, V],
+      init: Option[KeyValueGroupedDataset[K, S]])(
+      fn: (K, Iterator[V], GroupState[S]) => Iterator[U]): Dataset[U] =
+    init match {
+      case Some(i) => keyed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, i)(fn)
+      case None => keyed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    }
+
+  /** The admit-once rule of the digest stores: one boolean of state per
+    * key, preloaded from `store` when one is given. `emit` gets the
+    * key's rows of the micro-batch and whether the key was known at
+    * batch start; from then on the key is known.
+    */
+  private def admitOnce[K: Encoder, V, U: Encoder](
+      keyed: KeyValueGroupedDataset[K, V],
+      store: Option[Dataset[K]])(
+      emit: (K, Iterator[V], Boolean) => Iterator[U]): Dataset[U] = {
+    implicit val flag: Encoder[Boolean] = Encoders.scalaBoolean
+    foldState(keyed, store.map(_.groupByKey(identity).mapValues(_ => true))) { (key, it, state) =>
+      val known = state.exists
+      val out = emit(key, it, known)
+      if (!known) state.update(true)
+      out
+    }
   }
 
   /** IVF twin of [[annDedupStream]] — streaming near-dup suppression
@@ -198,80 +274,27 @@ object StreamOps {
     require(centroids.nonEmpty, "ivfDedupStream needs a non-empty centroid snapshot")
     val cents = centroids.sortBy(_._1).toArray
     val keyed = managed(emb)
-      .map { r =>
-        var bestCell = cents(0)._1
-        var bestCos = Double.NegativeInfinity
-        cents.foreach { case (cid, cvec) =>
-          val s = cosF(cvec, r.embedding)
-          if (s > bestCos) { bestCos = s; bestCell = cid }
-        }
-        (r.vec_id, r.embedding, bestCell)
-      }
+      .map(r => (r.vec_id, r.embedding, nearestCell(cents, r.embedding)))
       .groupByKey(_._3)
-    val fn = (_: Int, it: Iterator[(Long, Seq[Float], Int)], state: GroupState[BucketRing]) => {
-      var ring = state.getOption.getOrElse(BucketRing(Nil))
-      val out = Seq.newBuilder[EmbRow]
-      it.toSeq.sortBy(_._1).foreach { case (id, vec, _) =>
-        val dup = ring.vecs.exists(v => cosF(v, vec) >= threshold)
-        if (!dup) {
-          out += EmbRow(id, vec)
-          ring = BucketRing((ring.vecs :+ vec).takeRight(maxPerCell))
+    // streaming q47: rings preloaded from the ingested corpus, so deltas
+    // are suppressed against HISTORY too. History rows take their cell
+    // from `nearestCell` and each cell's ring replays `admit` over them in
+    // vec_id order (a raw takeRight of the history would keep near-dups
+    // the live stream skips): the live rows' own rules, so preloaded and
+    // organically grown rings are indistinguishable by construction
+    // (spec-gated). A cell's history is materialized to sort it: bounded
+    // by per-cell history, as the live fold is by its micro-batch.
+    val init = historyVecs.map(
+      _.select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
+        .as[(Long, Seq[Float])]
+        .map { case (id, vec) => (nearestCell(cents, vec), id, vec) }
+        .groupByKey(_._1)
+        .mapGroups { (cell, it) =>
+          cell -> BucketRing(admit(Nil, it.map(t => (t._2, t._3)), threshold, maxPerCell)._1)
         }
-      }
-      state.update(ring)
-      out.result().iterator
-    }
-    historyVecs match {
-      // streaming q47: rings preloaded from the ingested corpus — the
-      // delta stream is suppressed against HISTORY, not just against
-      // what this stream has seen. History vectors are assigned with
-      // the STREAM'S OWN rule — the same static centroid snapshot
-      // scanned in id order with cosF and a strict `>` (round-7 ADVICE:
-      // the earlier batch-ivfAssign preload went through Catalyst's
-      // CosineSim/struct-sort path, which could place a vector in a
-      // different cell than the live loop on an exact cosine tie or a
-      // float-rounding edge, so preloaded and organic state were only
-      // indistinguishable on tie-free inputs) — and each cell's ring is
-      // built by REPLAYING the stream's own admission rule over the
-      // history in vec_id order (a near-dup history vector is skipped,
-      // an admitted one appends and evicts) — the raw takeRight of
-      // history rows would differ whenever the recent history itself
-      // contains near-dups, silently admitting deltas the organic
-      // stream would suppress. With both the assignment and the replay
-      // shared, preloaded and organically grown state are
-      // indistinguishable by construction (spec-gated). Each cell's
-      // history is materialized to sort by vec_id — bounded by per-cell
-      // history, the same bound the micro-batch fold below already
-      // assumes per batch.
-      case Some(hist) =>
-        val initState = hist
-          .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
-          .as[(Long, Seq[Float])]
-          .map { case (id, vec) =>
-            var bestCell = cents(0)._1
-            var bestCos = Double.NegativeInfinity
-            cents.foreach { case (cid, cvec) =>
-              val s = cosF(cvec, vec)
-              if (s > bestCos) { bestCos = s; bestCell = cid }
-            }
-            (bestCell, id, vec)
-          }
-          .groupByKey(_._1)
-          .mapGroups { (cell, it) =>
-            var ring = Vector.empty[Seq[Float]]
-            it.toArray.sortBy(_._2).foreach { case (_, _, vec) =>
-              if (!ring.exists(v => cosF(v, vec) >= threshold))
-                ring = (ring :+ vec).takeRight(maxPerCell)
-            }
-            cell -> BucketRing(ring)
-          }
-          .groupByKey(_._1)
-          .mapValues(_._2)
-        keyed.flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, initState)(fn)
-      case None =>
-        keyed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    }
+        .groupByKey(_._1)
+        .mapValues(_._2))
+    ringDedup(keyed, threshold, maxPerCell, init)
   }
 
   final case class IncrDedupOut(doc_id: Long, dup_key: String, reason: String)
@@ -304,29 +327,21 @@ object StreamOps {
       docs: DataFrame,
       historyDigests: DataFrame): Dataset[IncrDedupOut] = {
     import spark.implicits._
-    val init = historyDigests
-      .select(col("dup_key")).as[String]
-      .groupByKey(identity)
-      .mapValues(_ => true)
-    managed(docs)
+    val keyed = managed(docs)
       .select(
         col("doc_id").cast("long"),
         md5(to_binary(col("text"), lit("utf-8"))).as("dup_key"))
       .as[(Long, String)]
       .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(
-        (key: String, it: Iterator[(Long, String)], state: GroupState[Boolean]) => {
-          val known = state.exists
-          val out = it.toSeq.sortBy(_._1).zipWithIndex.map { case ((id, _), i) =>
-            IncrDedupOut(
-              id, key,
-              if (known) "exact_dup_history"
-              else if (i == 0) "kept"
-              else "exact_dup_delta")
-          }
-          if (!known) state.update(true)
-          out.iterator
-        })
+    admitOnce(keyed, Some(historyDigests.select(col("dup_key")).as[String])) { (key, it, known) =>
+      it.toSeq.sortBy(_._1).zipWithIndex.map { case ((id, _), i) =>
+        IncrDedupOut(
+          id, key,
+          if (known) "exact_dup_history"
+          else if (i == 0) "kept"
+          else "exact_dup_delta")
+      }.iterator
+    }
   }
 
   final case class ParaDedupOut(doc_id: Long, para_idx: Int, dup_key: String, kept: Int)
@@ -371,22 +386,10 @@ object StreamOps {
         md5(to_binary(col("para"), lit("utf-8"))).as("dup_key"))
       .as[(Long, Int, String)]
       .groupByKey(_._3)
-    val fn = (key: String, it: Iterator[(Long, Int, String)], state: GroupState[Boolean]) => {
-      val known = state.exists
-      val out = it.toSeq.sortBy(t => (t._1, t._2)).zipWithIndex.map {
-        case ((id, idx, _), i) =>
-          ParaDedupOut(id, idx, key, if (!known && i == 0) 1 else 0)
-      }
-      if (!known) state.update(true)
-      out.iterator
-    }
-    initialDigests match {
-      case Some(store) =>
-        val init = store.select(col("dup_key")).as[String]
-          .groupByKey(identity).mapValues(_ => true)
-        paras.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
-      case None =>
-        paras.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    admitOnce(paras, initialDigests.map(_.select(col("dup_key")).as[String])) { (key, it, known) =>
+      it.toSeq.sortBy(t => (t._1, t._2)).zipWithIndex.map { case ((id, idx, _), i) =>
+        ParaDedupOut(id, idx, key, if (!known && i == 0) 1 else 0)
+      }.iterator
     }
   }
 
@@ -429,30 +432,20 @@ object StreamOps {
     val occ = graft.ops.Dedup.windowOcc(managed(docs).select(col("doc_id").cast("long"), col("text")), k)
       .as[(Long, Int, Array[Byte])]
       .groupByKey(_._3)
-    val fn = (_: Array[Byte], it: Iterator[(Long, Int, Array[Byte])],
-              state: GroupState[Boolean]) => {
-      val known = state.exists
-      val out = it.toSeq.sortBy(t => (t._1, t._2)).zipWithIndex.map {
-        case ((id, strt, _), i) =>
-          DupSpanOut(id, strt, if (!known && i == 0) 0 else 1)
-      }
-      if (!known) state.update(true)
-      out.iterator
+    val store = initialDigests.map { store =>
+      // same loud store-format check as the batch flaggedWindows: a
+      // pre-round-8 hex-string store would silently preload state
+      // keys that never match the binary stream digests
+      require(store.schema("h").dataType == org.apache.spark.sql.types.BinaryType,
+        s"initialDigests.h must be BINARY (raw md5 bytes, the round-8 store " +
+          s"format); got ${store.schema("h").dataType} — re-derive the store " +
+          "with Dedup.windowDigests()")
+      store.select(col("h")).as[Array[Byte]]
     }
-    initialDigests match {
-      case Some(store) =>
-        // same loud store-format check as the batch flaggedWindows: a
-        // pre-round-8 hex-string store would silently preload state
-        // keys that never match the binary stream digests
-        require(store.schema("h").dataType == org.apache.spark.sql.types.BinaryType,
-          s"initialDigests.h must be BINARY (raw md5 bytes, the round-8 store " +
-            s"format); got ${store.schema("h").dataType} — re-derive the store " +
-            "with Dedup.windowDigests()")
-        val init = store.select(col("h")).as[Array[Byte]]
-          .groupByKey(identity).mapValues(_ => true)
-        occ.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
-      case None =>
-        occ.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    admitOnce(occ, store) { (_, it, known) =>
+      it.toSeq.sortBy(t => (t._1, t._2)).zipWithIndex.map { case ((id, strt, _), i) =>
+        DupSpanOut(id, strt, if (!known && i == 0) 0 else 1)
+      }.iterator
     }
   }
 

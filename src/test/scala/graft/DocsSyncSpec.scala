@@ -71,4 +71,29 @@ class DocsSyncSpec extends AnyFunSuite {
     assert(claimed("""sbt -batch test\s+# (\d+) specs""") == specs,
       s"README spec count != registered test count ($specs)")
   }
+
+  test("no scaladoc block in src/main is followed directly by another") {
+    // Scaladoc attaches only the LAST of two adjacent /** */ blocks to
+    // the definition below them, so the first one is silently dropped
+    def orphans(p: Path): Seq[String] = {
+      var inDoc = false
+      var closedAt = -1 // line of the last doc block's `*/`, while only blanks follow it
+      val found = Seq.newBuilder[String]
+      Files.readAllLines(p).asScala.map(_.trim).zipWithIndex.foreach { case (l, i) =>
+        if (inDoc) {
+          if (l.contains("*/")) { inDoc = false; closedAt = i + 1 }
+        } else if (l.startsWith("/**")) {
+          if (closedAt >= 0) found += s"$p:$closedAt"
+          inDoc = !l.drop(3).contains("*/")
+          closedAt = if (inDoc) -1 else i + 1
+        } else if (l.nonEmpty) closedAt = -1
+      }
+      found.result()
+    }
+    val walk = Files.walk(Paths.get("src", "main"))
+    val found =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap(orphans).toList
+      finally walk.close()
+    assert(found.isEmpty, s"doc blocks followed directly by another doc block: ${found.mkString(", ")}")
+  }
 }

@@ -9,6 +9,13 @@ object StreamOpsSpec {
   /** A docs-table row with its ingest-time sha, as a MemoryStream element. */
   final case class ShaDoc(repo: String, path: String, commit: String, lang: String,
       content: String, content_sha: String)
+
+  /** A stateful operator over a MemoryStream of `T`, fed two micro-batches. */
+  final case class RestartCase[T](
+      name: String,
+      op: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.Dataset[_],
+      batch1: Seq[T],
+      batch2: Seq[T])(implicit val enc: org.apache.spark.sql.Encoder[T])
 }
 
 class StreamOpsSpec extends AnyFunSuite {
@@ -765,6 +772,74 @@ class StreamOpsSpec extends AnyFunSuite {
     val ids = spark.read.parquet(outDir).select("vec_id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == Seq(1L, 3L),
       s"ring state must survive the restart (vec 2 suppressed), got ${ids.toSeq}")
+  }
+
+  /** Runs `c` three ways into parquet sinks: both batches through one
+    * query, both with the query stopped after batch 1 and restarted on
+    * its checkpoint, and batch 2 alone. The restarted run must equal the
+    * uninterrupted one, and batch 2 must depend on batch 1's state.
+    */
+  private def checkRestart[T](c: StreamOpsSpec.RestartCase[T]): Unit = {
+    implicit val enc: org.apache.spark.sql.Encoder[T] = c.enc
+    implicit val sqlCtx = spark.sqlContext
+    // the sink's rows, as sorted strings, after each batch
+    def run(batches: Seq[Seq[T]], restart: Boolean): Seq[Seq[String]] = {
+      val base = java.nio.file.Files.createTempDirectory("restart").toString
+      val (ckpt, outDir) = (s"$base/checkpoint", s"$base/out")
+      val mem = MemoryStream[T]
+      def start() = c.op(mem.toDS())
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).option("path", outDir)
+        .outputMode("append").start()
+      val q = if (restart) None else Some(start())
+      try batches.map { b =>
+        mem.addData(b)
+        val run = q.getOrElse(start())
+        run.processAllAvailable()
+        if (restart) run.stop()
+        spark.read.parquet(outDir).collect().map(_.toString).sorted.toSeq
+      }
+      finally q.foreach(_.stop())
+    }
+    val uninterrupted = run(Seq(c.batch1, c.batch2), restart = false)
+    val restarted = run(Seq(c.batch1, c.batch2), restart = true)
+    assert(restarted == uninterrupted, s"${c.name}: a restart changed the output")
+    val batch2 = uninterrupted(1).diff(uninterrupted(0))
+    val fresh = run(Seq(c.batch2), restart = false).last
+    assert(batch2.nonEmpty && batch2 != fresh,
+      s"${c.name}: batch 2 must depend on batch 1's state ($batch2 vs fresh $fresh)")
+  }
+
+  test("ivf, incremental, paragraph and span dedup state recovers from checkpoint across a query restart") {
+    import spark.implicits._
+    import StreamOpsSpec.RestartCase
+    def basis(i: Int, eps: Float = 0f): Seq[Float] =
+      Seq.tabulate(8)(d => if (d == i) 1f else if (d == (i + 1) % 8) eps else 0f)
+    def docs(ds: org.apache.spark.sql.Dataset[(Long, String)]) = ds.toDF("doc_id", "text")
+    val store = Seq((100L, "old news\n\nbanner"), (101L, "a b c")).toDF("doc_id", "text")
+    // in every case batch 2 repeats something batch 1 admitted, so a
+    // restart that lost the state would emit a different batch 2
+    val cases = Seq[RestartCase[_]](
+      RestartCase[StreamOps.EmbRow]("ivfDedupStream",
+        ds => StreamOps.ivfDedupStream(spark, ds, Seq((0, basis(0)), (1, basis(2))),
+          threshold = 0.999, historyVecs = Some(Seq((100L, basis(0, 0.001f))).toDF("vec_id", "embedding"))),
+        Seq(StreamOps.EmbRow(1L, basis(2, 0.001f)), StreamOps.EmbRow(2L, basis(0, 0.002f))),
+        Seq(StreamOps.EmbRow(3L, basis(2, 0.002f)), StreamOps.EmbRow(4L, basis(4)))),
+      RestartCase[(Long, String)]("incrementalDedupStream",
+        ds => StreamOps.incrementalDedupStream(spark, docs(ds), graft.ops.Dedup.digests(store)),
+        Seq((1L, "fresh"), (2L, "a b c")),
+        Seq((3L, "fresh"), (4L, "newer"))),
+      RestartCase[(Long, String)]("paragraphDedupStream",
+        ds => StreamOps.paragraphDedupStream(spark, docs(ds),
+          initialDigests = Some(graft.ops.Dedup.paragraphDigests(store))),
+        Seq((1L, "banner\n\nfresh")),
+        Seq((2L, "fresh\n\nnewer"))),
+      RestartCase[(Long, String)]("dupSpansStream",
+        ds => StreamOps.dupSpansStream(spark, docs(ds), 2,
+          initialDigests = Some(graft.ops.Dedup.windowDigests(store, 2))),
+        Seq((1L, "x y a b")),
+        Seq((2L, "x y z"))))
+    cases.foreach(c => checkRestart(c))
   }
 
   test("kg stream e2e: file source -> scoreStream -> resumable sink, mid-stream kill + recovery") {
